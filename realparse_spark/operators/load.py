@@ -25,6 +25,8 @@ the watermark, replacing `LOCK TABLES`).
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
+from contextlib import ExitStack
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -35,10 +37,17 @@ from realparse_spark.operators.parse import (
     parse_style5,
     parse_weblog,
 )
-from realparse_spark.fs import LOCAL, WarehouseFS
+from realparse_spark.fs import LOCAL
 from realparse_spark.sources.logs import read_log_lines, read_server_config
 
 ACCESS_TABLES = ("access", "file", "client", "network", "stats_mask1", "stats_mask2", "stats_mask3")
+WEB_TABLES = ACCESS_TABLES[:3]  # web_parse.pl writes no network/stats rows
+
+# A family's child table: (name, rows, one_per_line).  A one_per_line table
+# holds exactly one row per keyed line, so its insert count is the keyed
+# count and costs no Spark job.
+Child = tuple[str, DataFrame, bool]
+Persist = Callable[[DataFrame], DataFrame]
 
 # real_parse.pl:43 locks a `components` table that is never written — a
 # declared-but-unimplemented placeholder for stream components (the unused
@@ -47,9 +56,9 @@ ACCESS_TABLES = ("access", "file", "client", "network", "stats_mask1", "stats_ma
 COMPONENTS_SCHEMA = "component_id long, access_id long, component string"
 
 
-def _ensure_components(spark: SparkSession, warehouse: str, fs: WarehouseFS = LOCAL) -> None:
+def _ensure_components(spark: SparkSession, warehouse: str) -> None:
     p = os.path.join(warehouse, "components")
-    if not fs.exists(p):
+    if not LOCAL.exists(p):
         spark.createDataFrame([], COMPONENTS_SCHEMA).write.mode("overwrite").parquet(p)
 
 
@@ -65,9 +74,7 @@ def read_warehouse_table(spark: SparkSession, warehouse: str, name: str) -> Data
         return None
 
 
-def _family_watermark(
-    spark: SparkSession, warehouse: str, real_family: bool, fs: WarehouseFS = LOCAL
-) -> int | None:
+def _family_watermark(spark: SparkSession, warehouse: str, server_type: int) -> int | None:
     """F1/F2 — max loaded epoch for one source family (real_parse.pl:47 vs
     web_parse.pl:42; the logging_style NULLness discriminator maps 1:1 to
     the server_type partition value, 1=real / 0=web).
@@ -78,23 +85,13 @@ def _family_watermark(
     ONE partition directory, not a full-family scan (at 100 TB a cron-run
     watermark fetch must not scan years of history).  Crash-safe by
     construction: derived from the data itself, no sidecar to desync."""
-    server_type = 1 if real_family else 0
     stdir = os.path.join(_table_path(warehouse, "access"), f"server_type={server_type}")
-    if not fs.is_dir(stdir):
+    if not LOCAL.is_dir(stdir):
         return None
-    entries = [e for e in fs.list_dir(stdir) if not e.startswith(("_", "."))]
-    dates = sorted(e.split("=", 1)[1] for e in entries if e.startswith("access_date="))
+    dates = sorted(
+        e.split("=", 1)[1] for e in LOCAL.list_dir(stdir) if e.startswith("access_date=")
+    )
     if not dates:
-        if entries:
-            # Legacy layout: a warehouse written before the (server_type,
-            # access_date) two-level partitioning has data files directly
-            # under server_type=N.  Silently returning None here would lose
-            # the watermark and re-load every already-loaded line as a
-            # duplicate — fall back to the full-family scan instead (the
-            # pre-partition-pruning behavior: correct, just not one-dir cheap).
-            legacy = spark.read.parquet(stdir)
-            row = legacy.agg(F.max(F.unix_timestamp("datetime")).alias("wm")).collect()[0]
-            return row.wm
         return None
     latest = spark.read.parquet(os.path.join(stdir, f"access_date={dates[-1]}"))
     row = latest.agg(F.max(F.unix_timestamp("datetime")).alias("wm")).collect()[0]
@@ -106,9 +103,7 @@ def _max_key_path(warehouse: str) -> str:
     return os.path.join(_table_path(warehouse, "access"), "_max_key")
 
 
-def _next_key_base(
-    spark: SparkSession | None, warehouse: str, fs: WarehouseFS = LOCAL
-) -> int:
+def _next_key_base(warehouse: str) -> int:
     """A2/J2 — the auto-increment base for this run's surrogate keys.
 
     Scale shape: the base comes from a one-line `_max_key` sidecar (a small
@@ -116,25 +111,17 @@ def _next_key_base(
     `max(access_id)` aggregate, which would be a full-table column scan per
     cron run — the exact anti-pattern the watermark fetch already avoids
     (`_family_watermark` reads one date directory).  The sidecar is written
-    as a RESERVATION before any append (`_reserve_key_range`), so a crash
-    mid-load leaves an unused id gap, never a collision — the same
+    as a RESERVATION before any access append (`_reserve_key_range`), so a
+    crash mid-load leaves an unused id gap, never a collision — the same
     observable semantics as MySQL auto-increment burning ids on rollback.
-
-    Legacy warehouses (written before the sidecar existed) fall back to the
-    full-table max ONCE; the next run's reservation upgrades them."""
+    No sidecar therefore means no access row has been written yet."""
     p = _max_key_path(warehouse)
-    if fs.exists(p):
-        return int(fs.read_text(p).strip()) + 1
-    if spark is None:
-        return 0
-    access = read_warehouse_table(spark, warehouse, "access")
-    if access is None:
-        return 0
-    row = access.agg(F.max("access_id").alias("m")).collect()[0]
-    return (row.m or 0) + 1
+    if LOCAL.exists(p):
+        return int(LOCAL.read_text(p).strip()) + 1
+    return 0
 
 
-def _reserve_key_range(keyed: DataFrame, warehouse: str, fs: WarehouseFS = LOCAL) -> None:
+def _reserve_key_range(keyed: DataFrame, warehouse: str) -> None:
     """Commit this run's max surrogate key BEFORE the table appends.
 
     The max is an aggregate over the run's cached rows only (never a table
@@ -143,10 +130,161 @@ def _reserve_key_range(keyed: DataFrame, warehouse: str, fs: WarehouseFS = LOCAL
     hi = keyed.agg(F.max("access_id").alias("m")).collect()[0].m
     if hi is None:
         return
-    fs.makedirs(_table_path(warehouse, "access"))
+    LOCAL.makedirs(_table_path(warehouse, "access"))
     p = _max_key_path(warehouse)
-    fs.write_text(p + ".tmp", str(int(hi)))
-    fs.rename(p + ".tmp", p)
+    LOCAL.write_text(p + ".tmp", str(int(hi)))
+    LOCAL.rename(p + ".tmp", p)
+
+
+def _load_cycle(
+    spark: SparkSession,
+    log_dir: str,
+    warehouse: str,
+    latest: int | None,
+    prefix: str,
+    *,
+    parse: Callable[..., DataFrame],
+    server_type: int,
+    logging_style: int | None,
+    stats_mask: int | None,
+    tables: tuple[str, ...],
+    children: Callable[[DataFrame, Persist], list[Child]],
+) -> dict[str, int]:
+    """One cron cycle for one log family; real_parse.pl and web_parse.pl
+    share this loop shape.  The family supplies its parser, the literals of
+    its access rows, the names of all its `tables` (access first) and
+    `children`, which projects the keyed lines onto the other tables and may
+    `persist` an intermediate for the cycle to release.  Returns per-table
+    insert counts plus the quarantined-line count."""
+    with ExitStack() as held:
+
+        def persist(df: DataFrame) -> DataFrame:
+            df = df.persist()
+            held.callback(df.unpersist)
+            return df
+
+        # Persist the parsed corpus BEFORE the quarantine split: the quarantine
+        # count, the quarantine write, and the keyed main pipeline all branch
+        # off this one DF — without the cache each branch would re-scan and
+        # re-regex the raw text (~3 full parse passes at 100 TB).
+        parsed = persist(parse(read_log_lines(spark, log_dir, prefix, latest), line_col="value"))
+
+        # Quarantine: a line whose timestamp failed to parse (epoch NULL)
+        # cannot pass any watermark and would silently vanish; at 100 TB
+        # malformed lines are a certainty, so they are preserved for triage
+        # instead of dropped (ANSI-off yields NULLs, not job aborts).
+        bad = parsed.filter(F.col("epoch").isNull()).select("value", "source_file")
+        n_bad = bad.count()  # materializes the parse cache: the only full parse
+        if n_bad:
+            _append(bad, warehouse, "quarantine")
+        good = parsed.filter(F.col("epoch").isNotNull())
+
+        wm = _family_watermark(spark, warehouse, server_type)
+        if wm is not None:
+            good = good.filter(F.col("epoch") > F.lit(wm))  # F1 strict '>'
+
+        base = _next_key_base(warehouse)
+        # J2: one deterministic-enough surrogate per line, derived without any
+        # read-back; monotonically_increasing_id is unique per run, the base
+        # offset keeps runs disjoint (sparse like auto-increment with gaps).
+        keyed = persist(good.withColumn(
+            "access_id", F.lit(base) + F.monotonically_increasing_id()
+        ))
+        n = keyed.count()
+        counts = dict.fromkeys(tables, 0) | {"quarantine": n_bad}
+        if n == 0:
+            return counts
+        _reserve_key_range(keyed, warehouse)
+
+        access = keyed.select(
+            "access_id", "client_ip_address", "identuser", "authuser",
+            F.to_timestamp("datetime").alias("datetime"), "gmt_offset",
+            F.lit(logging_style).cast("int").alias("logging_style"),
+            F.lit(stats_mask).cast("int").alias("stats_mask"),
+            F.lit(server_type).cast("int").alias("server_type"),
+            F.to_date(F.to_timestamp("datetime")).alias("access_date"),
+        )
+        _append(access, warehouse, "access")
+        counts["access"] = n
+        for name, rows, one_per_line in children(keyed, persist):
+            _append(rows, warehouse, name)
+            counts[name] = n if one_per_line else rows.count()
+        return counts
+
+
+def _style5_children(keyed: DataFrame, persist: Persist) -> list[Child]:
+    file_df = keyed.select(
+        F.col("access_id").alias("file_id"),  # 1:1 with access -> same key
+        "method", "path", "name", "protocol_version", "status_code",
+        "bytes_sent", "file_size", "file_time", "sent_time",
+        F.lit(None).cast("timestamp").alias("start_time"),  # real_parse.pl:145
+        "presentation_id", "access_id",
+    )
+    client = parse_client_info(
+        keyed.select("access_id", "client_info", "client_GUID")
+    ).select(
+        F.col("access_id").alias("client_id"),
+        "client_info", "platform", "os_version", "client_version", "type",
+        "distribution", "language", "cpu", "embedded", "client_GUID",
+        "access_id",
+    )
+    network = keyed.select(
+        F.col("access_id").alias("network_id"),
+        "resends", "failed_resends",
+        F.lit(None).cast("string").alias("server_address"),  # real_parse.pl:173-175
+        F.lit(None).cast("long").alias("packets_sent"),
+        F.lit(None).cast("double").alias("average_bitrate"),
+        "access_id",
+        F.col("access_id").alias("file_id"),
+    )
+    # parse_style5 already materialized _brackets on keyed — no second
+    # regex pass over the line corpus
+    stats = persist(explode_stats_masks(keyed, key_cols=("access_id",)))
+    s1 = stats.filter(F.col("stat_type") == 1).select(
+        F.col("access_id").alias("id"),
+        "packets_received", "out_of_order", "missing", "early", "late",
+        "audio_format", "access_id", F.col("access_id").alias("file_id"),
+    )
+    s2 = stats.filter(F.col("stat_type") == 2).select(
+        F.col("access_id").alias("id"),
+        "bandwidth", "available", "highest", "lowest", "average",
+        "requested", "received", F.col("s2_late").alias("late"),
+        "rebuffering", "transport", "startup", "audio_format",
+        "access_id", F.col("access_id").alias("file_id"),
+    )
+    s3 = stats.filter(F.col("stat_type") == 3).select(
+        F.col("access_id").alias("id"),
+        F.col("raw_stat"),
+        "access_id", F.col("access_id").alias("file_id"),
+    )
+    return [
+        ("file", file_df, True), ("client", client, True), ("network", network, True),
+        ("stats_mask1", s1, False), ("stats_mask2", s2, False), ("stats_mask3", s3, False),
+    ]
+
+
+def _web_children(keyed: DataFrame, _persist: Persist) -> list[Child]:
+    file_df = keyed.select(
+        F.col("access_id").alias("file_id"),
+        "method", "path", "name", "protocol_version", "status_code",
+        "bytes_sent",
+        F.lit(None).cast("long").alias("file_size"),  # web rows: NULLs
+        F.lit(None).cast("int").alias("file_time"),
+        F.lit(None).cast("int").alias("sent_time"),
+        F.lit(None).cast("timestamp").alias("start_time"),
+        F.lit(None).cast("int").alias("presentation_id"),
+        "access_id",
+    )
+    client = keyed.select(
+        F.col("access_id").alias("client_id"),
+        F.col("user_agent").alias("client_info"),  # web_parse.pl:129
+        *[F.lit(None).cast("string").alias(c) for c in (
+            "platform", "os_version", "client_version", "type",
+            "distribution", "language", "cpu", "embedded", "client_GUID",
+        )],
+        "access_id",
+    )
+    return [("file", file_df, True), ("client", client, True)]
 
 
 def load_style5(
@@ -163,124 +301,14 @@ def load_style5(
         logging_style, stats_mask = read_server_config(config_path)
         if logging_style != 5:  # F3 gate (real_parse.pl:58,186-188)
             return {}
-
-    lines = read_log_lines(spark, log_dir, prefix, latest)
-    # Persist the parsed corpus BEFORE the quarantine split: the quarantine
-    # count, the quarantine write, and the keyed main pipeline all branch
-    # off this one DF — without the cache each branch would re-scan and
-    # re-regex the raw text (~3 full parse passes at 100 TB).
-    parsed = parse_style5(lines, line_col="value").persist()
-    keyed = None
-    try:
-        # Quarantine: a line whose timestamp failed to parse (epoch NULL)
-        # cannot pass any watermark and would silently vanish; at 100 TB
-        # malformed lines are a certainty, so they are preserved for triage
-        # instead of dropped (ANSI-off yields NULLs, not job aborts).
-        bad = parsed.filter(F.col("epoch").isNull()).select("value", "source_file")
-        n_bad = bad.count()  # materializes the parse cache: the only full parse
-        if n_bad:
-            _append(bad, warehouse, "quarantine")
-        good = parsed.filter(F.col("epoch").isNotNull())
-
-        wm = _family_watermark(spark, warehouse, real_family=True)
-        if wm is not None:
-            good = good.filter(F.col("epoch") > F.lit(wm))  # F1 strict '>'
-
-        base = _next_key_base(spark, warehouse)
-        # J2: one deterministic-enough surrogate per line, derived without any
-        # read-back; monotonically_increasing_id is unique per run, the base
-        # offset keeps runs disjoint (sparse like auto-increment with gaps).
-        keyed = good.withColumn(
-            "access_id", F.lit(base) + F.monotonically_increasing_id()
-        ).persist()
-        _ensure_components(spark, warehouse)
-        n = keyed.count()
-        if n == 0:
-            return {t: 0 for t in ACCESS_TABLES} | {"quarantine": n_bad}
-        _reserve_key_range(keyed, warehouse)
-
-        counts: dict[str, int] = {"quarantine": n_bad}
-
-        access = keyed.select(
-            "access_id", "client_ip_address", "identuser", "authuser",
-            F.to_timestamp("datetime").alias("datetime"), "gmt_offset",
-            F.lit(logging_style).cast("int").alias("logging_style"),
-            F.lit(stats_mask).cast("int").alias("stats_mask"),
-            F.lit(1).cast("int").alias("server_type"),  # real_parse.pl:16
-            F.to_date(F.to_timestamp("datetime")).alias("access_date"),
-        )
-        _append(access, warehouse, "access")
-        counts["access"] = n
-
-        file_df = keyed.select(
-            F.col("access_id").alias("file_id"),  # 1:1 with access -> same key
-            "method", "path", "name", "protocol_version", "status_code",
-            "bytes_sent", "file_size", "file_time", "sent_time",
-            F.lit(None).cast("timestamp").alias("start_time"),  # real_parse.pl:145
-            "presentation_id", "access_id",
-        )
-        _append(file_df, warehouse, "file")
-        counts["file"] = n
-
-        client = parse_client_info(
-            keyed.select("access_id", "client_info", "client_GUID")
-        ).select(
-            F.col("access_id").alias("client_id"),
-            "client_info", "platform", "os_version", "client_version", "type",
-            "distribution", "language", "cpu", "embedded", "client_GUID",
-            "access_id",
-        )
-        _append(client, warehouse, "client")
-        counts["client"] = n
-
-        network = keyed.select(
-            F.col("access_id").alias("network_id"),
-            "resends", "failed_resends",
-            F.lit(None).cast("string").alias("server_address"),  # real_parse.pl:173-175
-            F.lit(None).cast("long").alias("packets_sent"),
-            F.lit(None).cast("double").alias("average_bitrate"),
-            "access_id",
-            F.col("access_id").alias("file_id"),
-        )
-        _append(network, warehouse, "network")
-        counts["network"] = n
-
-        # parse_style5 already materialized _brackets on keyed — no second
-        # regex pass over the line corpus
-        stats = explode_stats_masks(keyed, key_cols=("access_id",)).persist()
-        try:
-            s1 = stats.filter(F.col("stat_type") == 1).select(
-                F.col("access_id").alias("id"),
-                "packets_received", "out_of_order", "missing", "early", "late",
-                "audio_format", "access_id", F.col("access_id").alias("file_id"),
-            )
-            _append(s1, warehouse, "stats_mask1")
-            counts["stats_mask1"] = s1.count()
-
-            s2 = stats.filter(F.col("stat_type") == 2).select(
-                F.col("access_id").alias("id"),
-                "bandwidth", "available", "highest", "lowest", "average",
-                "requested", "received", F.col("s2_late").alias("late"),
-                "rebuffering", "transport", "startup", "audio_format",
-                "access_id", F.col("access_id").alias("file_id"),
-            )
-            _append(s2, warehouse, "stats_mask2")
-            counts["stats_mask2"] = s2.count()
-
-            s3 = stats.filter(F.col("stat_type") == 3).select(
-                F.col("access_id").alias("id"),
-                F.col("raw_stat"),
-                "access_id", F.col("access_id").alias("file_id"),
-            )
-            _append(s3, warehouse, "stats_mask3")
-            counts["stats_mask3"] = s3.count()
-        finally:
-            stats.unpersist()
-        return counts
-    finally:
-        if keyed is not None:
-            keyed.unpersist()
-        parsed.unpersist()
+    _ensure_components(spark, warehouse)
+    return _load_cycle(
+        spark, log_dir, warehouse, latest, prefix,
+        parse=parse_style5,
+        server_type=1,  # real_parse.pl:16
+        logging_style=logging_style, stats_mask=stats_mask,
+        tables=ACCESS_TABLES, children=_style5_children,
+    )
 
 
 def load_weblog(
@@ -293,69 +321,13 @@ def load_weblog(
     """Secondary ETL (web_parse.pl end-to-end): combined-format lines
     filtered to .wma/.wmv, NULL logging_style/stats_mask, server_type=0,
     access+file+client only (no network/stats rows)."""
-    lines = read_log_lines(spark, log_dir, prefix, latest)
-    # Same single-scan shape as load_style5: one persisted parse feeds the
-    # quarantine count/write and the keyed pipeline.
-    parsed = parse_weblog(lines, line_col="value").persist()
-    keyed = None
-    try:
-        bad = parsed.filter(F.col("epoch").isNull()).select("value", "source_file")
-        n_bad = bad.count()
-        if n_bad:
-            _append(bad, warehouse, "quarantine")
-        good = parsed.filter(F.col("epoch").isNotNull())
-
-        wm = _family_watermark(spark, warehouse, real_family=False)
-        if wm is not None:
-            good = good.filter(F.col("epoch") > F.lit(wm))
-
-        base = _next_key_base(spark, warehouse)
-        keyed = good.withColumn(
-            "access_id", F.lit(base) + F.monotonically_increasing_id()
-        ).persist()
-        n = keyed.count()
-        if n == 0:
-            return {t: 0 for t in ("access", "file", "client")} | {"quarantine": n_bad}
-        _reserve_key_range(keyed, warehouse)
-
-        access = keyed.select(
-            "access_id", "client_ip_address", "identuser", "authuser",
-            F.to_timestamp("datetime").alias("datetime"), "gmt_offset",
-            F.lit(None).cast("int").alias("logging_style"),  # web_parse.pl:87
-            F.lit(None).cast("int").alias("stats_mask"),
-            F.lit(0).cast("int").alias("server_type"),  # web_parse.pl:15
-            F.to_date(F.to_timestamp("datetime")).alias("access_date"),
-        )
-        _append(access, warehouse, "access")
-
-        file_df = keyed.select(
-            F.col("access_id").alias("file_id"),
-            "method", "path", "name", "protocol_version", "status_code",
-            "bytes_sent",
-            F.lit(None).cast("long").alias("file_size"),  # web rows: NULLs
-            F.lit(None).cast("int").alias("file_time"),
-            F.lit(None).cast("int").alias("sent_time"),
-            F.lit(None).cast("timestamp").alias("start_time"),
-            F.lit(None).cast("int").alias("presentation_id"),
-            "access_id",
-        )
-        _append(file_df, warehouse, "file")
-
-        client = keyed.select(
-            F.col("access_id").alias("client_id"),
-            F.col("user_agent").alias("client_info"),  # web_parse.pl:129
-            *[F.lit(None).cast("string").alias(c) for c in (
-                "platform", "os_version", "client_version", "type",
-                "distribution", "language", "cpu", "embedded", "client_GUID",
-            )],
-            "access_id",
-        )
-        _append(client, warehouse, "client")
-        return {"access": n, "file": n, "client": n, "quarantine": n_bad}
-    finally:
-        if keyed is not None:
-            keyed.unpersist()
-        parsed.unpersist()
+    return _load_cycle(
+        spark, log_dir, warehouse, latest, prefix,
+        parse=parse_weblog,
+        server_type=0,  # web_parse.pl:15
+        logging_style=None, stats_mask=None,  # web_parse.pl:87
+        tables=WEB_TABLES, children=_web_children,
+    )
 
 
 def _append(df: DataFrame, warehouse: str, name: str) -> None:

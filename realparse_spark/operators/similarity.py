@@ -392,7 +392,12 @@ def lsh_probe_batch(
     Dedup of multi-chunk matches, the exact hamming filter, and the
     per-query top-k window (partitioned by query_id — a uniform key, no
     skew) complete the re-rank.  Per-query results are IDENTICAL to
-    `lsh_probe` at the same radius (parity test-pinned)."""
+    `lsh_probe` at the same radius (parity test-pinned).
+
+    `queries` must be deterministic: it is evaluated twice (once for the
+    probe keys, once to re-attach each query's embedding), so a source
+    that yields different rows per evaluation (an uncached sample or
+    limit) would silently drop or mispair candidates — cache it first."""
     if radius >= N_CHUNKS:
         raise ValueError(f"index supports radius <= {N_CHUNKS - 1}, got {radius}")
     planes = _hyperplanes()

@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
-from realparse_spark.fs import LOCAL, WarehouseFS
+from realparse_spark.fs import LOCAL
 
 _BUCKET = "__bucket"
 _META = "_upsert_meta.json"
@@ -43,15 +43,15 @@ def _bucket_expr(keys: list[str], n_buckets: int):
     return F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(n_buckets)).cast("int")
 
 
-def _read_meta(path: str, fs: WarehouseFS) -> dict | None:
+def _read_meta(path: str) -> dict | None:
     p = os.path.join(path, _META)
-    if fs.exists(p):
-        return json.loads(fs.read_text(p))
+    if LOCAL.exists(p):
+        return json.loads(LOCAL.read_text(p))
     return None
 
 
-def _write_meta(path: str, n_buckets: int, keys: list[str], fs: WarehouseFS) -> None:
-    fs.write_text(os.path.join(path, _META), json.dumps({"n_buckets": n_buckets, "keys": keys}))
+def _write_meta(path: str, n_buckets: int, keys: list[str]) -> None:
+    LOCAL.write_text(os.path.join(path, _META), json.dumps({"n_buckets": n_buckets, "keys": keys}))
 
 
 def upsert_parquet(
@@ -61,7 +61,6 @@ def upsert_parquet(
     keys: list[str],
     order_col: str | None = None,
     n_buckets: int = 32,
-    fs: WarehouseFS = LOCAL,
 ) -> int:
     """Insert-or-replace by `keys`; when both sides carry a key, the row
     with the greatest `order_col` wins (new side wins ties/absence).
@@ -70,44 +69,40 @@ def upsert_parquet(
     The stored layout is partitioned by a key-hash bucket; `n_buckets` is
     fixed at table creation (recorded in a sidecar — later calls use the
     recorded value, because re-bucketing would silently split a key across
-    buckets and break the merge)."""
-    meta = _read_meta(path, fs)
+    buckets and break the merge).  An existing `path` without the sidecar
+    was not written by this function and is refused with a ValueError."""
+    meta = _read_meta(path)
     if meta is not None:
         if meta["keys"] != keys:
             raise ValueError(f"table at {path} was bucketed on keys {meta['keys']}, got {keys}")
         n_buckets = int(meta["n_buckets"])
+    elif LOCAL.exists(path):
+        raise ValueError(f"{path} is not a bucketed upsert table: it has no {_META}")
 
     data_cols = new_df.columns
     newb = new_df.withColumn(_BUCKET, _bucket_expr(keys, n_buckets))
+    staging = path.rstrip("/") + ".__staging__"
+    LOCAL.rmtree(staging)
 
-    if meta is None and not fs.exists(path):
-        newb.write.mode("overwrite").partitionBy(_BUCKET).parquet(path)
-        _write_meta(path, n_buckets, keys, fs)
+    if meta is None:
+        # create in staging and rename in with its sidecar, so a crash
+        # never leaves a table at `path` that later calls would refuse
+        newb.write.mode("overwrite").partitionBy(_BUCKET).parquet(staging)
+        _write_meta(staging, n_buckets, keys)
+        LOCAL.rename(staging, path)
         return spark.read.parquet(path).count()
 
-    # pre-bucketing table (no sidecar): one-time full-merge migration into
-    # the bucketed layout — the O(table) cost is paid once, not per batch
-    legacy = meta is None
-
-    if legacy:
-        touched = None
-        existing = (
-            spark.read.parquet(path)
-            .select(*data_cols)
-            .withColumn(_BUCKET, _bucket_expr(keys, n_buckets))
-        )
-    else:
-        # buckets present in this batch: tiny distinct collect (<= n_buckets)
-        touched = sorted(
-            r[_BUCKET] for r in newb.select(_BUCKET).distinct().collect()
-        )
-        if not touched:
-            return spark.read.parquet(path).count()
-        existing = (
-            spark.read.parquet(path)
-            .filter(F.col(_BUCKET).isin(touched))  # partition pruning: O(batch) read
-            .select(*data_cols, F.col(_BUCKET).cast("int").alias(_BUCKET))
-        )
+    # buckets present in this batch: tiny distinct collect (<= n_buckets)
+    touched = sorted(
+        r[_BUCKET] for r in newb.select(_BUCKET).distinct().collect()
+    )
+    if not touched:
+        return spark.read.parquet(path).count()
+    existing = (
+        spark.read.parquet(path)
+        .filter(F.col(_BUCKET).isin(touched))  # partition pruning: O(batch) read
+        .select(*data_cols, F.col(_BUCKET).cast("int").alias(_BUCKET))
+    )
     tagged_new = newb.withColumn("_src", F.lit(1))
     tagged_old = existing.withColumn("_src", F.lit(0))
     unioned = tagged_new.unionByName(tagged_old)
@@ -119,86 +114,19 @@ def upsert_parquet(
         .filter(F.col("_rn") == 1)
         .drop("_rn", "_src")
     )
-
-    staging = path.rstrip("/") + ".__staging__"
-    fs.rmtree(staging)
     merged.write.mode("overwrite").partitionBy(_BUCKET).parquet(staging)
 
+    # swap ONLY the touched bucket dirs; untouched dirs stay byte-identical
     backup = path.rstrip("/") + ".__old__"
-    fs.rmtree(backup)
-    if legacy:
-        # whole-directory swap into the new layout
-        fs.rename(path, backup)
-        fs.rename(staging, path)
-        _write_meta(path, n_buckets, keys, fs)
-    else:
-        # swap ONLY the touched bucket dirs; untouched dirs stay byte-identical
-        fs.makedirs(backup)
-        for b in touched:
-            src = os.path.join(staging, f"{_BUCKET}={b}")
-            dst = os.path.join(path, f"{_BUCKET}={b}")
-            if fs.exists(dst):
-                fs.rename(dst, os.path.join(backup, f"{_BUCKET}={b}"))
-            if fs.exists(src):  # merged always has the batch's rows
-                fs.rename(src, dst)
-        fs.rmtree(staging)
-    fs.rmtree(backup)
+    LOCAL.rmtree(backup)
+    LOCAL.makedirs(backup)
+    for b in touched:
+        src = os.path.join(staging, f"{_BUCKET}={b}")
+        dst = os.path.join(path, f"{_BUCKET}={b}")
+        if LOCAL.exists(dst):
+            LOCAL.rename(dst, os.path.join(backup, f"{_BUCKET}={b}"))
+        if LOCAL.exists(src):  # merged always has the batch's rows
+            LOCAL.rename(src, dst)
+    LOCAL.rmtree(staging)
+    LOCAL.rmtree(backup)
     return spark.read.parquet(path).count()
-
-
-class MergeBackend:
-    """MERGE seam (SCALE.md §Maintenance): same contract as a table
-    format's ``MERGE INTO`` — insert-or-replace by `keys`, greatest
-    `order_col` wins, new side wins ties.  A Delta/Iceberg deployment
-    implements this with one SQL statement; the default backend is the
-    dependency-free bucketed-parquet implementation above."""
-
-    def merge(
-        self,
-        spark: SparkSession,
-        new_df: DataFrame,
-        table: str,
-        keys: list[str],
-        order_col: str | None = None,
-    ) -> int:
-        raise NotImplementedError(
-            f"{type(self).__name__} does not implement merge(); use the "
-            "'parquet' backend (BucketedParquetMerge) or subclass "
-            "MergeBackend over your table format's MERGE INTO"
-        )
-
-
-def merge_backend(name: str = "parquet", **kwargs) -> "MergeBackend":
-    """Resolve a MERGE backend by name.
-
-    Only the dependency-free ``parquet`` backend ships in this repo; a
-    Delta/Iceberg deployment registers its own ``MergeBackend`` subclass
-    (one ``MERGE INTO`` statement) and is deliberately not stubbed here —
-    those runtimes aren't in this container.
-    """
-    if name == "parquet":
-        return BucketedParquetMerge(**kwargs)
-    raise NotImplementedError(
-        f"merge backend {name!r} not implemented; use 'parquet' "
-        "(BucketedParquetMerge) or provide a MergeBackend subclass "
-        "backed by your table format's MERGE INTO"
-    )
-
-
-class BucketedParquetMerge(MergeBackend):
-    def __init__(self, n_buckets: int = 32, fs: WarehouseFS = LOCAL) -> None:
-        self.n_buckets = n_buckets
-        self.fs = fs
-
-    def merge(
-        self,
-        spark: SparkSession,
-        new_df: DataFrame,
-        table: str,
-        keys: list[str],
-        order_col: str | None = None,
-    ) -> int:
-        return upsert_parquet(
-            spark, new_df, table, keys, order_col,
-            n_buckets=self.n_buckets, fs=self.fs,
-        )

@@ -57,10 +57,11 @@ _MODULES = (
 #     registered INSIDE the window while slots are free: distinct_merge_exact
 #     (hash-verified twin of the HLL rollup) and audience_overlap_exact
 #     (twin of the theta-sketch set algebra).
-# (c) 2 re-verify slots for paths round 12 rewires: dedup_prefix_jaccard
-#     (Arrow pair-verify kernel) and sim_ann_lsh_batch (narrow candidate
-#     dedup) — both earned green rows in r11; a fresh driver row proves the
-#     optimization changed nothing.
+# (c) 2 re-verify slots: dedup_prefix_jaccard, whose inline pair verify
+#     is unchanged (round 12 measured an Arrow pair-verify kernel slower
+#     and reverted it), and sim_ann_lsh_batch (narrow candidate dedup,
+#     rewired in round 12) — both earned green rows in r11; a fresh
+#     verification row re-confirms each.
 # (d) 20 of the 38 r7-stale names (LLM-pipeline + graph families first,
 #     including the r11-touched emb_threshold_sweep and pagerank_parts so
 #     the norm-hoist / edges_unique changes earn driver rows).  The

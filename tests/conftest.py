@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+import signal
 import sys
 
 import pytest
@@ -40,12 +41,13 @@ def duck():
 # launched here at collection time it overlaps the several hundred other
 # tests (optimization guide §2.6 applied to the suite itself) and
 # test_all_queries_on_default_session merely joins it.  Only launched when
-# that test was actually collected (so `pytest tests/test_dedup.py` never
-# pays for it).
+# that test is still selected after -k/-m deselection (so
+# `pytest tests/test_dedup.py` or `-k 'not all_queries'` never pays for it).
 
 _VANILLA_PROC = {}
 
 
+@pytest.hookimpl(trylast=True)  # after pytest's own -k/-m deselection
 def pytest_collection_modifyitems(config, items):
     if any(i.name == "test_all_queries_on_default_session" for i in items):
         import subprocess
@@ -68,8 +70,24 @@ def pytest_collection_modifyitems(config, items):
             stderr=err,
             text=True,
             cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+            start_new_session=True,  # own process group: the JVM dies with it
         )
         _VANILLA_PROC.update(proc=proc, out=out, err=err)
+
+
+def pytest_sessionfinish(session, exitstatus):
+    """Kill a gate that nothing joined (the joining test failed to run, or
+    the session stopped early) and remove its temp logs."""
+    proc = _VANILLA_PROC.pop("proc", None)
+    if proc is None:
+        return
+    if proc.poll() is None:
+        os.killpg(proc.pid, signal.SIGKILL)
+        proc.wait()
+    for key in ("out", "err"):
+        fh = _VANILLA_PROC.pop(key)
+        fh.close()
+        os.unlink(fh.name)
 
 
 @pytest.fixture(scope="session")

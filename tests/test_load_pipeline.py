@@ -186,7 +186,7 @@ def test_watermark_reads_only_latest_date_partition(spark, tmp_path):
         )
 
     before = file_bytes_read()
-    wm = _family_watermark(spark, wh, real_family=True)
+    wm = _family_watermark(spark, wh, 1)
     delta = file_bytes_read() - before
     assert wm is not None
     # reading the big old partition would cost >= old_bytes
@@ -204,12 +204,7 @@ def test_key_base_sidecar_pruned_and_crash_safe(spark, log_dir, tmp_path, monkey
     L.load_style5(spark, log_dir, wh)
     access = read_warehouse_table(spark, wh, "access")
     hi = access.agg(F.max("access_id").alias("m")).collect()[0].m
-    # sidecar present -> base derivable with NO SparkSession at all: the
-    # strongest possible "no table scan" gate
-    assert L._next_key_base(None, wh) == hi + 1
-    # legacy warehouse (no sidecar): one-time full-scan fallback, same answer
-    os.remove(os.path.join(wh, "access", "_max_key"))
-    assert L._next_key_base(spark, wh) == hi + 1
+    assert L._next_key_base(wh) == hi + 1  # takes no SparkSession: no table scan
 
     # crash between reservation and append: ids are burned, never reused
     with open(os.path.join(log_dir, "rmaccess.log.20021015"), "w") as fh:
@@ -225,7 +220,7 @@ def test_key_base_sidecar_pruned_and_crash_safe(spark, log_dir, tmp_path, monkey
     with pytest.raises(RuntimeError):
         L.load_style5(spark, log_dir, wh)
     monkeypatch.undo()
-    assert L._next_key_base(None, wh) > hi  # reservation survived the crash
+    assert L._next_key_base(wh) > hi  # reservation survived the crash
 
     counts = L.load_style5(spark, log_dir, wh)
     assert counts["access"] == 1
@@ -297,25 +292,57 @@ def test_weblog_load(spark, tmp_path):
     assert counts2["access"] == 0
 
 
-def test_watermark_legacy_layout_fallback(spark, tmp_path):
-    """ADVICE fix: a warehouse written by the old layout (partitionBy
-    server_type only, no access_date= subdirs) must still yield its
-    watermark via the full-family scan — silently returning None would
-    re-load already-loaded lines as duplicates."""
+def test_watermark_empty_family_dir_is_none(spark, tmp_path):
+    """A family directory with no access_date partitions holds no loaded
+    line, so it reports no watermark."""
     from realparse_spark.operators.load import _family_watermark
 
-    wh = str(tmp_path / "wh_legacy")
-    legacy = spark.createDataFrame(
-        [("10.0.0.1", "2002-10-12 09:00:00"), ("10.0.0.2", "2002-10-13 09:03:38")],
-        "client_ip_address string, datetime string",
-    ).select("client_ip_address", F.to_timestamp("datetime").alias("datetime"))
-    legacy.write.parquet(os.path.join(wh, "access", "server_type=1"))
+    wh = str(tmp_path / "wh_empty")
+    os.makedirs(os.path.join(wh, "access", "server_type=1"))
+    assert _family_watermark(spark, wh, 1) is None
 
-    wm = _family_watermark(spark, wh, real_family=True)
-    expected = legacy.agg(F.max(F.unix_timestamp("datetime"))).collect()[0][0]
-    assert wm == expected
 
-    # an empty server_type dir (no data at all) still reports no watermark
-    wh2 = str(tmp_path / "wh_empty")
-    os.makedirs(os.path.join(wh2, "access", "server_type=1"))
-    assert _family_watermark(spark, wh2, real_family=True) is None
+def test_mixed_family_warehouse(spark, log_dir, tmp_path):
+    """style-5, then web, then style-5 again into ONE warehouse: the two
+    families share the surrogate-key sequence but keep separate watermarks
+    and their own server_type/logging_style/stats_mask literals."""
+    from realparse_spark.operators.load import _family_watermark
+
+    # one web line older than every style-5 line (it loads only if the web
+    # watermark ignores style-5 rows), one newer than all of them
+    with open(os.path.join(log_dir, "log.1"), "w") as fh:
+        fh.write(
+            '10.0.22.9 - - [12/Oct/2002:08:00:00 -0800] "GET /media/s/early.wmv HTTP/1.1" '
+            '200 524288 "-" "NSPlayer/9.0"\n'
+            '10.0.22.9 - - [20/Oct/2002:10:00:00 -0800] "GET /media/s/late.wma HTTP/1.1" '
+            '200 1000 "-" "NSPlayer/9.0"\n'
+        )
+    wh = str(tmp_path / "wh_mixed")
+
+    def access_ids() -> set[int]:
+        rows = read_warehouse_table(spark, wh, "access").select("access_id").collect()
+        return {r.access_id for r in rows}
+
+    assert load_style5(spark, log_dir, wh)["access"] == 3
+    real_ids = access_ids()
+    assert load_weblog(spark, log_dir, wh) == {"access": 2, "file": 2, "client": 2, "quarantine": 0}
+    web_ids = access_ids() - real_ids
+    assert len(web_ids) == 2  # disjoint from the style-5 keys
+    assert set(load_style5(spark, log_dir, wh).values()) == {0}
+    assert access_ids() == real_ids | web_ids
+
+    access = read_warehouse_table(spark, wh, "access")
+    web = access.filter(F.col("access_id").isin(list(web_ids))).collect()
+    assert {(r.server_type, r.logging_style, r.stats_mask) for r in web} == {(0, None, None)}
+    real = access.filter(F.col("access_id").isin(list(real_ids))).collect()
+    assert {(r.server_type, r.logging_style, r.stats_mask) for r in real} == {(1, 5, 7)}
+
+    family_max = {
+        r.server_type: r.wm
+        for r in access.groupBy("server_type")
+        .agg(F.max(F.unix_timestamp("datetime")).alias("wm"))
+        .collect()
+    }
+    assert family_max[1] < family_max[0]
+    assert _family_watermark(spark, wh, 1) == family_max[1]
+    assert _family_watermark(spark, wh, 0) == family_max[0]

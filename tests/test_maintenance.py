@@ -85,3 +85,27 @@ def test_compact_partitioned_splits_hot_partition(spark, tmp_path):
     # no straggler file anywhere near the whole-partition size
     assert max(os.path.getsize(f) for f in hot_files) < 0.6 * hot_bytes
     assert spark.read.parquet(path).count() == before_rows
+
+
+def test_compact_access_keeps_key_reservation(spark, tmp_path):
+    """Compacting the loader's access table (partition layout kept) carries
+    its `_max_key` reservation over, so the next load's surrogate keys stay
+    disjoint from the compacted rows."""
+    d = tmp_path / "clogs"
+    d.mkdir()
+    (d / "rmaccess.log.1").write_text(
+        "\n".join(
+            style5_line(f"10.0.0.{i}", f"12/Oct/2002:09:0{i}:00", f"/m/c{i}.rm") for i in range(3)
+        )
+        + "\n"
+    )
+    wh = str(tmp_path / "cwh")
+    load_style5(spark, str(d), wh)
+    access_path = os.path.join(wh, "access")
+    compact_table(spark, access_path, partition_by=["server_type", "access_date"])
+    assert os.path.exists(os.path.join(access_path, "_max_key"))
+
+    (d / "rmaccess.log.2").write_text(style5_line("10.0.0.9", "13/Oct/2002:09:00:00", "/m/n.rm") + "\n")
+    assert load_style5(spark, str(d), wh)["access"] == 1
+    ids = [r.access_id for r in read_warehouse_table(spark, wh, "access").select("access_id").collect()]
+    assert len(ids) == len(set(ids)) == 4

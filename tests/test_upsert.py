@@ -4,7 +4,9 @@ from __future__ import annotations
 
 import gzip
 import os
+import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from realparse_spark.operators.upsert import upsert_parquet
@@ -76,25 +78,20 @@ def test_upsert_rewrites_only_touched_buckets(spark, tmp_path):
     assert got[5] == ("v1", 2) and got[6] == ("v0", 1)
 
 
-def test_upsert_migrates_legacy_unbucketed_table(spark, tmp_path):
-    """A pre-bucketing table (plain parquet, no sidecar) is migrated into
-    the bucketed layout on the first merge — once — with latest-wins
-    semantics intact."""
-    path = str(tmp_path / "legacy")
+def test_upsert_refuses_unbucketed_table(spark, tmp_path):
+    """A plain parquet table (no `_upsert_meta.json` sidecar) was not
+    written by upsert_parquet; merging into it is refused with an error
+    naming the path, and the table is left untouched."""
+    path = str(tmp_path / "plain")
     spark.createDataFrame(
         [(1, "a", 10), (2, "b", 10)], "k long, v string, ver long"
     ).write.parquet(path)
+    before = _file_snapshot(path)
 
-    batch = spark.createDataFrame([(2, "b2", 20), (3, "c", 20)], "k long, v string, ver long")
-    assert upsert_parquet(spark, batch, path, ["k"], "ver", n_buckets=8) == 3
-    got = {r.k: r.v for r in spark.read.parquet(path).collect()}
-    assert got == {1: "a", 2: "b2", 3: "c"}
-    # second merge takes the pruned path (sidecar now present)
-    assert upsert_parquet(
-        spark, spark.createDataFrame([(1, "a2", 30)], "k long, v string, ver long"),
-        path, ["k"], "ver",
-    ) == 3
-    assert {r.v for r in spark.read.parquet(path).filter(F.col("k") == 1).collect()} == {"a2"}
+    batch = spark.createDataFrame([(2, "b2", 20)], "k long, v string, ver long")
+    with pytest.raises(ValueError, match=re.escape(f"{path} is not a bucketed upsert table")):
+        upsert_parquet(spark, batch, path, ["k"], "ver")
+    assert _file_snapshot(path) == before
 
 
 def test_gzip_log_ingestion(spark, tmp_path):
@@ -111,36 +108,3 @@ def test_gzip_log_ingestion(spark, tmp_path):
     counts = load_style5(spark, str(d), wh)
     assert counts["access"] == 1
     assert read_warehouse_table(spark, wh, "file").collect()[0].name == "zipped.rm"
-
-
-def test_merge_backend_seam(spark, tmp_path):
-    """BucketedParquetMerge implements the MergeBackend contract over the
-    same bucketed-parquet upsert (SCALE.md §Maintenance seam)."""
-    from realparse_spark.operators.upsert import BucketedParquetMerge
-
-    path = str(tmp_path / "seam")
-    be = BucketedParquetMerge(n_buckets=4)
-    df1 = spark.createDataFrame([(1, "a", 10), (2, "b", 10)], "k long, v string, ver long")
-    assert be.merge(spark, df1, path, keys=["k"], order_col="ver") == 2
-    df2 = spark.createDataFrame([(2, "B", 20), (3, "c", 20)], "k long, v string, ver long")
-    assert be.merge(spark, df2, path, keys=["k"], order_col="ver") == 3
-    got = {(r.k, r.v) for r in spark.read.parquet(path).collect()}
-    assert got == {(1, "a"), (2, "B"), (3, "c")}
-
-
-def test_merge_backend_unknown_name_raises_with_message():
-    """Requesting a backend this repo doesn't ship must fail loudly and
-    point at the parquet backend (round-7 verdict residual nit)."""
-    import pytest
-
-    from realparse_spark.operators.upsert import (
-        MergeBackend,
-        BucketedParquetMerge,
-        merge_backend,
-    )
-
-    assert isinstance(merge_backend("parquet", n_buckets=4), BucketedParquetMerge)
-    with pytest.raises(NotImplementedError, match=r"'delta' not implemented.*parquet"):
-        merge_backend("delta")
-    with pytest.raises(NotImplementedError, match="MergeBackend does not implement"):
-        MergeBackend().merge(None, None, "t", keys=["k"])

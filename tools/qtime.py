@@ -2,11 +2,11 @@
 
 Usage: python tools/qtime.py <query> [<query> ...] [--reps N] [--plan DIR]
 
-Times each named query with the bench's exact materialization protocol
-(max(hash(*cols)) collect) after one warmup execution, prints
-min/median of N reps, and optionally writes `.explain('formatted')`
-output to DIR/<query>.txt.  Uses $SPARK_GRAFT_SF_DIR (default sf0.1),
-same session factory as bench.py.
+Times each named query, materialized as a max(hash(*cols)) collect so no
+column is pruned away, after one warmup execution; prints min/median of
+N reps, and optionally writes `.explain('formatted')` output to
+DIR/<query>.txt.  Uses $SPARK_GRAFT_SF_DIR (default sf0.1) and the
+program's own session factory (`session.get_spark`).
 """
 
 from __future__ import annotations
@@ -51,7 +51,7 @@ def main() -> None:
     def materialize(df) -> None:
         df.select(F.max(F.hash(*df.columns)).alias("h")).collect()
 
-    # table warmup (footer reads / classloading), same as bench.py
+    # table warmup (footer reads / classloading) before the first timing
     from realparse_spark.sources.tables import TABLE_NAMES, load_table
 
     for t in TABLE_NAMES:
