@@ -35,6 +35,7 @@ import os
 import shutil
 import tempfile
 import threading
+import weakref
 from collections.abc import Callable
 
 
@@ -114,14 +115,16 @@ def snapshot_path(
     # (observed once the test suite started thread-pooling its all-query
     # sweeps).  One lock per key serializes same-key builders in-process;
     # distinct keys still build concurrently, and the cross-process story
-    # (steps 1-3 in the module docstring) is unchanged.
+    # (steps 1-3 in the module docstring) is unchanged.  The map holds its
+    # locks weakly: an entry lives while some builder of that key holds the
+    # lock object, so a long-lived process keeps no lock per key it built.
     with _KEY_LOCKS_GUARD:
         key_lock = _KEY_LOCKS.setdefault(key, threading.Lock())
     with key_lock:
         return _snapshot_path_locked(cache, key, prefix, build)
 
 
-_KEY_LOCKS: dict[tuple, threading.Lock] = {}
+_KEY_LOCKS: weakref.WeakValueDictionary[tuple, threading.Lock] = weakref.WeakValueDictionary()
 _KEY_LOCKS_GUARD = threading.Lock()
 
 

@@ -7,14 +7,25 @@ high-watermark (`MAX(datetime)` of the already-loaded family,
 real_parse.pl:47-52).  Spark shape:
 
     read.text (pruned file set)
-      -> parse (narrow, codegen)
+      -> parse (narrow, codegen) -> persist
       -> watermark filter (strictly-greater, F1 semantics)
-      -> derive surrogate keys once (J2: no read-back, no serialization)
+      -> derive surrogate keys (J2: no read-back, no serialization)
       -> persist
-      -> N projected child writes (Parquet, partitioned by server_type)
+      -> N projected child appends (Parquet; `access` partitioned by
+         server_type and access_date)
 
-The whole load is shuffle-free; at 100 TB the only cost is the scan and the
-N columnar writes, all from one cached parse.
+No count is a job of its own.  Each is an `Observation`, filled by an action
+that runs anyway or by a single-job pass into the `noop` sink:
+
+    watermark pass   max(datetime) of the family's latest date partition
+    keyed pass       quarantined lines and max(access_id); fills both
+                     caches, so the text is scanned once
+    each append      the rows it wrote
+
+A cycle is therefore two jobs plus one per table it writes.  (A `count()`
+or an aggregate `collect()` would cost 2-3 jobs each under AQE.)  The whole
+load is shuffle-free; at 100 TB the only cost is the scan and the N
+columnar writes, all from one cached parse.
 
 Key semantics preserved from the reference: late rows (epoch <= watermark)
 are silently dropped, ties included (real_parse.pl:93 strict `>`), and
@@ -28,7 +39,7 @@ import os
 from collections.abc import Callable
 from contextlib import ExitStack
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from realparse_spark.operators.parse import (
@@ -43,11 +54,8 @@ from realparse_spark.sources.logs import read_log_lines, read_server_config
 ACCESS_TABLES = ("access", "file", "client", "network", "stats_mask1", "stats_mask2", "stats_mask3")
 WEB_TABLES = ACCESS_TABLES[:3]  # web_parse.pl writes no network/stats rows
 
-# A family's child table: (name, rows, one_per_line).  A one_per_line table
-# holds exactly one row per keyed line, so its insert count is the keyed
-# count and costs no Spark job.
-Child = tuple[str, DataFrame, bool]
-Persist = Callable[[DataFrame], DataFrame]
+# A family's child table: (name, rows projected from the keyed lines).
+Child = tuple[str, DataFrame]
 
 # real_parse.pl:43 locks a `components` table that is never written — a
 # declared-but-unimplemented placeholder for stream components (the unused
@@ -64,6 +72,21 @@ def _ensure_components(spark: SparkSession, warehouse: str) -> None:
 
 def _table_path(warehouse: str, name: str) -> str:
     return os.path.join(warehouse, name)
+
+
+def _observed(df: DataFrame, **aggs: Column) -> tuple[DataFrame, Observation]:
+    """`df` with the aggregates `aggs` observed by the first action that runs
+    it; they ride along in that action's job instead of costing their own."""
+    obs = Observation()
+    return df.observe(obs, *(c.alias(k) for k, c in aggs.items())), obs
+
+
+def _scan(df: DataFrame, **aggs: Column) -> dict:
+    """Run `df` into the `noop` sink, one shuffle-free job, and return the
+    aggregates `aggs` observed on the way."""
+    df, obs = _observed(df, **aggs)
+    df.write.format("noop").mode("overwrite").save()
+    return obs.get
 
 
 def read_warehouse_table(spark: SparkSession, warehouse: str, name: str) -> DataFrame | None:
@@ -93,9 +116,11 @@ def _family_watermark(spark: SparkSession, warehouse: str, server_type: int) -> 
     )
     if not dates:
         return None
-    latest = spark.read.parquet(os.path.join(stdir, f"access_date={dates[-1]}"))
-    row = latest.agg(F.max(F.unix_timestamp("datetime")).alias("wm")).collect()[0]
-    return row.wm
+    # the explicit schema reads the one column and skips schema inference
+    latest = spark.read.schema("datetime timestamp").parquet(
+        os.path.join(stdir, f"access_date={dates[-1]}")
+    )
+    return _scan(latest, wm=F.max(F.unix_timestamp("datetime")))["wm"]
 
 
 def _max_key_path(warehouse: str) -> str:
@@ -121,15 +146,12 @@ def _next_key_base(warehouse: str) -> int:
     return 0
 
 
-def _reserve_key_range(keyed: DataFrame, warehouse: str) -> None:
-    """Commit this run's max surrogate key BEFORE the table appends.
+def _reserve_key_range(hi: int, warehouse: str) -> None:
+    """Commit this run's max surrogate key `hi` BEFORE the table appends.
 
-    The max is an aggregate over the run's cached rows only (never a table
-    scan); the write is tmp + rename so a reader sees either the old or the
-    new value (rename maps to the table-format metadata commit at scale)."""
-    hi = keyed.agg(F.max("access_id").alias("m")).collect()[0].m
-    if hi is None:
-        return
+    `hi` is observed over the run's keyed rows only (never a table scan);
+    the write is tmp + rename so a reader sees either the old or the new
+    value (rename maps to the table-format metadata commit at scale)."""
     LOCAL.makedirs(_table_path(warehouse, "access"))
     p = _max_key_path(warehouse)
     LOCAL.write_text(p + ".tmp", str(int(hi)))
@@ -148,14 +170,13 @@ def _load_cycle(
     logging_style: int | None,
     stats_mask: int | None,
     tables: tuple[str, ...],
-    children: Callable[[DataFrame, Persist], list[Child]],
+    children: Callable[[DataFrame], list[Child]],
 ) -> dict[str, int]:
     """One cron cycle for one log family; real_parse.pl and web_parse.pl
     share this loop shape.  The family supplies its parser, the literals of
     its access rows, the names of all its `tables` (access first) and
-    `children`, which projects the keyed lines onto the other tables and may
-    `persist` an intermediate for the cycle to release.  Returns per-table
-    insert counts plus the quarantined-line count."""
+    `children`, which projects the keyed lines onto the other tables.
+    Returns per-table insert counts plus the quarantined-line count."""
     with ExitStack() as held:
 
         def persist(df: DataFrame) -> DataFrame:
@@ -163,38 +184,38 @@ def _load_cycle(
             held.callback(df.unpersist)
             return df
 
-        # Persist the parsed corpus BEFORE the quarantine split: the quarantine
-        # count, the quarantine write, and the keyed main pipeline all branch
-        # off this one DF — without the cache each branch would re-scan and
-        # re-regex the raw text (~3 full parse passes at 100 TB).
+        # Persist the parsed corpus: the quarantine split and the keyed lines
+        # branch off this one DF; without the cache each branch would
+        # re-scan and re-regex the raw text.
         parsed = persist(parse(read_log_lines(spark, log_dir, prefix, latest), line_col="value"))
+        wm = _family_watermark(spark, warehouse, server_type)
+        base = _next_key_base(warehouse)
 
         # Quarantine: a line whose timestamp failed to parse (epoch NULL)
         # cannot pass any watermark and would silently vanish; at 100 TB
         # malformed lines are a certainty, so they are preserved for triage
         # instead of dropped (ANSI-off yields NULLs, not job aborts).
-        bad = parsed.filter(F.col("epoch").isNull()).select("value", "source_file")
-        n_bad = bad.count()  # materializes the parse cache: the only full parse
-        if n_bad:
-            _append(bad, warehouse, "quarantine")
-        good = parsed.filter(F.col("epoch").isNotNull())
-
-        wm = _family_watermark(spark, warehouse, server_type)
+        lines, seen = _observed(parsed, bad=F.count_if(F.col("epoch").isNull()))
+        good = lines.filter(F.col("epoch").isNotNull())
         if wm is not None:
             good = good.filter(F.col("epoch") > F.lit(wm))  # F1 strict '>'
+        # J2: one surrogate per line, derived without any read-back; the
+        # base offset keeps runs disjoint (sparse like auto-increment with
+        # gaps).  `keyed` is persisted so that the appends' plans hold no
+        # per-cycle literal (`wm`, `base`): their generated code is then
+        # the same every cycle and compiles once per process.
+        keyed = persist(good.withColumn("access_id", F.lit(base) + F.monotonically_increasing_id()))
 
-        base = _next_key_base(warehouse)
-        # J2: one deterministic-enough surrogate per line, derived without any
-        # read-back; monotonically_increasing_id is unique per run, the base
-        # offset keeps runs disjoint (sparse like auto-increment with gaps).
-        keyed = persist(good.withColumn(
-            "access_id", F.lit(base) + F.monotonically_increasing_id()
-        ))
-        n = keyed.count()
+        # The keyed pass fills both caches and both observations.
+        hi = _scan(keyed, hi=F.max("access_id"))["hi"]
+        n_bad = seen.get["bad"]
         counts = dict.fromkeys(tables, 0) | {"quarantine": n_bad}
-        if n == 0:
+        if n_bad:
+            _append(parsed.filter(F.col("epoch").isNull()).select("value", "source_file"),
+                    warehouse, "quarantine")
+        if hi is None:
             return counts
-        _reserve_key_range(keyed, warehouse)
+        _reserve_key_range(hi, warehouse)
 
         access = keyed.select(
             "access_id", "client_ip_address", "identuser", "authuser",
@@ -204,15 +225,12 @@ def _load_cycle(
             F.lit(server_type).cast("int").alias("server_type"),
             F.to_date(F.to_timestamp("datetime")).alias("access_date"),
         )
-        _append(access, warehouse, "access")
-        counts["access"] = n
-        for name, rows, one_per_line in children(keyed, persist):
-            _append(rows, warehouse, name)
-            counts[name] = n if one_per_line else rows.count()
+        for name, rows in [("access", access), *children(keyed)]:
+            counts[name] = _append(rows, warehouse, name)
         return counts
 
 
-def _style5_children(keyed: DataFrame, persist: Persist) -> list[Child]:
+def _style5_children(keyed: DataFrame) -> list[Child]:
     file_df = keyed.select(
         F.col("access_id").alias("file_id"),  # 1:1 with access -> same key
         "method", "path", "name", "protocol_version", "status_code",
@@ -239,7 +257,7 @@ def _style5_children(keyed: DataFrame, persist: Persist) -> list[Child]:
     )
     # parse_style5 already materialized _brackets on keyed — no second
     # regex pass over the line corpus
-    stats = persist(explode_stats_masks(keyed, key_cols=("access_id",)))
+    stats = explode_stats_masks(keyed, key_cols=("access_id",))
     s1 = stats.filter(F.col("stat_type") == 1).select(
         F.col("access_id").alias("id"),
         "packets_received", "out_of_order", "missing", "early", "late",
@@ -258,12 +276,12 @@ def _style5_children(keyed: DataFrame, persist: Persist) -> list[Child]:
         "access_id", F.col("access_id").alias("file_id"),
     )
     return [
-        ("file", file_df, True), ("client", client, True), ("network", network, True),
-        ("stats_mask1", s1, False), ("stats_mask2", s2, False), ("stats_mask3", s3, False),
+        ("file", file_df), ("client", client), ("network", network),
+        ("stats_mask1", s1), ("stats_mask2", s2), ("stats_mask3", s3),
     ]
 
 
-def _web_children(keyed: DataFrame, _persist: Persist) -> list[Child]:
+def _web_children(keyed: DataFrame) -> list[Child]:
     file_df = keyed.select(
         F.col("access_id").alias("file_id"),
         "method", "path", "name", "protocol_version", "status_code",
@@ -284,7 +302,7 @@ def _web_children(keyed: DataFrame, _persist: Persist) -> list[Child]:
         )],
         "access_id",
     )
-    return [("file", file_df, True), ("client", client, True)]
+    return [("file", file_df), ("client", client)]
 
 
 def load_style5(
@@ -330,12 +348,15 @@ def load_weblog(
     )
 
 
-def _append(df: DataFrame, warehouse: str, name: str) -> None:
+def _append(df: DataFrame, warehouse: str, name: str) -> int:
     """S7 — batched columnar append; replaces per-row INSERT round-trips.
+    Returns the rows written, observed in the append's own job.
     `access` is partitioned by (server_type, access_date): the F2 family
     discriminator, time-range reports, AND the per-run watermark read all
     prune to a handful of partitions instead of scanning the table."""
+    df, obs = _observed(df, n=F.count(F.lit(1)))
     writer = df.write.mode("append")
     if name == "access":
         writer = writer.partitionBy("server_type", "access_date")
     writer.parquet(_table_path(warehouse, name))
+    return obs.get["n"]

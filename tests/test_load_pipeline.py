@@ -8,7 +8,13 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from realparse_spark.operators.load import load_style5, load_weblog, read_warehouse_table
+from realparse_spark.operators.load import (
+    ACCESS_TABLES,
+    WEB_TABLES,
+    load_style5,
+    load_weblog,
+    read_warehouse_table,
+)
 from realparse_spark.sources.logs import latest_files, read_server_config
 
 
@@ -25,6 +31,21 @@ STATS_FULL = (
     " [Stat1: 1200 3 2 1 4 audio/x-pn-realaudio]"
     " [Stat2: 80000 64000 80000 16000 60000 1200 1195 4 1.5 1 2 audio/x-pn-realaudio]"
 )
+
+
+def web_line(ts: str, fname: str) -> str:
+    return f'10.0.22.9 - - [{ts} -0800] "GET {fname} HTTP/1.1" 200 1000 "-" "NSPlayer/9.0"'
+
+
+def no_rows(tables, quarantine=0) -> dict[str, int]:
+    return dict.fromkeys(tables, 0) | {"quarantine": quarantine}
+
+
+def warehouse_files(wh: str) -> set[str]:
+    return {
+        os.path.relpath(os.path.join(r, f), wh)
+        for r, _dirs, files in os.walk(wh) for f in files
+    }
 
 
 @pytest.fixture()
@@ -86,15 +107,24 @@ def test_style5_load_and_idempotence(spark, log_dir, tmp_path):
     fmts = {r.audio_format for r in s1.collect()}
     assert fmts == {"audio/x-pn-realaudio", "UNKNOWN"}  # C12 default
 
-    # FK integrity: every child key appears in access
+    # FK integrity: each one-row-per-line table holds exactly access's ids
+    # (keys that drifted between appends would show here); every stats key
+    # appears in access
     ids = {r.access_id for r in access.collect()}
-    for t in ("file", "client", "network", "stats_mask1", "stats_mask2", "stats_mask3"):
-        child = read_warehouse_table(spark, wh, t)
-        assert {r.access_id for r in child.collect()} <= ids, t
+    for t in ACCESS_TABLES[1:]:
+        child = {r.access_id for r in read_warehouse_table(spark, wh, t).collect()}
+        if t in ("file", "client", "network"):
+            assert child == ids, t
+        else:
+            assert child <= ids, t
 
-    # re-run: watermark drops everything (F1 idempotence)
-    counts2 = load_style5(spark, log_dir, wh)
-    assert all(v == 0 for v in counts2.values())
+    # re-run: every line is a tie or late, the watermark drops them all and
+    # the cycle appends nothing, not even a key reservation (F1 idempotence)
+    from realparse_spark.operators.load import _next_key_base
+
+    before, key_base = warehouse_files(wh), _next_key_base(wh)
+    assert load_style5(spark, log_dir, wh) == no_rows(ACCESS_TABLES)
+    assert warehouse_files(wh) == before and _next_key_base(wh) == key_base
     assert read_warehouse_table(spark, wh, "access").count() == 3
 
     # new rotated file with strictly newer rows -> only those load
@@ -103,7 +133,8 @@ def test_style5_load_and_idempotence(spark, log_dir, tmp_path):
         # tie with existing max (13/Oct 09:03:38) must be dropped (strict >)
         fh.write(style5_line("10.0.0.6", "13/Oct/2002:09:03:38", "/media/c/tie.rm") + "\n")
     counts3 = load_style5(spark, log_dir, wh)
-    assert counts3["access"] == 1
+    # a line without stats: every stats table gets zero rows
+    assert counts3 == no_rows(ACCESS_TABLES) | dict.fromkeys(("access", "file", "client", "network"), 1)
     assert read_warehouse_table(spark, wh, "access").count() == 4
 
 
@@ -288,8 +319,7 @@ def test_weblog_load(spark, tmp_path):
     assert infos == {"Mozilla/4.0 (WMP 7.1)", "NSPlayer/9.0"}
 
     # both families share the warehouse: style-5 watermark is independent (F2)
-    counts2 = load_weblog(spark, str(d), wh)
-    assert counts2["access"] == 0
+    assert load_weblog(spark, str(d), wh) == no_rows(WEB_TABLES)
 
 
 def test_watermark_empty_family_dir_is_none(spark, tmp_path):
@@ -346,3 +376,69 @@ def test_mixed_family_warehouse(spark, log_dir, tmp_path):
     assert family_max[1] < family_max[0]
     assert _family_watermark(spark, wh, 1) == family_max[1]
     assert _family_watermark(spark, wh, 0) == family_max[0]
+
+
+def test_cycle_job_budget(spark, tmp_path):
+    """Every count of a cycle is observed on a job that runs anyway.  With a
+    watermark in place and one malformed line, a style-5 cycle is two
+    observed passes (watermark, keyed lines) plus eight appends, and a web
+    cycle two plus four.  A bookkeeping count() or collect() would add 2-3
+    jobs each under AQE."""
+    d = tmp_path / "logs"
+    d.mkdir()
+    wh = str(tmp_path / "wh")
+    (d / "rmaccess.log.1").write_text(
+        style5_line("10.0.0.1", "12/Oct/2002:09:00:00", "/media/a/one.rm", stats=STATS_FULL) + "\n"
+    )
+    (d / "log.1").write_text(web_line("12/Oct/2002:09:00:00", "/media/s/one.wmv") + "\n")
+    load_style5(spark, str(d), wh)
+    load_weblog(spark, str(d), wh)
+    (d / "rmaccess.log.2").write_text(
+        style5_line("10.0.0.2", "13/Oct/2002:09:00:00", "/media/a/two.rm", stats=STATS_FULL)
+        + "\nnot a log line\n"
+    )
+    (d / "log.2").write_text(
+        web_line("13/Oct/2002:09:00:00", "/media/s/two.wma") + "\nnot a log line.wma\n"
+    )
+
+    sc = spark.sparkContext
+
+    def jobs(group, load):
+        sc.setJobGroup(group, group)
+        try:
+            counts = load(spark, str(d), wh)
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return counts, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    counts, n = jobs("budget-style5", load_style5)
+    # STATS_FULL carries Stat1 and Stat2 only: stats_mask3 observes no row
+    assert counts == no_rows(ACCESS_TABLES, quarantine=1) | dict.fromkeys(ACCESS_TABLES[:6], 1)
+    assert n <= 11, n
+    counts, n = jobs("budget-web", load_weblog)
+    assert counts == no_rows(WEB_TABLES, quarantine=1) | dict.fromkeys(WEB_TABLES, 1)
+    assert n <= 7, n
+
+
+@pytest.mark.parametrize("bad_lines", [0, 2])
+def test_cycle_that_keys_no_line(spark, tmp_path, bad_lines):
+    """A cycle whose keyed pass sees no row (an empty log directory, or a
+    file of malformed lines only) returns zero counts, reserves no keys and
+    appends nothing but its quarantined lines."""
+    from realparse_spark.operators.load import _max_key_path
+
+    d = tmp_path / "logs"
+    d.mkdir()
+    wh = str(tmp_path / "wh")
+    if bad_lines:
+        (d / "rmaccess.log.1").write_text("not a log line\n" * bad_lines)
+        (d / "log.1").write_text("not a log line.wma\n" * bad_lines)
+    assert load_style5(spark, str(d), wh) == no_rows(ACCESS_TABLES, bad_lines)
+    assert load_weblog(spark, str(d), wh) == no_rows(WEB_TABLES, bad_lines)
+
+    assert not os.path.exists(_max_key_path(wh))
+    tables = {f.split(os.sep)[0] for f in warehouse_files(wh)}
+    assert tables == ({"components", "quarantine"} if bad_lines else {"components"})
+    if bad_lines:
+        assert read_warehouse_table(spark, wh, "quarantine").count() == 2 * bad_lines
