@@ -3,40 +3,33 @@ index builders.
 
 A *snapshot* is a derived on-disk table (inverted posting index, cluster
 table, co-order edge list, ANN index) keyed by a content fingerprint of its
-source parquet plus build parameters.  All builders share ONE install
-protocol, safe under concurrent builder processes sharing a tmpdir AND
-under concurrent lazy readers:
+source parquet plus build parameters.  Every builder installs through the
+warehouse's one write protocol (fs.py), with the snapshot's own directory
+as the lease root:
 
-1. ``_SUCCESS`` (not just the directory) gates reuse — a directory left by
-   a crashed pre-rename writer is recomputed, not trusted.  The marker is
-   re-checked even on in-memory cache hits, so an externally wiped /tmp
-   triggers a rebuild instead of a failed read of a vanished table.
-2. Builders write into a process-unique ``.tmp-<pid>`` directory, then
-   RE-CHECK the destination: if another writer completed install while we
-   were building, our tmp is discarded and the winner's table is used (the
-   key fingerprints inputs + parameters, so both tables are equivalent).
-   A completed snapshot is NEVER deleted — a concurrent reader may hold a
-   lazy Spark plan over its part-files.
-3. Only a PARTIAL destination (directory lacking ``_SUCCESS``) is cleared
-   before the atomic rename; losing the rename race discards tmp and
-   falls back to the winner's table.
+1. ``_SUCCESS`` (not just the directory) gates reuse, and the commit
+   publishes it last.  The marker is re-checked even on in-memory cache
+   hits, so an externally wiped /tmp triggers a rebuild instead of a failed
+   read of a vanished table.
+2. A missing snapshot is built under the key's lease, which serializes
+   threads and processes alike: the first builds into the lease's stage
+   and commits, the others wait, re-check the marker and use its table.
+3. A completed snapshot is never rebuilt or deleted — a concurrent reader
+   may hold a lazy Spark plan over its part-files.
 
 At 100 TB the same protocol maps onto an object store: the fingerprint key
-becomes the source table's snapshot id, tmp becomes a staging prefix, and
-the atomic rename becomes a metastore pointer swap — the invariant to
-preserve is identical (never delete an installed snapshot a reader may
-hold; writers race by re-checking, not by clobbering).
+becomes the source table's snapshot id, the stage a staging prefix, and the
+commit a metastore pointer swap.
 """
 
 from __future__ import annotations
 
 import hashlib
 import os
-import shutil
 import tempfile
-import threading
-import weakref
 from collections.abc import Callable
+
+from realparse_spark.fs import LOCAL
 
 
 # Folded into every fingerprint key.  The data fingerprint (mtime/size)
@@ -101,66 +94,21 @@ def snapshot_path(
     """Return the directory of the installed snapshot for ``key``,
     building it via ``build(tmp_dir)`` if absent.
 
-    ``build`` must write the snapshot's table(s) under ``tmp_dir``; a
-    top-level ``_SUCCESS`` marker is ensured afterwards (Spark's parquet
-    writer creates one for single-table snapshots; multi-table builders
-    get one added only after every sub-table landed).
+    ``build`` must write the snapshot's table(s) under ``tmp_dir``; the
+    top-level ``_SUCCESS`` marker is written after it returns, so a
+    multi-table snapshot gets one only after every sub-table landed.
     """
-    path = cache.get(key)
-    if path is not None and os.path.isfile(os.path.join(path, "_SUCCESS")):
-        return path
-    # THREADS in one process need the same discipline as processes: the
-    # tmp dir below is pid-keyed, so two threads building the SAME key
-    # would write into one directory and corrupt each other's parquet
-    # (observed once the test suite started thread-pooling its all-query
-    # sweeps).  One lock per key serializes same-key builders in-process;
-    # distinct keys still build concurrently, and the cross-process story
-    # (steps 1-3 in the module docstring) is unchanged.  The map holds its
-    # locks weakly: an entry lives while some builder of that key holds the
-    # lock object, so a long-lived process keeps no lock per key it built.
-    with _KEY_LOCKS_GUARD:
-        key_lock = _KEY_LOCKS.setdefault(key, threading.Lock())
-    with key_lock:
-        return _snapshot_path_locked(cache, key, prefix, build)
-
-
-_KEY_LOCKS: weakref.WeakValueDictionary[tuple, threading.Lock] = weakref.WeakValueDictionary()
-_KEY_LOCKS_GUARD = threading.Lock()
-
-
-def _snapshot_path_locked(
-    cache: dict[tuple, str],
-    key: tuple,
-    prefix: str,
-    build: Callable[[str], None],
-) -> str:
-    path = cache.get(key)
-    if path is not None and os.path.isfile(os.path.join(path, "_SUCCESS")):
-        return path
-    path = os.path.join(
+    path = cache.get(key) or os.path.join(
         tempfile.gettempdir(),
         prefix + hashlib.md5(repr(key).encode()).hexdigest()[:12],
     )
-    if not os.path.isfile(os.path.join(path, "_SUCCESS")):
-        tmp = f"{path}.tmp-{os.getpid()}"
-        build(tmp)
-        if not os.path.isfile(os.path.join(tmp, "_SUCCESS")):
-            with open(os.path.join(tmp, "_SUCCESS"), "w"):
-                pass
-        if os.path.isfile(os.path.join(path, "_SUCCESS")):
-            # another writer installed a complete snapshot while we built —
-            # use theirs, never delete it out from under its readers
-            shutil.rmtree(tmp, ignore_errors=True)
-        else:
-            # only a PARTIAL directory (crashed pre-rename writer) is
-            # cleared; then the rename lands atomically
-            shutil.rmtree(path, ignore_errors=True)
-            try:
-                os.rename(tmp, path)
-            except OSError:
-                # lost the rename race — the winner's table is equivalent
-                shutil.rmtree(tmp, ignore_errors=True)
-        if not os.path.isfile(os.path.join(path, "_SUCCESS")):
-            raise RuntimeError(f"snapshot install failed for {path}")
+    done = os.path.join(path, "_SUCCESS")
+    if not os.path.isfile(done):
+        with LOCAL.lease(path) as stage:
+            if not os.path.isfile(done):  # no other builder finished meanwhile
+                build(stage)
+                LOCAL.write_text(os.path.join(stage, "_SUCCESS"), "")
+                names = sorted(LOCAL.list_dir(stage), key=lambda n: n == "_SUCCESS")
+                LOCAL.commit(path, [(os.path.join(stage, n), os.path.join(path, n)) for n in names])
     cache[key] = path
     return path

@@ -3,9 +3,10 @@
 The incremental load appends a few files per run; after thousands of cron
 runs (the reference ran per-day forever) a table becomes millions of tiny
 files and listing/open costs dominate every scan — the classic small-files
-problem.  `compact_table` rewrites a table into ~target-sized files with
-the same atomic directory swap as the upsert (readers see old or new,
-never partial).
+problem.  `compact_table` rewrites a table into ~target-sized files under
+the writer lease of the table's parent directory — for a warehouse table,
+the warehouse, so a compaction and a load take turns — and one commit
+replaces the table with the rewrite (readers see old or new, never a mix).
 
 Partitioned tables are compacted per partition directory so partition
 pruning keeps working on the result.
@@ -73,61 +74,59 @@ def compact_table(
         raise ValueError(
             "zorder_cols currently applies to unpartitioned tables only"
         )
-    before, total = table_file_stats(spark, path)
+    path = os.path.abspath(path)
+    with LOCAL.lease(os.path.dirname(path)) as stage:
+        staging = os.path.join(stage, os.path.basename(path))
+        before, total = table_file_stats(spark, path)
 
-    df = spark.read.parquet(path)
-    staging = path.rstrip("/") + ".__compact__"
-    if not partition_by:
-        n_files = max(1, total // target_file_bytes)
-        if zorder_cols:
-            from realparse_spark.operators.layout import zorder_shape
+        df = spark.read.parquet(path)
+        if not partition_by:
+            n_files = max(1, total // target_file_bytes)
+            if zorder_cols:
+                from realparse_spark.operators.layout import zorder_shape
 
-            shaped = zorder_shape(df, zorder_cols, n_files=int(n_files))
-            w = shaped.write.mode("overwrite")
+                shaped = zorder_shape(df, zorder_cols, n_files=int(n_files))
+                w = shaped.write.mode("overwrite")
+            else:
+                w = df.coalesce(int(n_files)).write.mode("overwrite")
         else:
-            w = df.coalesce(int(n_files)).write.mode("overwrite")
-    else:
-        leaf = _leaf_partition_bytes(path, partition_by)
-        salt_rows = [
-            (
-                *[None if v == "__HIVE_DEFAULT_PARTITION__" else v for v in key],
-                max(1, -(-b // target_file_bytes)),
+            leaf = _leaf_partition_bytes(path, partition_by)
+            salt_rows = [
+                (
+                    *[None if v == "__HIVE_DEFAULT_PARTITION__" else v for v in key],
+                    max(1, -(-b // target_file_bytes)),
+                )
+                for key, b in leaf.items()
+            ]
+            schema = ", ".join(f"__pv_{c} string" for c in partition_by) + ", __n_salt int"
+            salts = spark.createDataFrame(salt_rows, schema)
+            # eqNullSafe: rows in a null-valued partition dir must not be
+            # dropped by the salt join
+            cond = [df[c].cast("string").eqNullSafe(salts[f"__pv_{c}"]) for c in partition_by]
+            data_cols = df.columns
+            salted = (
+                df.join(F.broadcast(salts), cond)
+                # uniform within a partition value: hash of the whole row
+                .withColumn(
+                    "__salt", F.pmod(F.xxhash64(*[F.col(c) for c in data_cols]), F.col("__n_salt"))
+                )
             )
-            for key, b in leaf.items()
-        ]
-        schema = ", ".join(f"__pv_{c} string" for c in partition_by) + ", __n_salt int"
-        salts = spark.createDataFrame(salt_rows, schema)
-        # eqNullSafe: rows in a null-valued partition dir must not be
-        # dropped by the salt join
-        cond = [df[c].cast("string").eqNullSafe(salts[f"__pv_{c}"]) for c in partition_by]
-        data_cols = df.columns
-        salted = (
-            df.join(F.broadcast(salts), cond)
-            # uniform within a partition value: hash of the whole row
-            .withColumn(
-                "__salt", F.pmod(F.xxhash64(*[F.col(c) for c in data_cols]), F.col("__n_salt"))
+            n_tasks = int(sum(r[-1] for r in salt_rows))
+            w = (
+                salted.repartition(max(1, n_tasks), *partition_by, "__salt")
+                .select(*data_cols)
+                .write.mode("overwrite")
+                .partitionBy(*partition_by)
             )
-        )
-        n_tasks = int(sum(r[-1] for r in salt_rows))
-        w = (
-            salted.repartition(max(1, n_tasks), *partition_by, "__salt")
-            .select(*data_cols)
-            .write.mode("overwrite")
-            .partitionBy(*partition_by)
-        )
-    w.parquet(staging)
+        w.parquet(staging)
 
-    # table sidecars (the loader's `_max_key`, the upsert's meta) are not
-    # data files: carry them into the rewrite, or the swap would drop them
-    for name in LOCAL.list_dir(path):
-        src, dst = os.path.join(path, name), os.path.join(staging, name)
-        if name.startswith("_") and not LOCAL.is_dir(src) and not LOCAL.exists(dst):
-            LOCAL.write_text(dst, LOCAL.read_text(src))
-    backup = path.rstrip("/") + ".__old__"
-    LOCAL.rmtree(backup)
-    LOCAL.rename(path, backup)
-    LOCAL.rename(staging, path)
-    LOCAL.rmtree(backup)
+        # table sidecars (the loader's `_max_key`, the upsert's meta) are not
+        # data files: carry them into the rewrite, or the commit would drop them
+        for name in LOCAL.list_dir(path):
+            src, dst = os.path.join(path, name), os.path.join(staging, name)
+            if name.startswith("_") and not LOCAL.is_dir(src) and not LOCAL.exists(dst):
+                LOCAL.write_text(dst, LOCAL.read_text(src))
+        LOCAL.commit(os.path.dirname(path), [(staging, path)])
     after, _ = table_file_stats(spark, path)
     return before, after
 

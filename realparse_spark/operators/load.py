@@ -27,10 +27,17 @@ or an aggregate `collect()` would cost 2-3 jobs each under AQE.)  The whole
 load is shuffle-free; at 100 TB the only cost is the scan and the N
 columnar writes, all from one cached parse.
 
+A cycle holds the warehouse's writer lease (fs.py) from before its
+watermark read to its end, as the reference holds `LOCK TABLES`
+(real_parse.pl:43-44,192-193).  Every append, the quarantined lines and
+the `_max_key` sidecar go to the lease's stage, and one commit publishes
+them.  A second loader waits and then finds nothing new; a cycle that dies
+publishes nothing, so its re-run loads the same lines.
+
 Key semantics preserved from the reference: late rows (epoch <= watermark)
 are silently dropped, ties included (real_parse.pl:93 strict `>`), and
 re-running over the same rotated files inserts nothing new (idempotence via
-the watermark, replacing `LOCK TABLES`).
+the watermark).
 """
 
 from __future__ import annotations
@@ -60,14 +67,13 @@ Child = tuple[str, DataFrame]
 # real_parse.pl:43 locks a `components` table that is never written — a
 # declared-but-unimplemented placeholder for stream components (the unused
 # $stream_components at open_log.pl:41).  Parity: the warehouse declares the
-# typed table, written empty once, never row-appended.
+# typed table, written empty by its first cycle, never row-appended.
 COMPONENTS_SCHEMA = "component_id long, access_id long, component string"
 
 
-def _ensure_components(spark: SparkSession, warehouse: str) -> None:
-    p = os.path.join(warehouse, "components")
-    if not LOCAL.exists(p):
-        spark.createDataFrame([], COMPONENTS_SCHEMA).write.mode("overwrite").parquet(p)
+def _ensure_components(spark: SparkSession, warehouse: str, stage: str) -> None:
+    if not LOCAL.exists(_table_path(warehouse, "components")):
+        spark.createDataFrame([], COMPONENTS_SCHEMA).write.parquet(_table_path(stage, "components"))
 
 
 def _table_path(warehouse: str, name: str) -> str:
@@ -90,11 +96,12 @@ def _scan(df: DataFrame, **aggs: Column) -> dict:
 
 
 def read_warehouse_table(spark: SparkSession, warehouse: str, name: str) -> DataFrame | None:
+    """The table `name`, or None while it has no data file (no load has
+    written it).  Any other read error propagates."""
     path = _table_path(warehouse, name)
-    try:
-        return spark.read.parquet(path)
-    except Exception:
+    if next(LOCAL.data_files(path), None) is None:
         return None
+    return spark.read.parquet(path)
 
 
 def _family_watermark(spark: SparkSession, warehouse: str, server_type: int) -> int | None:
@@ -135,27 +142,15 @@ def _next_key_base(warehouse: str) -> int:
     GET; maps to a table property at 100 TB — see fs.py), NOT from a
     `max(access_id)` aggregate, which would be a full-table column scan per
     cron run — the exact anti-pattern the watermark fetch already avoids
-    (`_family_watermark` reads one date directory).  The sidecar is written
-    as a RESERVATION before any access append (`_reserve_key_range`), so a
-    crash mid-load leaves an unused id gap, never a collision — the same
-    observable semantics as MySQL auto-increment burning ids on rollback.
-    No sidecar therefore means no access row has been written yet."""
+    (`_family_watermark` reads one date directory).  The cycle stages the
+    sidecar with its appends and one commit publishes both, so the base
+    and the rows below it appear together; a cycle that dies publishes
+    neither and burns no ids.  No sidecar therefore means no access row
+    has been written yet."""
     p = _max_key_path(warehouse)
     if LOCAL.exists(p):
         return int(LOCAL.read_text(p).strip()) + 1
     return 0
-
-
-def _reserve_key_range(hi: int, warehouse: str) -> None:
-    """Commit this run's max surrogate key `hi` BEFORE the table appends.
-
-    `hi` is observed over the run's keyed rows only (never a table scan);
-    the write is tmp + rename so a reader sees either the old or the new
-    value (rename maps to the table-format metadata commit at scale)."""
-    LOCAL.makedirs(_table_path(warehouse, "access"))
-    p = _max_key_path(warehouse)
-    LOCAL.write_text(p + ".tmp", str(int(hi)))
-    LOCAL.rename(p + ".tmp", p)
 
 
 def _load_cycle(
@@ -178,12 +173,14 @@ def _load_cycle(
     `children`, which projects the keyed lines onto the other tables.
     Returns per-table insert counts plus the quarantined-line count."""
     with ExitStack() as held:
+        stage = held.enter_context(LOCAL.lease(warehouse))
 
         def persist(df: DataFrame) -> DataFrame:
             df = df.persist()
             held.callback(df.unpersist)
             return df
 
+        _ensure_components(spark, warehouse, stage)
         # Persist the parsed corpus: the quarantine split and the keyed lines
         # branch off this one DF; without the cache each branch would
         # re-scan and re-regex the raw text.
@@ -212,21 +209,25 @@ def _load_cycle(
         counts = dict.fromkeys(tables, 0) | {"quarantine": n_bad}
         if n_bad:
             _append(parsed.filter(F.col("epoch").isNull()).select("value", "source_file"),
-                    warehouse, "quarantine")
-        if hi is None:
-            return counts
-        _reserve_key_range(hi, warehouse)
-
-        access = keyed.select(
-            "access_id", "client_ip_address", "identuser", "authuser",
-            F.to_timestamp("datetime").alias("datetime"), "gmt_offset",
-            F.lit(logging_style).cast("int").alias("logging_style"),
-            F.lit(stats_mask).cast("int").alias("stats_mask"),
-            F.lit(server_type).cast("int").alias("server_type"),
-            F.to_date(F.to_timestamp("datetime")).alias("access_date"),
-        )
-        for name, rows in [("access", access), *children(keyed)]:
-            counts[name] = _append(rows, warehouse, name)
+                    stage, "quarantine")
+        if hi is not None:
+            access = keyed.select(
+                "access_id", "client_ip_address", "identuser", "authuser",
+                F.to_timestamp("datetime").alias("datetime"), "gmt_offset",
+                F.lit(logging_style).cast("int").alias("logging_style"),
+                F.lit(stats_mask).cast("int").alias("stats_mask"),
+                F.lit(server_type).cast("int").alias("server_type"),
+                F.to_date(F.to_timestamp("datetime")).alias("access_date"),
+            )
+            for name, rows in [("access", access), *children(keyed)]:
+                counts[name] = _append(rows, stage, name)
+            LOCAL.write_text(_max_key_path(stage), str(hi))
+        # one commit puts each staged file at its place in the warehouse:
+        # part files join their tables, `_max_key` replaces its old value
+        LOCAL.commit(warehouse, [
+            (p, os.path.join(warehouse, os.path.relpath(p, stage)))
+            for p, _size in LOCAL.data_files(stage, suffix="")
+        ])
         return counts
 
 
@@ -319,7 +320,6 @@ def load_style5(
         logging_style, stats_mask = read_server_config(config_path)
         if logging_style != 5:  # F3 gate (real_parse.pl:58,186-188)
             return {}
-    _ensure_components(spark, warehouse)
     return _load_cycle(
         spark, log_dir, warehouse, latest, prefix,
         parse=parse_style5,
@@ -348,8 +348,9 @@ def load_weblog(
     )
 
 
-def _append(df: DataFrame, warehouse: str, name: str) -> int:
-    """S7 — batched columnar append; replaces per-row INSERT round-trips.
+def _append(df: DataFrame, root: str, name: str) -> int:
+    """S7 — batched columnar append of table `name` under `root` (the
+    cycle's stage); replaces per-row INSERT round-trips.
     Returns the rows written, observed in the append's own job.
     `access` is partitioned by (server_type, access_date): the F2 family
     discriminator, time-range reports, AND the per-run watermark read all
@@ -358,5 +359,5 @@ def _append(df: DataFrame, warehouse: str, name: str) -> int:
     writer = df.write.mode("append")
     if name == "access":
         writer = writer.partitionBy("server_type", "access_date")
-    writer.parquet(_table_path(warehouse, name))
+    writer.parquet(_table_path(root, name))
     return obs.get["n"]

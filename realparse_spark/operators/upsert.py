@@ -16,12 +16,12 @@ rewrites a few buckets, never restates the table.  Untouched bucket
 directories are not opened, rewritten, or renamed (byte-identical,
 asserted in tests/test_upsert.py).
 
-Swap protocol: per touched bucket, rename old dir aside then staged dir
-in.  A reader never sees a half-written MIX of old and new rows within a
-bucket; the brief per-bucket absence window and the cross-bucket
-non-atomicity are the documented trade-offs of staying dependency-free —
-deployments needing lock-free concurrent readers use a transactional
-table format.
+Writes: an upsert holds the writer lease of the table's parent directory
+(fs.py), stages the touched buckets, and one commit replaces them, so
+writers see every bucket of a merge or none.  Readers take no lease: one
+that lists the table during the commit may see some buckets replaced and
+not others, or a bucket briefly absent — deployments needing lock-free
+concurrent readers use a transactional table format.
 """
 
 from __future__ import annotations
@@ -71,62 +71,55 @@ def upsert_parquet(
     recorded value, because re-bucketing would silently split a key across
     buckets and break the merge).  An existing `path` without the sidecar
     was not written by this function and is refused with a ValueError."""
-    meta = _read_meta(path)
-    if meta is not None:
-        if meta["keys"] != keys:
-            raise ValueError(f"table at {path} was bucketed on keys {meta['keys']}, got {keys}")
-        n_buckets = int(meta["n_buckets"])
-    elif LOCAL.exists(path):
-        raise ValueError(f"{path} is not a bucketed upsert table: it has no {_META}")
+    path = os.path.abspath(path)
+    root = os.path.dirname(path)
+    with LOCAL.lease(root) as stage:
+        meta = _read_meta(path)
+        if meta is not None:
+            if meta["keys"] != keys:
+                raise ValueError(f"table at {path} was bucketed on keys {meta['keys']}, got {keys}")
+            n_buckets = int(meta["n_buckets"])
+        elif LOCAL.exists(path):
+            raise ValueError(f"{path} is not a bucketed upsert table: it has no {_META}")
 
-    data_cols = new_df.columns
-    newb = new_df.withColumn(_BUCKET, _bucket_expr(keys, n_buckets))
-    staging = path.rstrip("/") + ".__staging__"
-    LOCAL.rmtree(staging)
+        data_cols = new_df.columns
+        newb = new_df.withColumn(_BUCKET, _bucket_expr(keys, n_buckets))
+        staging = os.path.join(stage, os.path.basename(path))
 
-    if meta is None:
-        # create in staging and rename in with its sidecar, so a crash
-        # never leaves a table at `path` that later calls would refuse
-        newb.write.mode("overwrite").partitionBy(_BUCKET).parquet(staging)
-        _write_meta(staging, n_buckets, keys)
-        LOCAL.rename(staging, path)
-        return spark.read.parquet(path).count()
+        if meta is None:
+            # the table and its sidecar are published together, so a crash
+            # never leaves a table at `path` that later calls would refuse
+            newb.write.partitionBy(_BUCKET).parquet(staging)
+            _write_meta(staging, n_buckets, keys)
+            LOCAL.commit(root, [(staging, path)])
+            return spark.read.parquet(path).count()
 
-    # buckets present in this batch: tiny distinct collect (<= n_buckets)
-    touched = sorted(
-        r[_BUCKET] for r in newb.select(_BUCKET).distinct().collect()
-    )
-    if not touched:
-        return spark.read.parquet(path).count()
-    existing = (
-        spark.read.parquet(path)
-        .filter(F.col(_BUCKET).isin(touched))  # partition pruning: O(batch) read
-        .select(*data_cols, F.col(_BUCKET).cast("int").alias(_BUCKET))
-    )
-    tagged_new = newb.withColumn("_src", F.lit(1))
-    tagged_old = existing.withColumn("_src", F.lit(0))
-    unioned = tagged_new.unionByName(tagged_old)
+        # buckets present in this batch: tiny distinct collect (<= n_buckets)
+        touched = sorted(
+            r[_BUCKET] for r in newb.select(_BUCKET).distinct().collect()
+        )
+        if not touched:
+            return spark.read.parquet(path).count()
+        existing = (
+            spark.read.parquet(path)
+            .filter(F.col(_BUCKET).isin(touched))  # partition pruning: O(batch) read
+            .select(*data_cols, F.col(_BUCKET).cast("int").alias(_BUCKET))
+        )
+        tagged_new = newb.withColumn("_src", F.lit(1))
+        tagged_old = existing.withColumn("_src", F.lit(0))
+        unioned = tagged_new.unionByName(tagged_old)
 
-    order = [F.col(order_col).desc()] if order_col else []
-    w = Window.partitionBy(*keys).orderBy(*order, F.col("_src").desc())
-    merged = (
-        unioned.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "_src")
-    )
-    merged.write.mode("overwrite").partitionBy(_BUCKET).parquet(staging)
-
-    # swap ONLY the touched bucket dirs; untouched dirs stay byte-identical
-    backup = path.rstrip("/") + ".__old__"
-    LOCAL.rmtree(backup)
-    LOCAL.makedirs(backup)
-    for b in touched:
-        src = os.path.join(staging, f"{_BUCKET}={b}")
-        dst = os.path.join(path, f"{_BUCKET}={b}")
-        if LOCAL.exists(dst):
-            LOCAL.rename(dst, os.path.join(backup, f"{_BUCKET}={b}"))
-        if LOCAL.exists(src):  # merged always has the batch's rows
-            LOCAL.rename(src, dst)
-    LOCAL.rmtree(staging)
-    LOCAL.rmtree(backup)
+        order = [F.col(order_col).desc()] if order_col else []
+        w = Window.partitionBy(*keys).orderBy(*order, F.col("_src").desc())
+        merged = (
+            unioned.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") == 1)
+            .drop("_rn", "_src")
+        )
+        merged.write.partitionBy(_BUCKET).parquet(staging)
+        # replace ONLY the touched bucket dirs; untouched dirs stay byte-identical
+        LOCAL.commit(root, [
+            (os.path.join(staging, f"{_BUCKET}={b}"), os.path.join(path, f"{_BUCKET}={b}"))
+            for b in touched
+        ])
     return spark.read.parquet(path).count()

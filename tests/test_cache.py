@@ -1,9 +1,11 @@
-"""Snapshot-cache install protocol: per-key builder locks."""
+"""Snapshot-cache install protocol: one build per key, across threads and
+processes."""
 
 from __future__ import annotations
 
 import os
 import shutil
+import subprocess
 import sys
 import threading
 import time
@@ -28,19 +30,9 @@ def _write_table(tmp: str) -> None:
         fh.write("x")
 
 
-def test_key_locks_not_kept_per_key(tmp_path, memo):
-    """Building many distinct keys leaves no lock behind for each of them."""
-    for i in range(5):
-        key = (str(tmp_path), "distinct", i)
-        path = cache.snapshot_path(memo, key, "realparse_test_locks_", _write_table)
-        assert os.path.isfile(os.path.join(path, "_SUCCESS"))
-    assert len(memo) == 5
-    assert not any(k[:2] == (str(tmp_path), "distinct") for k in cache._KEY_LOCKS.keys())
-
-
 def test_same_key_builders_serialize(tmp_path, memo):
     """Eight threads (more than the cores) asking for one key, switching
-    often: one build runs, never two at once, and no lock is left behind."""
+    often: one build runs, never two at once."""
     key = (str(tmp_path), "shared")
     active = builds = peak = 0
     guard = threading.Lock()
@@ -77,4 +69,44 @@ def test_same_key_builders_serialize(tmp_path, memo):
     assert not any(t.is_alive() for t in threads)
     assert builds == 1 and peak == 1
     assert len(got) == 8 and len(set(got)) == 1
-    assert key not in cache._KEY_LOCKS
+
+
+_BUILDER = """
+import os, sys, time
+from realparse_spark import cache
+
+log, key = sys.argv[1], tuple(sys.argv[2:])
+
+def build(tmp):
+    with open(log, "a") as fh:
+        fh.write(f"{os.getpid()}\\n")
+    time.sleep(1.0)
+    os.makedirs(tmp)
+    with open(os.path.join(tmp, "part-0"), "w") as fh:
+        fh.write("x")
+
+print(cache.snapshot_path({}, key, "realparse_test_locks_", build))
+"""
+
+
+def test_same_key_builders_serialize_across_processes(tmp_path):
+    """Two processes asking for one key at once: one builds, the other
+    waits for it and uses its snapshot."""
+    log = tmp_path / "builds"
+    procs = [
+        subprocess.Popen(
+            [sys.executable, "-c", _BUILDER, str(log), str(tmp_path), "shared"],
+            cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+            stdout=subprocess.PIPE, text=True,
+        )
+        for _ in range(2)
+    ]
+    outs = {p.communicate(timeout=60)[0].strip() for p in procs}
+    try:
+        assert [p.returncode for p in procs] == [0, 0]
+        assert len(log.read_text().split()) == 1
+        assert len(outs) == 1
+        assert {"part-0", "_SUCCESS"} <= set(os.listdir(next(iter(outs))))
+    finally:
+        for path in outs:
+            shutil.rmtree(path, ignore_errors=True)

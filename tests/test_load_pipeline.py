@@ -227,8 +227,9 @@ def test_watermark_reads_only_latest_date_partition(spark, tmp_path):
 def test_key_base_sidecar_pruned_and_crash_safe(spark, log_dir, tmp_path, monkeypatch):
     """The surrogate-key base must come from the `_max_key` sidecar (a
     one-line read — at 100 TB a table-property GET), never a full-table
-    `max(access_id)` scan; the sidecar is a RESERVATION written before any
-    append, so a crashed load burns ids but can never collide."""
+    `max(access_id)` scan; the sidecar is published by the same commit as
+    the rows it covers, so a crashed load publishes neither: it burns no
+    ids and can never collide."""
     from realparse_spark.operators import load as L
 
     wh = str(tmp_path / "wh_key")
@@ -237,7 +238,7 @@ def test_key_base_sidecar_pruned_and_crash_safe(spark, log_dir, tmp_path, monkey
     hi = access.agg(F.max("access_id").alias("m")).collect()[0].m
     assert L._next_key_base(wh) == hi + 1  # takes no SparkSession: no table scan
 
-    # crash between reservation and append: ids are burned, never reused
+    # crash at the access append: nothing is published, no id is burned
     with open(os.path.join(log_dir, "rmaccess.log.20021015"), "w") as fh:
         fh.write(style5_line("10.0.0.7", "15/Oct/2002:08:00:00", "/media/c/five.rm") + "\n")
     real_append = L._append
@@ -251,7 +252,7 @@ def test_key_base_sidecar_pruned_and_crash_safe(spark, log_dir, tmp_path, monkey
     with pytest.raises(RuntimeError):
         L.load_style5(spark, log_dir, wh)
     monkeypatch.undo()
-    assert L._next_key_base(wh) > hi  # reservation survived the crash
+    assert L._next_key_base(wh) == hi + 1
 
     counts = L.load_style5(spark, log_dir, wh)
     assert counts["access"] == 1
@@ -438,7 +439,21 @@ def test_cycle_that_keys_no_line(spark, tmp_path, bad_lines):
     assert load_weblog(spark, str(d), wh) == no_rows(WEB_TABLES, bad_lines)
 
     assert not os.path.exists(_max_key_path(wh))
-    tables = {f.split(os.sep)[0] for f in warehouse_files(wh)}
+    # `_`-prefixed entries are not tables: the `_lease` lock file stays by design
+    tables = {f.split(os.sep)[0] for f in warehouse_files(wh) if not f.startswith("_")}
     assert tables == ({"components", "quarantine"} if bad_lines else {"components"})
     if bad_lines:
         assert read_warehouse_table(spark, wh, "quarantine").count() == 2 * bad_lines
+
+
+def test_read_warehouse_table_errors_propagate(spark, tmp_path):
+    """A table with no data file reads as None ("run a load first"); a table
+    whose data cannot be read raises instead of passing for a missing one."""
+    wh = tmp_path / "wh"
+    assert read_warehouse_table(spark, str(wh), "access") is None
+    (wh / "access").mkdir(parents=True)
+    (wh / "access" / "_SUCCESS").write_text("")
+    assert read_warehouse_table(spark, str(wh), "access") is None
+    (wh / "access" / "part-00000.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Exception, match="(?i)parquet|footer"):
+        read_warehouse_table(spark, str(wh), "access")
