@@ -10,12 +10,12 @@ operations (plus the engine-native extras) as subcommands of
     load-web     web_parse.pl    — incremental Caudium load (.wma/.wmv)
     report       pull_report.pl  — per-customer formatted report to stdout
     open-log     open_log.pl     — parse a log file and print fields (no writes)
-    stream-load  (engine-native) — the same load as an availableNow stream
+    compact      (engine-native) — rewrite a parquet table into fewer files
     query        (engine-native) — run any registered analytics query
 
 The CLI is a THIN shell: every subcommand calls the same library function
 the tests and the driver contract exercise (`load_style5`, `load_weblog`,
-`pull_report`, `parse_*`, `stream_load_access`, `registry.all_queries`) —
+`pull_report`, `parse_*`, `compact_table`, `registry.all_queries`) —
 no logic lives here, so cron invocation and programmatic use cannot drift.
 """
 
@@ -23,7 +23,6 @@ from __future__ import annotations
 
 import argparse
 import json
-import os
 import sys
 from collections.abc import Sequence
 
@@ -62,12 +61,6 @@ def build_parser() -> argparse.ArgumentParser:
         "--parser", choices=("style5", "positional", "web"), default="style5"
     )
     ol.add_argument("--limit", type=int, default=20)
-
-    sl = sub.add_parser("stream-load", help="availableNow streaming load")
-    sl.add_argument("--log-dir", required=True)
-    sl.add_argument("--warehouse", required=True)
-    sl.add_argument("--checkpoint", required=True)
-    sl.add_argument("--prefix", default="rmaccess")
 
     cp = sub.add_parser("compact", help="compact a parquet table's small files")
     cp.add_argument("--path", required=True)
@@ -165,28 +158,6 @@ def cmd_open_log(args, spark: SparkSession) -> int:
     return 0
 
 
-def cmd_stream_load(args, spark: SparkSession) -> int:
-    from realparse_spark.streaming.pipeline import stream_load_access
-
-    # sink under <warehouse>/access so read_warehouse_table (and any
-    # access-table consumer) sees the same layout as a batch-loaded
-    # warehouse.  (`report` additionally needs the `file` table, which the
-    # streaming loader does not produce — use load-real for full reports.)
-    # NOTE: checkpoints created before this layout change keep their
-    # committed offsets; re-running over an old checkpoint skips the
-    # already-processed files and reports 0 new rows — point --checkpoint
-    # at a fresh directory to re-ingest under the new layout.
-    out = os.path.join(args.warehouse, "access")
-    stream_load_access(
-        spark, args.log_dir, out, args.checkpoint, prefix=args.prefix
-    ).awaitTermination()
-    from realparse_spark.operators.load import read_warehouse_table
-
-    df = read_warehouse_table(spark, args.warehouse, "access")
-    print(json.dumps({"access_rows": 0 if df is None else df.count()}))
-    return 0
-
-
 def cmd_compact(args, spark: SparkSession) -> int:
     from realparse_spark.operators.compact import compact_table, table_file_stats
 
@@ -234,7 +205,6 @@ _COMMANDS = {
     "load-web": cmd_load_web,
     "report": cmd_report,
     "open-log": cmd_open_log,
-    "stream-load": cmd_stream_load,
     "compact": cmd_compact,
     "query": cmd_query,
 }

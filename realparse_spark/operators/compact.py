@@ -120,8 +120,8 @@ def compact_table(
             )
         w.parquet(staging)
 
-        # table sidecars (the loader's `_max_key`, the upsert's meta) are not
-        # data files: carry them into the rewrite, or the commit would drop them
+        # a table sidecar (the upsert's `_upsert_meta.json`, the only one) is
+        # not a data file: carry it into the rewrite, or the commit drops it
         for name in LOCAL.list_dir(path):
             src, dst = os.path.join(path, name), os.path.join(staging, name)
             if name.startswith("_") and not LOCAL.is_dir(src) and not LOCAL.exists(dst):

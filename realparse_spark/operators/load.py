@@ -17,22 +17,25 @@ real_parse.pl:47-52).  Spark shape:
 No count is a job of its own.  Each is an `Observation`, filled by an action
 that runs anyway or by a single-job pass into the `noop` sink:
 
-    watermark pass   max(datetime) of the family's latest date partition
-    keyed pass       quarantined lines and max(access_id); fills both
-                     caches, so the text is scanned once
-    each append      the rows it wrote
+    keyed pass   quarantined lines, max(access_id) and max(epoch); fills
+                 both caches, so the text is scanned once
+    each append  the rows it wrote
 
-A cycle is therefore two jobs plus one per table it writes.  (A `count()`
+A cycle is therefore one job plus one per table it writes.  (A `count()`
 or an aggregate `collect()` would cost 2-3 jobs each under AQE.)  The whole
 load is shuffle-free; at 100 TB the only cost is the scan and the N
 columnar writes, all from one cached parse.
 
-A cycle holds the warehouse's writer lease (fs.py) from before its
-watermark read to its end, as the reference holds `LOCK TABLES`
-(real_parse.pl:43-44,192-193).  Every append, the quarantined lines and
-the `_max_key` sidecar go to the lease's stage, and one commit publishes
-them.  A second loader waits and then finds nothing new; a cycle that dies
-publishes nothing, so its re-run loads the same lines.
+What has been loaded lives in one record, `<warehouse>/_state`:
+`{"max_key": int, "watermark": {"<server_type>": epoch}}` -- the highest
+surrogate key handed out and each family's high-watermark (the reference's
+auto-increment and `SELECT MAX(datetime)`).  A cycle holds the warehouse's
+writer lease (fs.py) from its state read to its end, as the reference
+holds `LOCK TABLES` (real_parse.pl:43-44,192-193).  Every append, the
+quarantined lines and the updated `_state` go to the lease's stage, and
+one commit publishes them, so the rows and the progress that covers them
+appear together.  A second loader waits and then finds nothing new; a
+cycle that dies publishes nothing, so its re-run loads the same lines.
 
 Key semantics preserved from the reference: late rows (epoch <= watermark)
 are silently dropped, ties included (real_parse.pl:93 strict `>`), and
@@ -42,6 +45,7 @@ the watermark).
 
 from __future__ import annotations
 
+import json
 import os
 from collections.abc import Callable
 from contextlib import ExitStack
@@ -104,53 +108,22 @@ def read_warehouse_table(spark: SparkSession, warehouse: str, name: str) -> Data
     return spark.read.parquet(path)
 
 
-def _family_watermark(spark: SparkSession, warehouse: str, server_type: int) -> int | None:
-    """F1/F2 — max loaded epoch for one source family (real_parse.pl:47 vs
-    web_parse.pl:42; the logging_style NULLness discriminator maps 1:1 to
-    the server_type partition value, 1=real / 0=web).
-
-    Scale shape: the access layout is partitioned by (server_type,
-    access_date), and the max datetime can only live in the
-    lexicographically-latest date partition of the family — so the read is
-    ONE partition directory, not a full-family scan (at 100 TB a cron-run
-    watermark fetch must not scan years of history).  Crash-safe by
-    construction: derived from the data itself, no sidecar to desync."""
-    stdir = os.path.join(_table_path(warehouse, "access"), f"server_type={server_type}")
-    if not LOCAL.is_dir(stdir):
-        return None
-    dates = sorted(
-        e.split("=", 1)[1] for e in LOCAL.list_dir(stdir) if e.startswith("access_date=")
-    )
-    if not dates:
-        return None
-    # the explicit schema reads the one column and skips schema inference
-    latest = spark.read.schema("datetime timestamp").parquet(
-        os.path.join(stdir, f"access_date={dates[-1]}")
-    )
-    return _scan(latest, wm=F.max(F.unix_timestamp("datetime")))["wm"]
+def _state_path(warehouse: str) -> str:
+    return os.path.join(warehouse, "_state")
 
 
-def _max_key_path(warehouse: str) -> str:
-    # underscore prefix: invisible to Spark's parquet listing (like _SUCCESS)
-    return os.path.join(_table_path(warehouse, "access"), "_max_key")
-
-
-def _next_key_base(warehouse: str) -> int:
-    """A2/J2 — the auto-increment base for this run's surrogate keys.
-
-    Scale shape: the base comes from a one-line `_max_key` sidecar (a small
-    GET; maps to a table property at 100 TB — see fs.py), NOT from a
-    `max(access_id)` aggregate, which would be a full-table column scan per
-    cron run — the exact anti-pattern the watermark fetch already avoids
-    (`_family_watermark` reads one date directory).  The cycle stages the
-    sidecar with its appends and one commit publishes both, so the base
-    and the rows below it appear together; a cycle that dies publishes
-    neither and burns no ids.  No sidecar therefore means no access row
-    has been written yet."""
-    p = _max_key_path(warehouse)
+def _read_state(warehouse: str) -> dict:
+    """The warehouse's load progress (see the module docstring); a
+    warehouse that no cycle has keyed a line into starts at key 0 with no
+    watermark.  One that has `access` rows but no `_state` is refused:
+    starting it over would reuse ids and reload already-loaded lines."""
+    p = _state_path(warehouse)
     if LOCAL.exists(p):
-        return int(LOCAL.read_text(p).strip()) + 1
-    return 0
+        return json.loads(LOCAL.read_text(p))
+    if LOCAL.exists(_table_path(warehouse, "access")):
+        raise ValueError(f"{p} is missing but the warehouse holds access rows; "
+                         "its load progress is unknown")
+    return {"max_key": -1, "watermark": {}}
 
 
 def _load_cycle(
@@ -174,6 +147,9 @@ def _load_cycle(
     Returns per-table insert counts plus the quarantined-line count."""
     with ExitStack() as held:
         stage = held.enter_context(LOCAL.lease(warehouse))
+        state = _read_state(warehouse)
+        family = str(server_type)
+        wm = state["watermark"].get(family)
 
         def persist(df: DataFrame) -> DataFrame:
             df = df.persist()
@@ -185,8 +161,6 @@ def _load_cycle(
         # branch off this one DF; without the cache each branch would
         # re-scan and re-regex the raw text.
         parsed = persist(parse(read_log_lines(spark, log_dir, prefix, latest), line_col="value"))
-        wm = _family_watermark(spark, warehouse, server_type)
-        base = _next_key_base(warehouse)
 
         # Quarantine: a line whose timestamp failed to parse (epoch NULL)
         # cannot pass any watermark and would silently vanish; at 100 TB
@@ -201,16 +175,17 @@ def _load_cycle(
         # gaps).  `keyed` is persisted so that the appends' plans hold no
         # per-cycle literal (`wm`, `base`): their generated code is then
         # the same every cycle and compiles once per process.
+        base = state["max_key"] + 1
         keyed = persist(good.withColumn("access_id", F.lit(base) + F.monotonically_increasing_id()))
 
-        # The keyed pass fills both caches and both observations.
-        hi = _scan(keyed, hi=F.max("access_id"))["hi"]
+        # The keyed pass fills both caches and all three observations.
+        top = _scan(keyed, max_key=F.max("access_id"), wm=F.max("epoch"))
         n_bad = seen.get["bad"]
         counts = dict.fromkeys(tables, 0) | {"quarantine": n_bad}
         if n_bad:
             _append(parsed.filter(F.col("epoch").isNull()).select("value", "source_file"),
                     stage, "quarantine")
-        if hi is not None:
+        if top["max_key"] is not None:
             access = keyed.select(
                 "access_id", "client_ip_address", "identuser", "authuser",
                 F.to_timestamp("datetime").alias("datetime"), "gmt_offset",
@@ -221,9 +196,10 @@ def _load_cycle(
             )
             for name, rows in [("access", access), *children(keyed)]:
                 counts[name] = _append(rows, stage, name)
-            LOCAL.write_text(_max_key_path(stage), str(hi))
+            state = {"max_key": top["max_key"], "watermark": state["watermark"] | {family: top["wm"]}}
+            LOCAL.write_text(_state_path(stage), json.dumps(state))
         # one commit puts each staged file at its place in the warehouse:
-        # part files join their tables, `_max_key` replaces its old value
+        # part files join their tables, `_state` replaces its old value
         LOCAL.commit(warehouse, [
             (p, os.path.join(warehouse, os.path.relpath(p, stage)))
             for p, _size in LOCAL.data_files(stage, suffix="")
@@ -353,8 +329,8 @@ def _append(df: DataFrame, root: str, name: str) -> int:
     cycle's stage); replaces per-row INSERT round-trips.
     Returns the rows written, observed in the append's own job.
     `access` is partitioned by (server_type, access_date): the F2 family
-    discriminator, time-range reports, AND the per-run watermark read all
-    prune to a handful of partitions instead of scanning the table."""
+    discriminator and time-range reports prune to a handful of partitions
+    instead of scanning the table."""
     df, obs = _observed(df, n=F.count(F.lit(1)))
     writer = df.write.mode("append")
     if name == "access":

@@ -1,29 +1,21 @@
-"""Driver-visible Structured Streaming lifecycle query (SURVEY.md §2.8).
+"""Driver-visible Structured Streaming lifecycle queries (SURVEY.md §2.8).
 
-Puts the streaming incremental load (`streaming/pipeline.py:45`,
-`stream_load_access`) under the DuckDB oracle in one CORRECTNESS row —
-the streaming counterpart of `load_query.q_load_e2e`, covering the
-reference's cron re-read semantics (real_parse.pl:27-28,47-52) with the
-file-source checkpoint instead of the manual high-watermark:
+Each `q_stream_*_e2e` puts one streaming analytic of
+`streaming/pipeline.py` under the DuckDB oracle in one CORRECTNESS row:
 
-1. synthesize two rotated style-5 log files from the ``events`` table
-   (deterministic, same arithmetic as the parse oracles);
-2. run the availableNow stream over rotation 1 (backfill);
-3. drop rotation 2 into the same directory and run again with the SAME
-   checkpoint: the file source's processed-file log makes the second run
-   read ONLY the new file — exactly-once per file, no manual watermark;
-4. read the parquet sink back and aggregate per path.
+1. synthesize rotated style-5 log files (or JSON document batches) from
+   the sf tables (deterministic, same arithmetic as the parse oracles);
+2. run an availableNow stream over the first rotation;
+3. (most lifecycles) drop the next rotation into the same directory and
+   run again with the SAME checkpoint, so the file source reads only the
+   new file;
+4. read the sink back and aggregate it.
 
-The oracle aggregates the same synthesized lines directly: any double-load
-(rotation 1 re-processed), dropped file, or parse divergence breaks the
-row-count/value-hash compare.  The stream's row-level
-``dropDuplicates([client_ip_address, event_ts])`` is a provable no-op on
-this corpus — (ip, second) is unique by construction
-(`tests/test_streaming_query.py` asserts it) — so the oracle needs no
-dedup mirror.
+None of them loads a warehouse: the cron cycle (`operators/load.py`) is
+the only writer of warehouse tables.
 
-The final aggregate is parked in a session-lifetime temp parquet
-(`load_query.persist_result`) so the synthesized corpus + warehouse can be
+Each final aggregate is parked in a session-lifetime temp parquet
+(`load_query.persist_result`) so the synthesized corpus and sink can be
 deleted immediately (no /tmp leak per run — the bench harness invokes each
 query repeatedly) WITHOUT funneling the result through driver memory.
 """
@@ -37,49 +29,9 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from realparse_spark.operators.load_query import (
-    LOAD_E2E_SQL,
-    _write_rotation,
-    persist_result,
-)
+from realparse_spark.operators.load_query import _write_rotation, persist_result
 from realparse_spark.operators.parse_queries import synth_style5
 from realparse_spark.sources.tables import load_table
-from realparse_spark.streaming.pipeline import stream_load_access
-
-
-def q_stream_load_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = load_table(spark, sf_dir, "events")
-    # lifecycle split on event time (same boundary rule as q_load_e2e): the
-    # split only decides which file each line lands in, never the final table
-    split = events.agg(F.avg(F.unix_timestamp("ts"))).collect()[0][0]
-    older = synth_style5(events.filter(F.unix_timestamp("ts") <= split))
-    newer = synth_style5(events.filter(F.unix_timestamp("ts") > split))
-
-    root = tempfile.mkdtemp(prefix="realparse_stream_e2e_")
-    try:
-        logs = os.path.join(root, "logs")
-        os.makedirs(logs)
-        wh = os.path.join(root, "wh")
-        ck = os.path.join(root, "ck")
-
-        _write_rotation(older, root, logs, "rmaccess.log.20021011")
-        stream_load_access(spark, logs, wh, ck).awaitTermination()  # run 1: backfill
-        _write_rotation(newer, root, logs, "rmaccess.log.20021012")
-        stream_load_access(spark, logs, wh, ck).awaitTermination()  # run 2:
-        # rotation 1 is still in the directory, but the checkpoint's
-        # processed-file log skips it — exactly-once without re-read filters
-
-        access = spark.read.parquet(wh)
-        out = access.groupBy("path").agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum("bytes_sent").alias("sum_bytes"),
-            F.count_distinct("client_ip_address").alias("n_ips"),
-            F.max(F.date_format("datetime", "yyyy-MM-dd HH:mm:ss")).alias("max_dt"),
-        )
-        # park the aggregate outside the temp tree (no driver materialization)
-        return persist_result(out)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def q_stream_window_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -224,9 +176,9 @@ def q_stream_upsert_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     (§2.8): run 2's rotation REDELIVERS every run-1 line (it contains the
     full corpus), and the keyed upsert converges the table to exactly one
     row per (client_ip_address, event_ts) anyway.  This is the
-    exactly-once path for sources that cannot checkpoint: contrast with
-    `stream_load_e2e`, where the file-source checkpoint prevents the
-    re-read instead.
+    exactly-once path for sources that cannot checkpoint: the other
+    lifecycles rely on the file-source checkpoint to prevent the re-read
+    instead.
 
     The oracle aggregates the distinct synthesized lines directly — any
     duplicate surviving the merge, or any line lost to it, breaks the
@@ -924,7 +876,6 @@ ORDER BY window_start, rk
 
 
 QUERIES = {
-    "stream_load_e2e": q_stream_load_e2e,
     "stream_topk_e2e": q_stream_topk_e2e,
     "stream_quality_route_e2e": q_stream_quality_route_e2e,
     "stream_enrich_e2e": q_stream_enrich_e2e,
@@ -942,7 +893,6 @@ ORACLES = {
     "stream_dedup_e2e": STREAM_DEDUP_E2E_SQL,
     "stream_session_e2e": STREAM_SESSION_E2E_SQL,
     "stream_custom_state_e2e": STREAM_CUSTOM_STATE_E2E_SQL,
-    "stream_load_e2e": LOAD_E2E_SQL,
     "stream_window_e2e": STREAM_WINDOW_E2E_SQL,
     "stream_upsert_e2e": STREAM_UPSERT_E2E_SQL,
     "stream_join_e2e": STREAM_JOIN_E2E_SQL,

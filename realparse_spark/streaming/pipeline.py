@@ -1,18 +1,20 @@
-"""Structured Streaming incremental pipeline (SURVEY.md §2.8, §7.1 M4).
+"""Structured Streaming analytics over rotated log files (SURVEY.md §2.8,
+§7.1 M4).
 
-The reference's cron-style incremental load (watermark + last-2-files
-re-read, real_parse.pl:27-52) maps onto Spark's file-source streaming:
+Windowed views, sessions, keyed upserts, joins, enrichment, term counts
+and document dedup/routing, each computed by a stream into its own sink:
 
-- the file source tracks processed files in the checkpoint -> exactly-once
-  per file, replacing the manual high-watermark re-read dance;
-- `withWatermark` + `dropDuplicates` replaces the strictly-greater
-  timestamp filter for row-level late/duplicate handling;
 - the same parse operators run unchanged on the streaming DataFrame —
-  one code path for batch and streaming (the point of the DataFrame API).
+  one code path for batch and streaming (the point of the DataFrame API);
+- the file source tracks processed files in the checkpoint, so each view
+  reads every rotated file once;
+- `withWatermark` bounds the state of windows, sessions and dedup and
+  drops rows later than the declared delay.
 
 `Trigger.AvailableNow` gives the cron-batch behavior: process everything
-new, then stop — exactly the reference's operating mode, but restartable
-and exactly-once.
+new, then stop.  None of these streams writes a warehouse table: the
+batch cron cycle (`operators/load.py`) is their only writer, and
+`<warehouse>/_state` its only progress record.
 """
 
 from __future__ import annotations
@@ -83,41 +85,6 @@ def parsed_stream(lines: DataFrame) -> DataFrame:
     downstream watermarks (the streaming analog of F1's late-data drop)."""
     parsed = parse_style5(lines)
     return parsed.withColumn("event_ts", F.to_timestamp("datetime"))
-
-
-def stream_load_access(
-    spark: SparkSession,
-    log_dir: str,
-    warehouse_dir: str,
-    checkpoint_dir: str,
-    prefix: str = "rmaccess",
-):
-    """Incremental access-table load: availableNow trigger, parquet sink,
-    exactly-once via checkpoint.  Returns the StreamingQuery (caller
-    awaits termination)."""
-    lines = stream_log_lines(spark, log_dir, prefix)
-    access = (
-        parsed_stream(lines)
-        .withWatermark("event_ts", "1 hour")
-        .dropDuplicates(["client_ip_address", "event_ts"])  # row-level dedup
-        .select(
-            "client_ip_address", "identuser", "authuser",
-            F.col("event_ts").alias("datetime"), "gmt_offset",
-            F.lit(5).alias("logging_style"), F.lit(7).alias("stats_mask"),
-            F.lit(1).alias("server_type"),
-            "status_code", "bytes_sent", "file_time", "sent_time", "name", "path",
-        )
-    )
-    return _start_scaled(
-        spark,
-        (
-            access.writeStream.format("parquet")
-            .option("path", warehouse_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .outputMode("append")
-        ),
-    )
 
 
 def stream_windowed_views(

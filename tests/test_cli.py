@@ -102,10 +102,10 @@ def test_cli_query_list_and_run(spark, sf_dir, capsys):
     assert "Physical Plan" in out and "Scan parquet" in out
 
 
-def test_cli_load_web_and_stream_load(spark, sf_dir, tmp_path, capsys):
-    """The web_parse.pl analog and the streaming loader through the CLI:
-    load-web filters to .wma/.wmv lines; stream-load is exactly-once
-    across two invocations sharing a checkpoint."""
+def test_cli_load_web_and_rerun(spark, sf_dir, tmp_path, capsys):
+    """The web_parse.pl analog and two cron runs through the CLI: load-web
+    filters to .wma/.wmv lines; two load-real invocations on one warehouse
+    load each line once."""
     from realparse_spark.operators.parse_queries import synth_style5, synth_weblog
     from realparse_spark.sources.tables import load_table
 
@@ -124,17 +124,16 @@ def test_cli_load_web_and_stream_load(spark, sf_dir, tmp_path, capsys):
     counts = json.loads(out.strip().splitlines()[-1])
     assert 0 < counts["access"] <= 30  # .wma/.wmv filter applied
 
-    logs = tmp_path / "slogs"
+    logs = tmp_path / "rlogs"
     logs.mkdir()
     _write_lines(spark, synth_style5(events), str(logs / "rmaccess.log.1"))
-    args = ["stream-load", "--log-dir", str(logs), "--warehouse",
-            str(tmp_path / "whs"), "--checkpoint", str(tmp_path / "ck")]
+    args = ["load-real", "--log-dir", str(logs), "--warehouse", str(tmp_path / "whr")]
     rc = main(args, spark=spark)
-    n1 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])["access_rows"]
+    n1 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])["access"]
     assert rc == 0 and n1 == 30
-    rc = main(args, spark=spark)  # re-run: checkpoint skips the processed file
-    n2 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])["access_rows"]
-    assert rc == 0 and n2 == 30
+    rc = main(args, spark=spark)  # re-run: the watermark drops every loaded line
+    n2 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])["access"]
+    assert rc == 0 and n2 == 0
 
 
 def test_cli_compact(spark, sf_dir, tmp_path, capsys):

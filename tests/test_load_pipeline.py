@@ -3,6 +3,7 @@ files -> parse -> watermark -> star-schema parquet warehouse."""
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
@@ -39,6 +40,12 @@ def web_line(ts: str, fname: str) -> str:
 
 def no_rows(tables, quarantine=0) -> dict[str, int]:
     return dict.fromkeys(tables, 0) | {"quarantine": quarantine}
+
+
+def load_state(wh: str) -> dict:
+    """The warehouse's `_state` record: max_key and per-family watermarks."""
+    with open(os.path.join(wh, "_state")) as fh:
+        return json.load(fh)
 
 
 def warehouse_files(wh: str) -> set[str]:
@@ -119,12 +126,10 @@ def test_style5_load_and_idempotence(spark, log_dir, tmp_path):
             assert child <= ids, t
 
     # re-run: every line is a tie or late, the watermark drops them all and
-    # the cycle appends nothing, not even a key reservation (F1 idempotence)
-    from realparse_spark.operators.load import _next_key_base
-
-    before, key_base = warehouse_files(wh), _next_key_base(wh)
+    # the cycle appends nothing, not even a new `_state` (F1 idempotence)
+    before, state = warehouse_files(wh), load_state(wh)
     assert load_style5(spark, log_dir, wh) == no_rows(ACCESS_TABLES)
-    assert warehouse_files(wh) == before and _next_key_base(wh) == key_base
+    assert warehouse_files(wh) == before and load_state(wh) == state
     assert read_warehouse_table(spark, wh, "access").count() == 3
 
     # new rotated file with strictly newer rows -> only those load
@@ -173,70 +178,18 @@ def test_load_single_scan(spark, tmp_path):
     assert delta < 1.8 * log_bytes, f"read {delta} bytes for a {log_bytes}-byte corpus"
 
 
-def test_watermark_reads_only_latest_date_partition(spark, tmp_path):
-    """The per-run watermark fetch must read ONE (server_type, access_date)
-    partition dir, not scan the whole family: with a large old-date
-    partition and a tiny new-date one, the bytes read by _family_watermark
-    must stay far below the old partition's size."""
-    from realparse_spark.operators.load import _family_watermark
-
-    d = tmp_path / "wmlogs"
-    d.mkdir()
-    old = [
-        style5_line(f"10.0.{i % 256}.{i % 250}", f"11/Oct/2002:09:{i % 60:02d}:{i % 60:02d}",
-                    f"/media/x/old{i}.rm", stats=STATS_FULL)
-        for i in range(6000)
-    ]
-    (d / "rmaccess.log.20021011").write_text("\n".join(old) + "\n")
-    wh = str(tmp_path / "wh_wm")
-    load_style5(spark, str(d), wh)
-
-    (d / "rmaccess.log.20021012").write_text(
-        style5_line("10.0.0.9", "12/Oct/2002:10:00:00", "/media/x/new.rm", stats=STATS_FULL) + "\n"
-    )
-    load_style5(spark, str(d), wh)
-
-    access_dir = os.path.join(wh, "access", "server_type=1")
-    sizes = {
-        p: sum(
-            os.path.getsize(os.path.join(r, f))
-            for r, _dirs, files in os.walk(os.path.join(access_dir, p))
-            for f in files if f.endswith(".parquet")
-        )
-        for p in os.listdir(access_dir) if p.startswith("access_date=")
-    }
-    assert len(sizes) == 2
-    old_bytes = sizes["access_date=2002-10-11"]
-
-    jvm = spark.sparkContext._jvm
-    def file_bytes_read():
-        return sum(
-            s.getBytesRead()
-            for s in jvm.org.apache.hadoop.fs.FileSystem.getAllStatistics()
-            if s.getScheme() == "file"
-        )
-
-    before = file_bytes_read()
-    wm = _family_watermark(spark, wh, 1)
-    delta = file_bytes_read() - before
-    assert wm is not None
-    # reading the big old partition would cost >= old_bytes
-    assert delta < 0.5 * old_bytes, (delta, old_bytes)
-
-
-def test_key_base_sidecar_pruned_and_crash_safe(spark, log_dir, tmp_path, monkeypatch):
-    """The surrogate-key base must come from the `_max_key` sidecar (a
-    one-line read — at 100 TB a table-property GET), never a full-table
-    `max(access_id)` scan; the sidecar is published by the same commit as
-    the rows it covers, so a crashed load publishes neither: it burns no
-    ids and can never collide."""
+def test_state_record_crash_safe(spark, log_dir, tmp_path, monkeypatch):
+    """The surrogate-key base comes from `_state` (a one-line read — at
+    100 TB a table-property GET), never a full-table `max(access_id)` scan;
+    `_state` is published by the same commit as the rows it covers, so a
+    crashed load publishes neither: it burns no ids and can never collide."""
     from realparse_spark.operators import load as L
 
     wh = str(tmp_path / "wh_key")
     L.load_style5(spark, log_dir, wh)
     access = read_warehouse_table(spark, wh, "access")
     hi = access.agg(F.max("access_id").alias("m")).collect()[0].m
-    assert L._next_key_base(wh) == hi + 1  # takes no SparkSession: no table scan
+    assert load_state(wh)["max_key"] == hi
 
     # crash at the access append: nothing is published, no id is burned
     with open(os.path.join(log_dir, "rmaccess.log.20021015"), "w") as fh:
@@ -252,7 +205,7 @@ def test_key_base_sidecar_pruned_and_crash_safe(spark, log_dir, tmp_path, monkey
     with pytest.raises(RuntimeError):
         L.load_style5(spark, log_dir, wh)
     monkeypatch.undo()
-    assert L._next_key_base(wh) == hi + 1
+    assert load_state(wh)["max_key"] == hi
 
     counts = L.load_style5(spark, log_dir, wh)
     assert counts["access"] == 1
@@ -323,22 +276,10 @@ def test_weblog_load(spark, tmp_path):
     assert load_weblog(spark, str(d), wh) == no_rows(WEB_TABLES)
 
 
-def test_watermark_empty_family_dir_is_none(spark, tmp_path):
-    """A family directory with no access_date partitions holds no loaded
-    line, so it reports no watermark."""
-    from realparse_spark.operators.load import _family_watermark
-
-    wh = str(tmp_path / "wh_empty")
-    os.makedirs(os.path.join(wh, "access", "server_type=1"))
-    assert _family_watermark(spark, wh, 1) is None
-
-
 def test_mixed_family_warehouse(spark, log_dir, tmp_path):
     """style-5, then web, then style-5 again into ONE warehouse: the two
     families share the surrogate-key sequence but keep separate watermarks
     and their own server_type/logging_style/stats_mask literals."""
-    from realparse_spark.operators.load import _family_watermark
-
     # one web line older than every style-5 line (it loads only if the web
     # watermark ignores style-5 rows), one newer than all of them
     with open(os.path.join(log_dir, "log.1"), "w") as fh:
@@ -375,16 +316,21 @@ def test_mixed_family_warehouse(spark, log_dir, tmp_path):
         .collect()
     }
     assert family_max[1] < family_max[0]
-    assert _family_watermark(spark, wh, 1) == family_max[1]
-    assert _family_watermark(spark, wh, 0) == family_max[0]
+    max_id = access.agg(F.max("access_id")).collect()[0][0]
+    assert load_state(wh) == {
+        "max_key": max_id, "watermark": {str(k): v for k, v in family_max.items()},
+    }
+    # progress lives in `_state` alone: no sidecar inside the access table
+    # (`_SUCCESS` is the parquet writer's job marker, not a record)
+    assert {f for f in os.listdir(os.path.join(wh, "access")) if f.startswith("_")} <= {"_SUCCESS"}
 
 
 def test_cycle_job_budget(spark, tmp_path):
     """Every count of a cycle is observed on a job that runs anyway.  With a
-    watermark in place and one malformed line, a style-5 cycle is two
-    observed passes (watermark, keyed lines) plus eight appends, and a web
-    cycle two plus four.  A bookkeeping count() or collect() would add 2-3
-    jobs each under AQE."""
+    watermark in place and one malformed line, a style-5 cycle is one
+    observed pass plus one job per append (eight), and a web cycle one plus
+    four.  A bookkeeping count() or collect() would add 2-3 jobs each under
+    AQE."""
     d = tmp_path / "logs"
     d.mkdir()
     wh = str(tmp_path / "wh")
@@ -416,19 +362,17 @@ def test_cycle_job_budget(spark, tmp_path):
     counts, n = jobs("budget-style5", load_style5)
     # STATS_FULL carries Stat1 and Stat2 only: stats_mask3 observes no row
     assert counts == no_rows(ACCESS_TABLES, quarantine=1) | dict.fromkeys(ACCESS_TABLES[:6], 1)
-    assert n <= 11, n
+    assert n <= 9, n
     counts, n = jobs("budget-web", load_weblog)
     assert counts == no_rows(WEB_TABLES, quarantine=1) | dict.fromkeys(WEB_TABLES, 1)
-    assert n <= 7, n
+    assert n <= 5, n
 
 
 @pytest.mark.parametrize("bad_lines", [0, 2])
 def test_cycle_that_keys_no_line(spark, tmp_path, bad_lines):
     """A cycle whose keyed pass sees no row (an empty log directory, or a
-    file of malformed lines only) returns zero counts, reserves no keys and
-    appends nothing but its quarantined lines."""
-    from realparse_spark.operators.load import _max_key_path
-
+    file of malformed lines only) returns zero counts, writes no `_state`
+    and appends nothing but its quarantined lines."""
     d = tmp_path / "logs"
     d.mkdir()
     wh = str(tmp_path / "wh")
@@ -438,12 +382,25 @@ def test_cycle_that_keys_no_line(spark, tmp_path, bad_lines):
     assert load_style5(spark, str(d), wh) == no_rows(ACCESS_TABLES, bad_lines)
     assert load_weblog(spark, str(d), wh) == no_rows(WEB_TABLES, bad_lines)
 
-    assert not os.path.exists(_max_key_path(wh))
+    assert not os.path.exists(os.path.join(wh, "_state"))
     # `_`-prefixed entries are not tables: the `_lease` lock file stays by design
     tables = {f.split(os.sep)[0] for f in warehouse_files(wh) if not f.startswith("_")}
     assert tables == ({"components", "quarantine"} if bad_lines else {"components"})
     if bad_lines:
         assert read_warehouse_table(spark, wh, "quarantine").count() == 2 * bad_lines
+
+
+def test_warehouse_without_state_is_refused(spark, log_dir, tmp_path):
+    """A warehouse with `access` rows but no `_state` has unknown progress:
+    starting it from key 0 and no watermark would reuse ids and reload
+    loaded lines, so the cycle raises and publishes nothing."""
+    wh = str(tmp_path / "wh_nostate")
+    load_style5(spark, log_dir, wh)
+    os.remove(os.path.join(wh, "_state"))
+    before = {f: os.path.getmtime(os.path.join(wh, f)) for f in warehouse_files(wh)}
+    with pytest.raises(ValueError, match="_state"):
+        load_style5(spark, log_dir, wh)
+    assert {f: os.path.getmtime(os.path.join(wh, f)) for f in warehouse_files(wh)} == before
 
 
 def test_read_warehouse_table_errors_propagate(spark, tmp_path):

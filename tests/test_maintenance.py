@@ -88,9 +88,9 @@ def test_compact_partitioned_splits_hot_partition(spark, tmp_path):
 
 
 def test_compact_access_keeps_key_reservation(spark, tmp_path):
-    """Compacting the loader's access table (partition layout kept) carries
-    its `_max_key` reservation over, so the next load's surrogate keys stay
-    disjoint from the compacted rows."""
+    """Compacting the loader's access table (partition layout kept) leaves
+    the warehouse's `_state` untouched, so the next load's surrogate keys
+    stay disjoint from the compacted rows."""
     d = tmp_path / "clogs"
     d.mkdir()
     (d / "rmaccess.log.1").write_text(
@@ -101,9 +101,12 @@ def test_compact_access_keeps_key_reservation(spark, tmp_path):
     )
     wh = str(tmp_path / "cwh")
     load_style5(spark, str(d), wh)
-    access_path = os.path.join(wh, "access")
+    access_path, state_path = os.path.join(wh, "access"), os.path.join(wh, "_state")
+    with open(state_path) as fh:
+        state = fh.read()
     compact_table(spark, access_path, partition_by=["server_type", "access_date"])
-    assert os.path.exists(os.path.join(access_path, "_max_key"))
+    with open(state_path) as fh:
+        assert fh.read() == state
 
     (d / "rmaccess.log.2").write_text(style5_line("10.0.0.9", "13/Oct/2002:09:00:00", "/m/n.rm") + "\n")
     assert load_style5(spark, str(d), wh)["access"] == 1

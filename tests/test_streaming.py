@@ -1,5 +1,5 @@
-"""Structured Streaming pipeline tests: exactly-once file-source loads,
-watermarked windowed aggregation, stateful sessionization."""
+"""Structured Streaming pipeline tests: keyed upserts, watermarked windowed
+aggregation, stateful sessionization."""
 
 from __future__ import annotations
 
@@ -25,30 +25,6 @@ def stream_log_dir(tmp_path):
         + "\n"
     )
     return d
-
-
-def test_stream_load_exactly_once(spark, stream_log_dir, tmp_path):
-    from realparse_spark.streaming.pipeline import stream_load_access
-
-    wh = str(tmp_path / "swh")
-    ckpt = str(tmp_path / "ckpt")
-    q = stream_load_access(spark, str(stream_log_dir), wh, ckpt)
-    q.awaitTermination(120)
-    out = spark.read.parquet(wh)
-    assert out.count() == 3  # duplicate row deduped
-
-    # second trigger with no new files -> nothing new (checkpointed)
-    q2 = stream_load_access(spark, str(stream_log_dir), wh, ckpt)
-    q2.awaitTermination(120)
-    assert spark.read.parquet(wh).count() == 3
-
-    # new rotated file -> only its rows appended
-    (stream_log_dir / "rmaccess.log.2").write_text(
-        style5_line("10.0.0.3", "12/Oct/2002:11:00:00", "/m/c.rm") + "\n"
-    )
-    q3 = stream_load_access(spark, str(stream_log_dir), wh, ckpt)
-    q3.awaitTermination(120)
-    assert spark.read.parquet(wh).count() == 4
 
 
 def test_stream_upsert_foreachbatch(spark, stream_log_dir, tmp_path):

@@ -1,21 +1,18 @@
-"""Driver-visible streaming lifecycle query (§2.8): oracle-relied
-invariants + exactly-once behavior.  Value parity vs DuckDB is covered by
+"""Driver-visible streaming lifecycle queries (§2.8): oracle-relied
+invariants and planted behavior.  Value parity vs DuckDB is covered by
 the registry-wide test_oracle_parity suite."""
 
 from __future__ import annotations
 
-import glob
-
 import duckdb
-from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR, SF_DIR_ORACLE
 
 
 def test_dedup_key_unique_in_synth_corpus():
-    """The stream dedups on (client_ip_address, event_ts); the oracle has no
-    dedup mirror, which is sound only while (ip, second) is unique in the
-    synthesized corpus.  Pin that invariant at both test scales (the key
+    """`stream_upsert_e2e` merges on (client_ip_address, event_ts); its
+    oracle counts every distinct line, which is sound only while (ip,
+    second) is unique in the synthesized corpus.  Pin that invariant at both test scales (the key
     derives from event_id/user_id/ts arithmetic — cheap to check in DuckDB)."""
     for sf_dir in (SF_DIR, SF_DIR_ORACLE):
         con = duckdb.connect()
@@ -33,22 +30,6 @@ def test_dedup_key_unique_in_synth_corpus():
         ).fetchone()
         con.close()
         assert n == d, f"(ip, second) not unique at {sf_dir}: {n} rows, {d} keys"
-
-
-def test_stream_load_exactly_once(spark, sf_dir):
-    """Both rotations land exactly once: total loaded rows == synthesized
-    lines (a re-processed rotation 1 would double its share), and the temp
-    tree is removed after materialization (ADVICE /tmp-leak fix)."""
-    from realparse_spark.operators.streaming_query import q_stream_load_e2e
-    from realparse_spark.sources.tables import load_table
-
-    before = set(glob.glob("/tmp/realparse_stream_e2e_*"))
-    out = q_stream_load_e2e(spark, sf_dir)
-    total = out.agg(F.sum("n_rows")).collect()[0][0]
-    n_events = load_table(spark, sf_dir, "events").count()
-    assert total == n_events
-    after = set(glob.glob("/tmp/realparse_stream_e2e_*"))
-    assert after <= before, f"leaked temp trees: {sorted(after - before)}"
 
 
 def test_stream_term_counts_flushes_closed_windows_only(spark, tmp_path):

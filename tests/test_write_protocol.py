@@ -71,10 +71,16 @@ def _assert_like_clean(spark, wh: str, clean_wh: str) -> None:
 
 
 def test_crash_between_appends_publishes_nothing(spark, logs, tmp_path, monkeypatch):
-    """A cycle that dies after its `access` append publishes nothing, so
-    the re-run loads every line of the cycle."""
+    """A cycle that dies after its `access` append publishes nothing —
+    neither rows nor a new `_state` — so the re-run loads every line of
+    the cycle."""
     clean_wh, wh = str(tmp_path / "clean"), str(tmp_path / "wh")
+    (logs / "rmaccess.log.20021013").rename(tmp_path / "later")
+    load_style5(spark, str(logs), clean_wh)
+    load_style5(spark, str(logs), wh)
+    (tmp_path / "later").rename(logs / "rmaccess.log.20021013")
     clean = load_style5(spark, str(logs), clean_wh)
+    state, rows = LOCAL.read_text(os.path.join(wh, "_state")), _ids(spark, wh, "access")
     real_append = L._append
 
     def crash_at_file(df, root, name):
@@ -86,8 +92,8 @@ def test_crash_between_appends_publishes_nothing(spark, logs, tmp_path, monkeypa
     with pytest.raises(RuntimeError, match="simulated crash"):
         load_style5(spark, str(logs), wh)
     monkeypatch.undo()
-    assert read_warehouse_table(spark, wh, "access") is None
-    assert not LOCAL.exists(L._max_key_path(wh))
+    assert sorted(_ids(spark, wh, "access")) == sorted(rows)
+    assert LOCAL.read_text(os.path.join(wh, "_state")) == state
 
     assert load_style5(spark, str(logs), wh) == clean
     _assert_like_clean(spark, wh, clean_wh)
@@ -153,7 +159,8 @@ def test_two_concurrent_loads(spark, logs, tmp_path):
 def test_compaction_during_load(spark, logs, tmp_path, monkeypatch):
     """`compact_table` on `access` started while a load is inside its
     cycle: the compaction waits for the load's commit, so it neither drops
-    the load's rows nor hides `access` from the load's watermark read."""
+    the load's rows nor publishes between the load's state read and its
+    commit."""
     clean_wh, wh = str(tmp_path / "clean"), str(tmp_path / "wh")
     (logs / "rmaccess.log.20021013").rename(tmp_path / "later")
     load_style5(spark, str(logs), clean_wh)
@@ -162,11 +169,11 @@ def test_compaction_during_load(spark, logs, tmp_path, monkeypatch):
     clean = load_style5(spark, str(logs), clean_wh)
 
     in_cycle, appended = threading.Event(), threading.Event()
-    real_wm, real_append, real_leaf = L._family_watermark, L._append, C._leaf_partition_bytes
+    real_state, real_append, real_leaf = L._read_state, L._append, C._leaf_partition_bytes
 
-    def watermark(*a):
+    def read_state(*a):
         in_cycle.set()
-        return real_wm(*a)
+        return real_state(*a)
 
     def append(df, root, name):
         n = real_append(df, root, name)
@@ -180,7 +187,7 @@ def test_compaction_during_load(spark, logs, tmp_path, monkeypatch):
         appended.wait(timeout=60)
         return real_leaf(*a)
 
-    monkeypatch.setattr(L, "_family_watermark", watermark)
+    monkeypatch.setattr(L, "_read_state", read_state)
     monkeypatch.setattr(L, "_append", append)
     monkeypatch.setattr(C, "_leaf_partition_bytes", leaf)
     with ThreadPoolExecutor(2) as pool:
