@@ -38,14 +38,16 @@ from realparse_spark.fs import LOCAL
 # code change that alters a derived artifact's content or schema would
 # silently serve the previous version's table to the new code.  Bump this
 # on ANY such change (round 7: prefix-index token ids int -> bigint via
-# the distributed rank).  Trade-off, deliberate: one global version
-# rebuilds EVERY snapshot family on a bump — acceptable here (seconds at
+# the distributed rank; version 3: the LSH index holds (vec_id, sketch)
+# postings only, and its sketches change for vectors whose width is not
+# 64).  Trade-off, deliberate: one global version rebuilds EVERY
+# snapshot family on a bump — acceptable here (seconds at
 # test scale, and correctness beats rebuild cost); a production system
 # with 100 TB derived tables would scope a version per artifact family
 # (one more `extras` element per builder) to bound the blast radius.
 # Old-version directories in /tmp are left for the OS tmp reaper —
 # deleting them could yank part-files from a concurrent reader's plan.
-SNAPSHOT_VERSION = 2
+SNAPSHOT_VERSION = 3
 
 # Every snapshot family's directory prefix (the ``prefix`` argument each
 # builder passes to ``snapshot_path``).  Kept here so a benchmark can find

@@ -42,20 +42,24 @@ def _hyperplanes(n_planes: int = N_PLANES, dim: int = _DIM) -> list[list[float]]
     return planes
 
 
-def _sketch(vec: Column, planes: list[list[float]]) -> Column:
-    """Sign sketch: bit i = 1 iff dot(vec, plane_i) > 0.  Pure expression —
-    evaluated JVM-side per row, no UDF."""
-    bits = None
+def _sketch(col: str, planes: list[list[float]]) -> Column:
+    """Sign sketch of the array column `col`: bit i = 1 iff
+    dot(vec, plane_i) > 0.  Pure expression — evaluated JVM-side per row,
+    no UDF — built as ONE SQL string with exact `repr(float)` double
+    literals, so the plan costs one parse instead of a py4j call per
+    coefficient.  `zip_with` NULL-pads the shorter array, and a NULL dot
+    makes `> 0` false for every bit; a coordinate past either array
+    therefore adds 0.0 (the truncation `_sketch_py`'s `zip` makes), so
+    vectors of any width sketch alike in both."""
+    terms = []
     for i, plane in enumerate(planes):
-        arr = F.array(*[F.lit(v) for v in plane])
-        dot = F.aggregate(
-            F.zip_with(vec, arr, lambda x, y: x.cast("double") * y),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
+        coeffs = ", ".join(f"{v!r}D" for v in plane)
+        dot = (
+            f"aggregate(zip_with(`{col}`, array({coeffs}), "
+            "(x, y) -> coalesce(CAST(x AS DOUBLE) * y, 0D)), 0D, (acc, v) -> acc + v)"
         )
-        bit = F.when(dot > 0, F.shiftleft(F.lit(1).cast("long"), i)).otherwise(F.lit(0).cast("long"))
-        bits = bit if bits is None else bits.bitwiseOR(bit)
-    return bits
+        terms.append(f"IF({dot} > 0, {1 << i}L, 0L)")
+    return F.expr(" | ".join(terms))
 
 
 def topk_cosine(emb: DataFrame, query_vec_id: int, k: int = 10) -> DataFrame:
@@ -201,8 +205,7 @@ def ann_lsh_topk(
     tests) while the re-rank set shrinks by ~an order of magnitude; at
     scale, bucket the sketch column (or range-partition on it) so the probe
     is an index lookup, not a scan."""
-    planes = _hyperplanes()
-    sk = emb.withColumn("sketch", _sketch(F.col("embedding"), planes))
+    sk = emb.withColumn("sketch", _sketch("embedding", _hyperplanes()))
     q = sk.filter(F.col("vec_id") == query_vec_id).select(
         F.col("embedding").alias("qe"), F.col("sketch").alias("qsk")
     )
@@ -230,13 +233,18 @@ def ann_lsh_topk(
 # the N-bit sketch into (radius + 1) chunks; any vector within hamming
 # distance <= radius of the query must agree with it EXACTLY in at least
 # one chunk (if all radius+1 chunks differed, distance would be >= radius+1).
-# Persist each vector once per chunk, partitioned by (chunk_id, chunk_val);
-# the probe reads exactly radius+1 partitions — a pruned scan, asserted in
-# tests — takes the union, applies the exact hamming filter, and re-ranks.
-# Candidate set is therefore IDENTICAL to the full scan's (completeness is
-# provable, and parity is test-pinned), at a storage cost of
-# (radius+1) x sketch-table replication — the standard multi-index LSH
-# trade (cf. the IVF build/probe split below for the centroid variant).
+# Persist one POSTING per vector per chunk — (vec_id, sketch), two longs —
+# partitioned by (chunk_id, chunk_val); the probe reads exactly radius+1
+# partitions — a pruned scan, asserted in tests — takes the union, applies
+# the exact hamming filter and dedups (query, vec) ids.  Only then do the
+# survivors join `embeddings` once, for label and the exact cosine
+# re-rank: the filter-then-verify split, a compact index to pick
+# candidates and the original vectors to check them.  Candidate set is
+# IDENTICAL to the full scan's (completeness is provable, and parity is
+# test-pinned), at a storage cost of N_CHUNKS (= max radius + 1) 16-byte
+# postings per vector, never a copy of the vector — the standard
+# multi-index LSH trade (cf. the IVF build/probe split below for the
+# centroid variant).
 # ---------------------------------------------------------------------------
 
 N_CHUNKS = 5  # supports hamming radius <= 4
@@ -264,37 +272,36 @@ def _sketch_py(vec: list[float], planes: list[list[float]]) -> int:
 
 
 def build_lsh_index(emb: DataFrame, index_path: str) -> str:
-    """Offline half: sketch every vector ONCE and lay it out partitioned by
-    (chunk_id, chunk_val).  One narrow job, no shuffle except the write's
+    """Offline half: sketch every vector ONCE and write its postings
+    (vec_id, sketch) partitioned by (chunk_id, chunk_val) — no label, no
+    embedding.  One narrow job, no shuffle except the write's
     partitioning; rebuilt only when the corpus changes (cf. the IVF cache
-    discipline in `q_sim_ivf`)."""
-    planes = _hyperplanes()
-    sk = emb.withColumn("sketch", _sketch(F.col("embedding"), planes))
+    discipline in `q_sim_ivf`).  An empty corpus leaves a directory with
+    no part-file, which `_read_lsh_index` reads back as zero postings."""
+    sk = emb.select("vec_id", _sketch("embedding", _hyperplanes()).alias("sketch"))
     chunks = F.array(
         *[
             F.shiftrightunsigned(F.col("sketch"), off).bitwiseAND(F.lit((1 << size) - 1))
             for off, size in _chunk_bounds()
         ]
     )
-    exploded = sk.select(
-        "vec_id",
-        "label",
-        "embedding",
-        "sketch",
-        F.posexplode(chunks).alias("chunk_id", "chunk_val"),
-    )
-    if emb.limit(1).count() == 0:
-        # a partitionBy write of zero rows leaves a schema-less directory
-        # that cannot be read back; write the flat schema instead (probe
-        # filters on chunk_id/chunk_val work unchanged and return empty)
-        exploded.write.mode("overwrite").parquet(index_path)
-        return index_path
-    exploded.write.mode("overwrite").partitionBy("chunk_id", "chunk_val").parquet(index_path)
+    sk.select(
+        "vec_id", "sketch", F.posexplode(chunks).alias("chunk_id", "chunk_val")
+    ).write.mode("overwrite").partitionBy("chunk_id", "chunk_val").parquet(index_path)
     return index_path
 
 
+def _read_lsh_index(spark: SparkSession, index_path: str) -> DataFrame:
+    """The postings with the schema `build_lsh_index` writes: no parquet
+    schema-inference job per probe (partition values take the declared
+    types)."""
+    return spark.read.schema(
+        "vec_id long, sketch long, chunk_id int, chunk_val long"
+    ).parquet(index_path)
+
+
 def lsh_probe(
-    spark: SparkSession,
+    emb: DataFrame,
     index_path: str,
     query_vec: list[float],
     k: int = 10,
@@ -302,10 +309,12 @@ def lsh_probe(
     exclude_vec_id: int | None = None,
 ) -> DataFrame:
     """Online half: an index LOOKUP, not a scan.  The query sketch is
-    computed driver-side (64 floats — no job), the partition predicate
-    names exactly the radius+1 (chunk_id, chunk_val) buckets the pigeonhole
-    bound requires, and everything heavier (dedup of multi-chunk matches,
-    hamming filter, exact cosine re-rank) runs over just those buckets."""
+    computed driver-side (a few dozen floats — no job), the partition
+    predicate names exactly the radius+1 (chunk_id, chunk_val) buckets the
+    pigeonhole bound requires, the hamming filter and the dedup of
+    multi-chunk matches run on postings alone, and only the surviving ids
+    join `emb` (the indexed corpus) for label and the exact cosine
+    re-rank."""
     if radius >= N_CHUNKS:
         raise ValueError(f"index supports radius <= {N_CHUNKS - 1}, got {radius}")
     planes = _hyperplanes()
@@ -320,17 +329,18 @@ def lsh_probe(
         )
         pred = clause if pred is None else pred | clause
     cand = (
-        spark.read.parquet(index_path)
+        _read_lsh_index(emb.sparkSession, index_path)
         .filter(pred)
-        .select("vec_id", "label", "embedding", "sketch")
-        .dropDuplicates(["vec_id"])
         .filter(F.bit_count(F.col("sketch").bitwiseXOR(F.lit(qsk))) <= radius)
+        .select("vec_id")
+        .dropDuplicates()
     )
     if exclude_vec_id is not None:
         cand = cand.filter(F.col("vec_id") != exclude_vec_id)
     qe = F.array(*[F.lit(float(x)) for x in query_vec])
     return (
-        cand.select(
+        cand.join(emb, "vec_id")
+        .select(
             "vec_id",
             "label",
             F.round(cosine(F.col("embedding"), qe), 4).alias("cos"),
@@ -367,11 +377,11 @@ def q_sim_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame([], "vec_id long, label int, cos double")
     idx = _lsh_index_for(spark, sf_dir)
     qv = [float(x) for x in row.embedding]
-    return lsh_probe(spark, idx, qv, k=10, radius=4, exclude_vec_id=0)
+    return lsh_probe(emb, idx, qv, k=10, radius=4, exclude_vec_id=0)
 
 
 def lsh_probe_batch(
-    spark: SparkSession,
+    emb: DataFrame,
     index_path: str,
     queries: DataFrame,
     k: int = 10,
@@ -383,16 +393,21 @@ def lsh_probe_batch(
 
     Each query row (query_id, embedding) is sketched JVM-side and exploded
     into its radius+1 pigeonhole (chunk_id, chunk_val) probe keys; ONE
-    equi-join against the bucketed index on those keys replaces |Q|
-    separate lookups.  For small batches Spark inserts DYNAMIC partition
-    pruning on the index scan (the probe side broadcasts and chunk_id /
-    chunk_val are partition columns — gate-pinned in tests); for large
-    batches the shuffle join reads each touched bucket once — either way
-    candidate work is Σ|bucket| over probed buckets, never |Q| × corpus.
-    Dedup of multi-chunk matches, the exact hamming filter, and the
-    per-query top-k window (partitioned by query_id — a uniform key, no
-    skew) complete the re-rank.  Per-query results are IDENTICAL to
-    `lsh_probe` at the same radius (parity test-pinned).
+    equi-join against the bucketed postings on those keys replaces |Q|
+    separate lookups.  For small batches Spark plans DYNAMIC partition
+    pruning on the postings scan (the probe side broadcasts and chunk_id /
+    chunk_val are partition columns — gate-pinned in tests); when the
+    postings of a small corpus are smaller still, AQE broadcasts them
+    whole instead; for large batches the shuffle join reads each touched
+    bucket once.  Either way the pairs that pass the hamming filter are
+    the pigeonhole candidates only, never |Q| × corpus (a pruning gate in
+    tests counts them).  The exact hamming filter and the dedup of
+    multi-chunk matches run on (query_id, vec_id) pairs alone; the
+    survivors then join `emb` (the indexed corpus, read once) for label
+    and embedding, and the per-query top-k window (partitioned by
+    query_id — a uniform key, no skew) completes the exact re-rank.
+    Per-query results are IDENTICAL to `lsh_probe` at the same radius
+    (parity test-pinned).
 
     `queries` must be deterministic: it is evaluated twice (once for the
     probe keys, once to re-attach each query's embedding), so a source
@@ -400,7 +415,6 @@ def lsh_probe_batch(
     limit) would silently drop or mispair candidates — cache it first."""
     if radius >= N_CHUNKS:
         raise ValueError(f"index supports radius <= {N_CHUNKS - 1}, got {radius}")
-    planes = _hyperplanes()
     # same any-(radius+1)-chunks-suffice bound as lsh_probe
     chunks = F.array(
         *[
@@ -411,26 +425,25 @@ def lsh_probe_batch(
     sq = queries.select(
         "query_id",
         F.col("embedding").alias("qe"),
-        _sketch(F.col("embedding"), planes).alias("qsk"),
+        _sketch("embedding", _hyperplanes()).alias("qsk"),
     )
     probes = sq.select(
         "query_id", "qsk", F.posexplode(chunks).alias("chunk_id", "chunk_val")
     )
-    idx = spark.read.parquet(index_path)
     # hamming filter BEFORE the dedup shuffle: bit_count is a per-row
     # scalar (same verdict for every duplicate of a (query, vec) pair),
     # so filtering first is semantics-preserving and the dropDuplicates
-    # exchange only carries survivors.  The QUERY vector does not ride
-    # along at all (guide §2.3, project before the exchange): candidate
-    # rows carry only (query_id, vec_id, label, embedding) through the
-    # dedup — qe re-attaches from the tiny per-query table afterwards,
+    # exchange only carries survivors — as two longs, no vector at all
+    # (guide §2.3, project before the exchange).  label and embedding
+    # come from `emb` after the dedup, qe from the tiny per-query table,
     # which also lets its norm be evaluated ONCE per query instead of
     # once per candidate pair (the r11 norm-hoist discipline).
     cand = (
-        idx.join(probes, ["chunk_id", "chunk_val"])
+        _read_lsh_index(emb.sparkSession, index_path)
+        .join(probes, ["chunk_id", "chunk_val"])
         .filter(F.bit_count(F.col("sketch").bitwiseXOR(F.col("qsk"))) <= radius)
-        .select("query_id", "vec_id", "label", "embedding")
-        .dropDuplicates(["query_id", "vec_id"])
+        .select("query_id", "vec_id")
+        .dropDuplicates()
     )
     if exclude_self:
         cand = cand.filter(F.col("vec_id") != F.col("query_id"))
@@ -454,7 +467,8 @@ def lsh_probe_batch(
     denom = F.sqrt(sqsum(F.col("embedding"))) * F.col("qn")
     w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("vec_id"))
     return (
-        cand.join(qside, "query_id")
+        cand.join(emb.select("vec_id", "label", "embedding"), "vec_id")
+        .join(qside, "query_id")
         .select(
             "query_id",
             "vec_id",
@@ -475,7 +489,7 @@ def q_sim_ann_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    return lsh_probe_batch(spark, idx, queries, k=5, radius=4)
+    return lsh_probe_batch(emb, idx, queries, k=5, radius=4)
 
 
 def _cos_py(a: list[float], b: list[float]) -> float:
@@ -1324,13 +1338,14 @@ def q_retrieval_eval_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_similarity.py.
 
     Scale: probe work is Σ|bucket| over probed buckets (dynamic
-    partition pruning on the index scan), then O(|Q|·k) metric rows —
-    the corpus is never scanned."""
+    partition pruning on the postings scan), the re-rank reads
+    `embeddings` once for the surviving candidates' vectors, then
+    O(|Q|·k) metric rows."""
     emb = load_table(spark, sf_dir, "embeddings")
     idx = _lsh_index_for(spark, sf_dir)
     q = emb.filter(F.pmod(F.col("vec_id"), F.lit(RETRIEVAL_QUERY_MOD)) == 0)
     res = lsh_probe_batch(
-        spark,
+        emb,
         idx,
         q.select(F.col("vec_id").alias("query_id"), "embedding"),
         k=RETRIEVAL_K,

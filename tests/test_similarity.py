@@ -57,7 +57,7 @@ def test_lsh_probe_pruned_and_identical_to_scan(spark, sf_dir, tmp_path):
     emb = load_table(spark, sf_dir, "embeddings")
     idx = build_lsh_index(emb, str(tmp_path / "lsh"))
     qv = [float(x) for x in emb.filter(F.col("vec_id") == 0).select("embedding").head().embedding]
-    probed = lsh_probe(spark, idx, qv, k=10, radius=4, exclude_vec_id=0)
+    probed = lsh_probe(emb, idx, qv, k=10, radius=4, exclude_vec_id=0)
 
     plan = X.full_explain(probed)
     assert re.search(r"PartitionFilters: \[[^\]]*chunk_id[^\]]*\]", plan), plan[-2000:]
@@ -77,7 +77,7 @@ def test_lsh_probe_smaller_radius_fewer_buckets_same_results(spark, sf_dir, tmp_
     emb = load_table(spark, sf_dir, "embeddings")
     idx = build_lsh_index(emb, str(tmp_path / "lsh_r2"))
     qv = [float(x) for x in emb.filter(F.col("vec_id") == 0).select("embedding").head().embedding]
-    probed = lsh_probe(spark, idx, qv, k=10, radius=2, exclude_vec_id=0)
+    probed = lsh_probe(emb, idx, qv, k=10, radius=2, exclude_vec_id=0)
     scan = ann_lsh_topk(emb, query_vec_id=0, k=10, radius=2)
     assert [tuple(r) for r in probed.collect()] == [tuple(r) for r in scan.collect()]
 
@@ -96,7 +96,7 @@ def test_lsh_probe_radius_bound(spark, sf_dir, tmp_path):
     idx = build_lsh_index(emb.limit(5), str(tmp_path / "lsh_small"))
     qv = [float(x) for x in emb.filter(F.col("vec_id") == 0).select("embedding").head().embedding]
     with pytest.raises(ValueError):
-        lsh_probe(spark, idx, qv, radius=N_CHUNKS)
+        lsh_probe(emb, idx, qv, radius=N_CHUNKS)
 
 
 def test_lsh_cache_invalidated_on_source_change(spark, sf_dir, tmp_path):
@@ -139,7 +139,7 @@ def test_lsh_batch_probe_matches_per_query(spark, sf_dir, tmp_path):
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    batch = lsh_probe_batch(spark, idx, queries, k=7, radius=4)
+    batch = lsh_probe_batch(emb, idx, queries, k=7, radius=4)
     got = {}
     collected = batch.collect()
     # small query batches: Spark inserts DYNAMIC partition pruning on the
@@ -155,18 +155,43 @@ def test_lsh_batch_probe_matches_per_query(spark, sf_dir, tmp_path):
     for qid in range(5):
         row = emb.filter(F.col("vec_id") == qid).select("embedding").head()
         single = lsh_probe(
-            spark, idx, [float(x) for x in row.embedding], k=7, radius=4,
+            emb, idx, [float(x) for x in row.embedding], k=7, radius=4,
             exclude_vec_id=qid,
         ).collect()
         expect = [(i + 1, r.vec_id, r.label, r.cos) for i, r in enumerate(single)]
         assert sorted(got.get(qid, [])) == sorted(expect), qid
 
 
+def _list_of(seq) -> list:
+    """A Scala Seq from py4j as a Python list."""
+    return [seq.apply(i) for i in range(seq.size())]
+
+
+def _plan_nodes(df) -> list:
+    """Every physical operator of `df`'s executed plan (JVM objects),
+    through AQE query stages; after an action the final plan's SQL metrics
+    are live on them."""
+    stack, out = [df._jdf.queryExecution().executedPlan()], []
+    while stack:
+        node = stack.pop()
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            stack.append(node.executedPlan())
+            continue
+        if name.endswith("QueryStageExec"):
+            stack.append(node.plan())
+            continue
+        out.append(node)
+        stack.extend(_list_of(node.children()))
+    return out
+
+
 def test_lsh_batch_probe_dedup_is_narrow(spark, sf_dir, tmp_path):
-    """r12 shape pin: the batch probe's candidate dedup exchange must not
-    carry the QUERY vector (it re-attaches from the per-query table via a
-    broadcast afterwards) — one corpus-side array through the shuffle,
-    never two, and the re-attach must never become a shuffle join."""
+    """Shape pin: the batch probe's candidate dedup exchange carries
+    (query_id, vec_id) pairs only — no array-typed column at all (the
+    index holds postings, and label/embedding join in after the dedup) —
+    and neither re-attach join (corpus vectors, query vectors) may become
+    a shuffle join."""
     from pyspark.sql import functions as F
 
     from realparse_spark.operators.similarity import build_lsh_index, lsh_probe_batch
@@ -177,20 +202,128 @@ def test_lsh_batch_probe_dedup_is_narrow(spark, sf_dir, tmp_path):
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    df = lsh_probe_batch(spark, idx, queries, k=7, radius=4)
-    plan = X.executed_plan(df)
-    # the qe/qn re-attach is the SECOND BroadcastHashJoin; nothing shuffles
-    assert X.broadcast_join_count(df) >= 2
+    df = lsh_probe_batch(emb, idx, queries, k=7, radius=4)
+    # probe join, the embeddings re-attach and the qe/qn re-attach are all
+    # BroadcastHashJoins; nothing shuffles
+    assert X.broadcast_join_count(df) >= 3
     assert X.sortmerge_join_count(df) == 0
-    # the dedup aggregation keeps exactly one array-typed column
-    # (embedding): its partial-agg buffers print as first/valueSet pairs,
-    # 3 value columns total (label, embedding, and nothing from the query)
-    dedup_lines = [
-        ln for ln in plan.splitlines()
-        if "hashpartitioning(query_id" in ln and "vec_id" in ln
+    # the dedup shuffles: hash-partitioned on (query_id, vec_id)
+    dedup = [
+        n for n in _plan_nodes(df)
+        if n.getClass().getSimpleName() == "ShuffleExchangeExec"
+        and "hashpartitioning(query_id" in n.simpleString(100)
+        and "vec_id" in n.simpleString(100)
     ]
-    assert dedup_lines, plan
-    assert not any("qe" in ln or "qsk" in ln or "sketch" in ln for ln in dedup_lines), dedup_lines
+    assert dedup, X.executed_plan(df)
+    for ex in dedup:
+        cols = [(a.name(), a.dataType().typeName()) for a in _list_of(ex.output())]
+        assert sorted(c for c, _ in cols) == ["query_id", "vec_id"], cols
+        assert all(t != "array" for _, t in cols), cols
+
+
+# A clustered 32-float corpus, narrower than the 64-wide hyperplanes (as
+# the benchmark corpus is): the fixtures are all 64 wide, so only this
+# corpus checks that a sketch past the end of a vector adds nothing rather
+# than turning NULL and zeroing every bit.
+_N32, _DIM32, _CLUSTERS32 = 300, 32, 12
+
+
+def _clustered(n: int, dim: int, n_clusters: int, seed: int = 7) -> list[tuple]:
+    import random
+
+    rng = random.Random(seed)
+    centers = [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_clusters)]
+    rows = []
+    for i in range(n):
+        c = rng.randrange(n_clusters)
+        rows.append((i, [x + rng.gauss(0.0, 0.08) for x in centers[c]], c))
+    return rows
+
+
+def test_sketch_matches_driver_replica_at_every_width(spark):
+    """The JVM sketch must equal `_sketch_py` bit for bit at widths below,
+    at and above the planes' 64 — a coordinate past either array adds
+    nothing — and a clustered 32-dim corpus must not collapse onto one
+    sketch."""
+    from realparse_spark.operators.similarity import _hyperplanes, _sketch, _sketch_py
+
+    planes = _hyperplanes()
+    for dim in (32, 64, 96):
+        emb = spark.createDataFrame(
+            _clustered(120, dim, 6, seed=dim), "vec_id long, embedding array<float>, label int"
+        )
+        got = emb.select("embedding", _sketch("embedding", planes).alias("sk")).collect()
+        bad = [r.sk for r in got if r.sk != _sketch_py(r.embedding, planes)]
+        assert not bad, (dim, bad[:5])
+        if dim == 32:
+            assert len({r.sk for r in got}) > 1
+
+
+def test_lsh_probes_agree_at_32_dims(spark, tmp_path):
+    """On a 32-dim clustered corpus the single probe, the batch probe and
+    the full-scan `ann_lsh_topk` return the same rows per query — and
+    those rows are non-empty neighbours, not an empty probe."""
+    from pyspark.sql import functions as F
+
+    from realparse_spark.operators.similarity import (
+        build_lsh_index,
+        lsh_probe,
+        lsh_probe_batch,
+    )
+
+    emb = spark.createDataFrame(
+        _clustered(_N32, _DIM32, _CLUSTERS32), "vec_id long, embedding array<float>, label int"
+    )
+    idx = build_lsh_index(emb, str(tmp_path / "lsh32"))
+    nq, k = 6, 7
+    queries = emb.filter(F.col("vec_id") < nq).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    batch = {}
+    for r in lsh_probe_batch(emb, idx, queries, k=k, radius=4).collect():
+        batch.setdefault(r.query_id, []).append((r.rk, r.vec_id, r.label, r.cos))
+    vecs = {r.vec_id: r.embedding for r in emb.filter(F.col("vec_id") < nq).collect()}
+    for qid in range(nq):
+        single = lsh_probe(
+            emb, idx, [float(x) for x in vecs[qid]], k=k, radius=4, exclude_vec_id=qid
+        ).collect()
+        scan = ann_lsh_topk(emb, query_vec_id=qid, k=k, radius=4).collect()
+        assert len(scan) == k, (qid, scan)
+        assert [tuple(r) for r in single] == [tuple(r) for r in scan], qid
+        expect = [(i + 1, r.vec_id, r.label, r.cos) for i, r in enumerate(scan)]
+        assert sorted(batch.get(qid, [])) == expect, qid
+
+
+def test_lsh_batch_probe_prunes_at_32_dims(spark, tmp_path):
+    """Pruning gate: on the 32-dim clustered corpus the batch probe's
+    candidate pairs after the hamming filter — the rows out of the
+    (query_id, vec_id) dedup, read from the plan's SQL metrics, no extra
+    job — stay under a quarter of |Q| x N.  A sketch that collapsed every
+    vector onto one value would pass all N per query."""
+    from pyspark.sql import functions as F
+
+    from realparse_spark.operators.similarity import build_lsh_index, lsh_probe_batch
+
+    emb = spark.createDataFrame(
+        _clustered(_N32, _DIM32, _CLUSTERS32), "vec_id long, embedding array<float>, label int"
+    )
+    idx = build_lsh_index(emb, str(tmp_path / "lsh32_prune"))
+    nq = 20
+    queries = emb.filter(F.col("vec_id") < nq).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    df = lsh_probe_batch(emb, idx, queries, k=5, radius=4)
+    assert len({r.query_id for r in df.collect()}) == nq
+    # the final (post-shuffle) dedup aggregate: one row per distinct pair
+    finals = [
+        n for n in _plan_nodes(df)
+        if n.getClass().getSimpleName().endswith("AggregateExec")
+        and n.requiredChildDistributionExpressions().isDefined()
+        and sorted(e.name() for e in _list_of(n.groupingExpressions())) == ["query_id", "vec_id"]
+    ]
+    assert len(finals) == 1, [n.simpleString(100) for n in finals]
+    pairs = finals[0].metrics().apply("numOutputRows").value()
+    assert 0 < pairs < 0.25 * nq * _N32, pairs
 
 
 def test_knn_join_ivf_recall(spark, sf_dir, tmp_path):
