@@ -28,8 +28,9 @@ exact Jaccard) is asserted in tests/test_dedup.py instead.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 from realparse_spark.cache import fingerprint_key, snapshot_path
 from realparse_spark.operators.distrank import rank_distributed
@@ -867,7 +868,7 @@ def q_dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     Rows-only driver check (xxhash64 band keys are not DuckDB-
     reproducible); tests pin equality against the batch path filtered to
     cross-split pairs."""
-    sig = spark.read.parquet(_minhash_sig_for(spark, sf_dir))
+    sig = _read_minhash_sig(spark, sf_dir)
     return minhash_probe_pairs(
         sig.filter(F.col("doc_id") % 5 != 0),
         sig.filter(F.col("doc_id") % 5 == 0),
@@ -898,8 +899,17 @@ def _minhash_sig_for(
     )
 
 
+def _read_minhash_sig(spark: SparkSession, sf_dir: str, n: int = 3, k: int = 32) -> DataFrame:
+    """The `_minhash_sig_for` snapshot with the schema `minhash_signatures`
+    writes (`doc_id` as the documents carry it, then k `mh_i bigint`), so
+    reading it runs no schema-inference job (cf. `similarity._read_lsh_index`)."""
+    doc_id = load_table(spark, sf_dir, "documents").schema["doc_id"]
+    schema = StructType([doc_id, *(StructField(f"mh_{i}", LongType()) for i in range(k))])
+    return spark.read.schema(schema).parquet(_minhash_sig_for(spark, sf_dir, n, k))
+
+
 def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sig = spark.read.parquet(_minhash_sig_for(spark, sf_dir))
+    sig = _read_minhash_sig(spark, sf_dir)
     return minhash_lsh_pairs(None, sig=sig)
 
 
@@ -1625,10 +1635,11 @@ def dup_clusters(
     """Turn a near-dup PAIR list into dedup GROUPS: connected components,
     cluster_id = min doc_id in the component (what a pipeline keeps).
 
-    Size-adaptive: the pair list is counted once (it is materialized
-    anyway); small graphs (< LOCAL_COMPONENTS_THRESHOLD pairs) run
-    single-task union-find (O(E α) — one Arrow batch, no per-round
-    shuffles), large graphs run distributed iterative min-label
+    Size-adaptive: the pair list is counted by the job that materializes
+    it (an Observation, no job of its own); small graphs
+    (< LOCAL_COMPONENTS_THRESHOLD pairs) run single-task union-find
+    (O(E α) — one Arrow batch, no per-round shuffles), large graphs run
+    distributed iterative min-label
     propagation — per round each vertex takes the min of its own label
     and its neighbors', one equi-join + one groupBy per round, converging
     in O(component diameter) rounds (near-dup clusters are small;
@@ -1637,12 +1648,13 @@ def dup_clusters(
     round so lineage stays O(1) instead of O(iterations)."""
     # cut the pair lineage first: the symmetric union references `pairs`
     # twice, so without materialization the (expensive) pair computation
-    # runs twice just to build the edge list
-    p = pairs.select("doc_a", "doc_b").localCheckpoint()
-    from pyspark.sql.types import LongType
-
+    # runs twice just to build the edge list.  The checkpoint is eager and
+    # the pair count rides on its job as an Observation: a count() would
+    # scan the checkpointed pairs again, 2 more jobs under AQE
+    obs = Observation()
+    p = pairs.select("doc_a", "doc_b").observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint()
     ids_are_long = isinstance(p.schema["doc_a"].dataType, LongType)
-    if ids_are_long and p.count() < local_threshold:
+    if ids_are_long and obs.get["n"] < local_threshold:
         return _local_components(p)
     # no .distinct(): duplicate edges are harmless under min-aggregation,
     # and near-dup pair lists are already unique — dropping it removes a
@@ -1879,8 +1891,7 @@ def minhash_dedup_e2e(docs: DataFrame, sig: DataFrame | None = None) -> DataFram
 
 def q_dedup_minhash_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = fan_out(load_table(spark, sf_dir, "documents"))
-    sig = spark.read.parquet(_minhash_sig_for(spark, sf_dir))
-    return minhash_dedup_e2e(docs, sig=sig)
+    return minhash_dedup_e2e(docs, sig=_read_minhash_sig(spark, sf_dir))
 
 
 # transitive closure is exactly what SQL recursion is for: the oracle

@@ -274,8 +274,8 @@ def _sketch_py(vec: list[float], planes: list[list[float]]) -> int:
 def build_lsh_index(emb: DataFrame, index_path: str) -> str:
     """Offline half: sketch every vector ONCE and write its postings
     (vec_id, sketch) partitioned by (chunk_id, chunk_val) — no label, no
-    embedding.  One narrow job, no shuffle except the write's
-    partitioning; rebuilt only when the corpus changes (cf. the IVF cache
+    embedding.  One shuffle on (chunk_id, chunk_val) gives one file per
+    bucket; rebuilt only when the corpus changes (cf. the IVF cache
     discipline in `q_sim_ivf`).  An empty corpus leaves a directory with
     no part-file, which `_read_lsh_index` reads back as zero postings."""
     sk = emb.select("vec_id", _sketch("embedding", _hyperplanes()).alias("sketch"))
@@ -285,9 +285,13 @@ def build_lsh_index(emb: DataFrame, index_path: str) -> str:
             for off, size in _chunk_bounds()
         ]
     )
+    # one shuffle on the bucket key: each bucket is written by one task,
+    # so it is one file however many splits the corpus arrives in
     sk.select(
         "vec_id", "sketch", F.posexplode(chunks).alias("chunk_id", "chunk_val")
-    ).write.mode("overwrite").partitionBy("chunk_id", "chunk_val").parquet(index_path)
+    ).repartition("chunk_id", "chunk_val").write.mode("overwrite").partitionBy(
+        "chunk_id", "chunk_val"
+    ).parquet(index_path)
     return index_path
 
 
@@ -394,13 +398,13 @@ def lsh_probe_batch(
     Each query row (query_id, embedding) is sketched JVM-side and exploded
     into its radius+1 pigeonhole (chunk_id, chunk_val) probe keys; ONE
     equi-join against the bucketed postings on those keys replaces |Q|
-    separate lookups.  For small batches Spark plans DYNAMIC partition
-    pruning on the postings scan (the probe side broadcasts and chunk_id /
-    chunk_val are partition columns — gate-pinned in tests); when the
-    postings of a small corpus are smaller still, AQE broadcasts them
-    whole instead; for large batches the shuffle join reads each touched
-    bucket once.  Either way the pairs that pass the hamming filter are
-    the pigeonhole candidates only, never |Q| × corpus (a pruning gate in
+    separate lookups.  The probe keys (|Q| × (radius+1) rows of four
+    numbers) always broadcast, so Spark plans DYNAMIC partition pruning on
+    the postings scan (chunk_id / chunk_val are partition columns); left
+    to itself, AQE broadcasts the postings of a small corpus whole and
+    reads every one of them (the scan's row count is gate-pinned in
+    tests).  The pairs that pass the hamming filter are the pigeonhole
+    candidates only, never |Q| × corpus (a pruning gate in
     tests counts them).  The exact hamming filter and the dedup of
     multi-chunk matches run on (query_id, vec_id) pairs alone; the
     survivors then join `emb` (the indexed corpus, read once) for label
@@ -440,7 +444,7 @@ def lsh_probe_batch(
     # once per candidate pair (the r11 norm-hoist discipline).
     cand = (
         _read_lsh_index(emb.sparkSession, index_path)
-        .join(probes, ["chunk_id", "chunk_val"])
+        .join(F.broadcast(probes), ["chunk_id", "chunk_val"])
         .filter(F.bit_count(F.col("sketch").bitwiseXOR(F.col("qsk"))) <= radius)
         .select("query_id", "vec_id")
         .dropDuplicates()

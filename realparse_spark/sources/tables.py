@@ -13,6 +13,9 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from realparse_spark.cache import fingerprint_key
 
 TABLE_NAMES = (
     "region",
@@ -27,6 +30,13 @@ TABLE_NAMES = (
     "embeddings",
 )
 
+# Each file's inferred schema under its name and content fingerprint (the
+# fingerprint names the directory, not the file): a bare
+# `spark.read.parquet` runs a schema-inference job on every call (7 of the
+# curation mix's 40 jobs per round), and a file rewritten in place gets a
+# new fingerprint and so is inferred again.
+_SCHEMAS: dict[tuple, StructType] = {}
+
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one table. Scans stay lazy — filters/projections applied by the
@@ -37,6 +47,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     .nanosAsLong``); convert to a microsecond TimestampType here so every
     downstream operator sees a real timestamp (matches DuckDB's ns->us
     truncation when fetched into Python).
+
+    The schema is inferred once per file version (``_SCHEMAS``); later
+    calls read with it and run no job.
     """
     # runtime-settable; the session may not have been built by get_spark
     # (e.g. the verification driver's own session).  UTC matters as much as
@@ -46,7 +59,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         spark.conf.set("spark.sql.session.timeZone", "UTC")
     except Exception:
         pass
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    key = (name, fingerprint_key(sf_dir, name))
+    if key not in _SCHEMAS:
+        _SCHEMAS[key] = spark.read.parquet(path).schema
+    df = spark.read.schema(_SCHEMAS[key]).parquet(path)
     for field in df.schema.fields:
         if field.name != "ts":
             continue

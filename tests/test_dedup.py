@@ -435,6 +435,26 @@ def test_minhash_e2e_keeplist_partitions_corpus(spark):
     assert set(keepers) == clusters and all(v == 1 for v in keepers.values())
 
 
+def test_minhash_e2e_job_budget(spark, sf_dir):
+    """Over its signature snapshot, one `dedup_minhash_e2e` call is at most
+    11 Spark jobs: the snapshot is read with its known schema (no
+    schema-inference job) and `dup_clusters` takes its pair count from an
+    Observation on the checkpoint it runs anyway (a count() adds 2 jobs
+    under AQE)."""
+    from realparse_spark.operators.dedup import q_dedup_minhash_e2e
+
+    q_dedup_minhash_e2e(spark, sf_dir).collect()  # builds the snapshot
+    sc = spark.sparkContext
+    sc.setJobGroup("budget-minhash", "budget-minhash")
+    try:
+        rows = q_dedup_minhash_e2e(spark, sf_dir).collect()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    n = len(sc.statusTracker().getJobIdsForGroup("budget-minhash"))
+    assert rows and n <= 11, n
+
+
 def test_minhash_portable_tracks_planted_structure(spark):
     """The md5-portable MinHash companion must behave like MinHash:
     exact copies agree on every signature position (est_jaccard = 1.0),

@@ -4,6 +4,8 @@ reaches ORC scans too, not just parquet)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -120,3 +122,38 @@ def test_csv_quarantine_routes_every_line_exactly_once(spark, tmp_path):
     assert b[2]._corrupt_record == "2,beta,xx"     # verbatim evidence
     assert b[4]._corrupt_record == "4,delta"
     assert len(g) + len(b) == len(lines)
+
+
+def test_load_table_infers_each_file_version_once(spark, tmp_path):
+    """`load_table` infers a file's schema on the first read only; a later
+    read runs no Spark job, and a file rewritten in place is read with its
+    new schema."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = str(tmp_path)
+    path = os.path.join(d, "documents.parquet")
+    pq.write_table(pa.table({"doc_id": [1, 2], "text": ["a", "b"]}), path)
+    assert load_table(spark, d, "documents").columns == ["doc_id", "text"]
+
+    sc = spark.sparkContext
+    sc.setJobGroup("load-table-schema", "load-table-schema")
+    try:
+        assert load_table(spark, d, "documents").columns == ["doc_id", "text"]
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup("load-table-schema")) == 0
+
+    pq.write_table(pa.table({"doc_id": [3], "text": ["c"], "source": ["web"]}), path)
+    df = load_table(spark, d, "documents")
+    assert df.columns == ["doc_id", "text", "source"]
+    assert [tuple(r) for r in df.collect()] == [(3, "c", "web")]
+
+    # two tables of one directory whose fingerprints agree (same size and
+    # mtime) still keep their own schemas
+    for name, col in (("region", "r_key"), ("nation", "n_key")):
+        pq.write_table(pa.table({col: [1]}), os.path.join(d, f"{name}.parquet"))
+        os.utime(os.path.join(d, f"{name}.parquet"), ns=(0, 0))
+    assert load_table(spark, d, "region").columns == ["r_key"]
+    assert load_table(spark, d, "nation").columns == ["n_key"]

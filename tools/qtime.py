@@ -5,8 +5,12 @@ Usage: python tools/qtime.py <query> [<query> ...] [--reps N] [--plan DIR]
 Times each named query, materialized as a max(hash(*cols)) collect so no
 column is pruned away, after one warmup execution; prints min/median of
 N reps, and optionally writes `.explain('formatted')` output to
-DIR/<query>.txt.  Uses $SPARK_GRAFT_SF_DIR (default sf0.1) and the
-program's own session factory (`session.get_spark`).
+DIR/<query>.txt.  For the cold run and each rep it also prints the
+classes whole-stage codegen compiled and the seconds Janino spent on them
+(Spark's `CodegenMetrics` and `CodeGenerator.compileTime`), so a query
+that recompiles on every call shows without a profiler.  Uses
+$SPARK_GRAFT_SF_DIR (default sf0.1) and the program's own session factory
+(`session.get_spark`).
 """
 
 from __future__ import annotations
@@ -51,6 +55,17 @@ def main() -> None:
     def materialize(df) -> None:
         df.select(F.max(F.hash(*df.columns)).alias("h")).collect()
 
+    jvm = spark.sparkContext._jvm
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    generator = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+
+    def timed(fn) -> tuple[float, int, float]:
+        """(wall s, classes compiled, compile s) of one materialized call."""
+        n0, c0, t0 = compiles.getCount(), generator.compileTime(), time.perf_counter()
+        materialize(fn(spark, sf_dir))
+        return (time.perf_counter() - t0, compiles.getCount() - n0,
+                (generator.compileTime() - c0) / 1e9)
+
     # table warmup (footer reads / classloading) before the first timing
     from realparse_spark.sources.tables import TABLE_NAMES, load_table
 
@@ -66,18 +81,17 @@ def main() -> None:
                 fh.write(df._sc._jvm.PythonSQLUtils.explainString(
                     df._jdf.queryExecution(), "formatted"))
         spark.sparkContext.setJobDescription(f"qtime:{name}:warmup")
-        t0 = time.perf_counter()
-        materialize(fn(spark, sf_dir))
-        cold = time.perf_counter() - t0
+        cold, cold_n, cold_s = timed(fn)
         runs = []
         for r in range(reps):
             spark.sparkContext.setJobDescription(f"qtime:{name}:{r}")
-            t0 = time.perf_counter()
-            materialize(fn(spark, sf_dir))
-            runs.append(time.perf_counter() - t0)
+            runs.append(timed(fn))
+        walls = [w for w, _, _ in runs]
         print(
-            f"{name}: cold={cold:.3f} min={min(runs):.3f} "
-            f"med={statistics.median(runs):.3f} reps={reps}",
+            f"{name}: cold={cold:.3f} min={min(walls):.3f} "
+            f"med={statistics.median(walls):.3f} reps={reps} "
+            f"compiles cold={cold_n} reps={[n for _, n, _ in runs]} "
+            f"compile_s cold={cold_s:.3f} reps={[round(c, 3) for _, _, c in runs]}",
             flush=True,
         )
 
