@@ -59,7 +59,6 @@ SNAPSHOT_PREFIXES = (
     "realparse_bpe_",
     "realparse_clusters_",
     "realparse_coedges_",
-    "realparse_ivf_",
     "realparse_lsh_",
     "realparse_mhsig_",
     "realparse_postings_",

@@ -1229,8 +1229,8 @@ GROUP BY v.user_id, v.first_view
 
 def q_emb_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label embedding centroids in long form (label, pos, centroid) —
-    the grouped-vector-mean primitive an IVF index build runs (see
-    similarity.build_ivf_index).  posexplode -> one shuffle on
+    the grouped-vector-mean primitive a centroid-based index build runs
+    (the update step of `selection._kmeans_assigned`).  posexplode -> one shuffle on
     (label, pos); sums are exact decimals with ONE IEEE division, so both
     engines agree bit-for-bit despite float inputs.
 

@@ -1719,7 +1719,7 @@ def dup_clusters(
 
 
 # Materialized cluster table, fingerprint-keyed per corpus (same cache
-# discipline as the LSH/IVF indexes): production pipelines compute
+# discipline as the LSH index): production pipelines compute
 # components ONCE per corpus snapshot and every downstream consumer
 # (cluster stats, canonical selection) reads the table — re-running the
 # pair join + CC per consumer would multiply the most expensive dedup

@@ -223,8 +223,7 @@ def bloom_build(
     (spark.sql.optimizer.runtime.bloomFilter.*) made explicit and
     engine-independent: k positions per key from seeded xxhash64, one
     map-side-combined groupBy(word) · bit_or(mask) aggregate, then a
-    BOUNDED collect of at most m/64 longs (≤2 MiB at the cap) — the same
-    scalar-sidecar discipline as the IVF centroid tables.  m auto-sizes
+    BOUNDED collect of at most m/64 longs (≤2 MiB at the cap).  m auto-sizes
     to the OBSERVED key count (pow2 ≥ bits_per_key·n, capped 2^24), so
     FPR stays ~0.2% at the default 16 bits/key, k=4."""
     n = keys.select(key_col).na.drop().distinct().count()

@@ -1125,10 +1125,10 @@ def ivf_balance(emb: DataFrame, iters: int = KMEANS_ITERS) -> DataFrame:
     the ideal N/K_seed, x1000 integer) and the number of seed clusters
     that died — the table an ANN pipeline reads before shipping an IVF
     index (a hot cluster means probes degrade toward scans; dead
-    clusters mean wasted nprobe budget).  This is the ORACLED companion
-    to the rows-only `sim_ann_ivf` family: the partition audited here
-    is deterministic end to end, so the driver hash-verifies the same
-    math the KMeans-backed index relies on.
+    clusters mean wasted nprobe budget).  The partition audited here is
+    deterministic end to end, so the driver hash-verifies it; the repo
+    ships no IVF index of its own (exact top-k and the bucketed-LSH
+    probe serve every near-neighbour query in `similarity.py`).
 
     Determinism: counts and shares are BIGINT (ppm by integral
     division); mean_d2 accumulates round-6 d2 as exact DECIMAL and

@@ -5,12 +5,16 @@ the ANN surface of a training-data pipeline (BASELINE.json north star).
                        One narrow scan + a single ORDER BY LIMIT k (Spark
                        executes TakeOrderedAndProject: per-partition heap,
                        no full sort, no shuffle of the data).
-- `ann_lsh_topk`     : the scale path — random-hyperplane LSH: 16-bit sign
+- `ann_lsh_topk`     : random-hyperplane LSH over a full scan — 16-bit sign
                        sketch per vector, candidates = vectors whose sketch
                        hamming-distance to the query sketch <= radius, exact
-                       cosine re-rank on candidates only.  At 100 TB the
-                       sketch table is orders of magnitude smaller than the
-                       vectors and bucket lookup replaces the full scan.
+                       cosine re-rank on candidates only.  Serves no query:
+                       it is the parity reference for the index probe.
+- `lsh_probe_batch`  : the shipped probe — the same candidates read from a
+                       bucketed postings index (pigeonhole lookup instead of
+                       the scan) for any number of queries in one join; it
+                       serves `sim_ann_lsh`, `sim_ann_lsh_batch` and
+                       `retrieval_eval_ann`.
 
 Hyperplanes are generated from a fixed LCG seed (deterministic across
 sessions, no numpy dependency at plan time, no Date.now-style
@@ -84,45 +88,6 @@ def q_sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return topk_cosine(load_table(spark, sf_dir, "embeddings"), query_vec_id=0, k=10)
 
 
-def topk_cosine_arrow(emb: DataFrame, query_vec_id: int, k: int = 10) -> DataFrame:
-    """Exact top-k by cosine with the scoring kernel as an Arrow-batched
-    numpy matmul (`mapInPandas`) instead of a per-element fold expression.
-
-    This is the documented Python escape hatch done right: one (n, d) @ (d,)
-    BLAS product per Arrow batch — vectorized, never row-at-a-time.  For
-    64-dim vectors the JVM fold expression (`topk_cosine`) wins on
-    serialization; past a few hundred dims the matmul path wins — both are
-    kept, parity-asserted, so callers can pick per width."""
-    import numpy as np
-    import pandas as pd
-
-    row = emb.filter(F.col("vec_id") == query_vec_id).select("embedding").head()
-    if row is None:  # query vector absent (empty/filtered corpus)
-        return emb.sparkSession.createDataFrame([], "vec_id long, label int, cos double")
-    qv = np.asarray(row.embedding, dtype=np.float64)
-    qn = float(np.sqrt((qv * qv).sum()))
-
-    def score(batches):
-        for pdf in batches:
-            m = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            cos = (m @ qv) / (np.sqrt((m * m).sum(axis=1)) * qn)
-            yield pd.DataFrame(
-                {"vec_id": pdf["vec_id"], "label": pdf["label"], "cos": np.round(cos, 4)}
-            )
-
-    return (
-        emb.filter(F.col("vec_id") != query_vec_id)
-        .select("vec_id", "label", "embedding")
-        .mapInPandas(score, "vec_id long, label int, cos double")
-        .orderBy(F.col("cos").desc(), F.col("vec_id"))
-        .limit(k)
-    )
-
-
-def q_sim_topk_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return topk_cosine_arrow(load_table(spark, sf_dir, "embeddings"), query_vec_id=0, k=10)
-
-
 SIM_TOPK_SQL = r"""
 WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
 scored AS (
@@ -143,9 +108,8 @@ LIMIT 10
 def knn_join(emb: DataFrame, k: int = 3) -> DataFrame:
     """Batch k-NN join: EVERY vector's top-k neighbors (not one query's) —
     the retrieval/dedup primitive a corpus-scale pipeline actually runs.
-    Candidates are label-blocked (the coarse cluster id; at 100 TB the
-    block key is the IVF centroid id from `build_ivf_index`, so pairwise
-    work is |block|² per block, never corpus²).  Ranking uses the rounded
+    Candidates are label-blocked (the coarse cluster id), so pairwise work
+    is |block|² per block, never corpus².  Ranking uses the rounded
     score with vec_id tie-breaks, so the top-k set is engine-deterministic.
 
     Shape: one equi self-join on the block key, then a per-vec_id window
@@ -201,10 +165,12 @@ def ann_lsh_topk(
     """Approximate top-k: LSH sign-sketch prefilter + exact re-rank.
 
     Candidates = rows with hamming(sketch, query_sketch) <= radius.  With
-    16 planes and radius 4 recall against brute force is high (asserted in
-    tests) while the re-rank set shrinks by ~an order of magnitude; at
-    scale, bucket the sketch column (or range-partition on it) so the probe
-    is an index lookup, not a scan."""
+    16 planes and radius 4 on clustered vectors, recall against brute
+    force is 1.0 (asserted in tests) while the re-rank set shrinks by ~an
+    order of magnitude; on the fixtures' random unit vectors it is far
+    lower (0.15 at k = 10 on sf0.1).  A full scan per query: the parity
+    reference for `lsh_probe_batch`, which reads the same candidates from
+    the bucketed index."""
     sk = emb.withColumn("sketch", _sketch("embedding", _hyperplanes()))
     q = sk.filter(F.col("vec_id") == query_vec_id).select(
         F.col("embedding").alias("qe"), F.col("sketch").alias("qsk")
@@ -225,7 +191,7 @@ def ann_lsh_topk(
 
 
 # ---------------------------------------------------------------------------
-# Bucketed LSH index: the 100 TB probe path.
+# Bucketed LSH index: the shipped probe path.
 #
 # `ann_lsh_topk` above scans every sketch per query — fine as the parity
 # baseline, a scale-killer as the shipped search primitive.  The index
@@ -243,8 +209,7 @@ def ann_lsh_topk(
 # IDENTICAL to the full scan's (completeness is provable, and parity is
 # test-pinned), at a storage cost of N_CHUNKS (= max radius + 1) 16-byte
 # postings per vector, never a copy of the vector — the standard
-# multi-index LSH trade (cf. the IVF build/probe split below for the
-# centroid variant).
+# multi-index LSH trade.
 # ---------------------------------------------------------------------------
 
 N_CHUNKS = 5  # supports hamming radius <= 4
@@ -259,8 +224,9 @@ def _chunk_bounds(n_planes: int = N_PLANES, n_chunks: int = N_CHUNKS) -> list[tu
 
 
 def _sketch_py(vec: list[float], planes: list[list[float]]) -> int:
-    """Driver-side replica of `_sketch` for the (tiny) query vector: same
-    sequential left-fold double math, so bits match the JVM exactly."""
+    """Pure-Python replica of `_sketch`: same sequential left-fold double
+    math, so bits match the JVM exactly (the sketch parity tests compare
+    the two at several widths)."""
     bits = 0
     for i, plane in enumerate(planes):
         acc = 0.0
@@ -275,9 +241,9 @@ def build_lsh_index(emb: DataFrame, index_path: str) -> str:
     """Offline half: sketch every vector ONCE and write its postings
     (vec_id, sketch) partitioned by (chunk_id, chunk_val) — no label, no
     embedding.  One shuffle on (chunk_id, chunk_val) gives one file per
-    bucket; rebuilt only when the corpus changes (cf. the IVF cache
-    discipline in `q_sim_ivf`).  An empty corpus leaves a directory with
-    no part-file, which `_read_lsh_index` reads back as zero postings."""
+    bucket; rebuilt only when the corpus changes (`_lsh_index_for`).  An
+    empty corpus leaves a directory with no part-file, which
+    `_read_lsh_index` reads back as zero postings."""
     sk = emb.select("vec_id", _sketch("embedding", _hyperplanes()).alias("sketch"))
     chunks = F.array(
         *[
@@ -304,58 +270,8 @@ def _read_lsh_index(spark: SparkSession, index_path: str) -> DataFrame:
     ).parquet(index_path)
 
 
-def lsh_probe(
-    emb: DataFrame,
-    index_path: str,
-    query_vec: list[float],
-    k: int = 10,
-    radius: int = 4,
-    exclude_vec_id: int | None = None,
-) -> DataFrame:
-    """Online half: an index LOOKUP, not a scan.  The query sketch is
-    computed driver-side (a few dozen floats — no job), the partition
-    predicate names exactly the radius+1 (chunk_id, chunk_val) buckets the
-    pigeonhole bound requires, the hamming filter and the dedup of
-    multi-chunk matches run on postings alone, and only the surviving ids
-    join `emb` (the indexed corpus) for label and the exact cosine
-    re-rank."""
-    if radius >= N_CHUNKS:
-        raise ValueError(f"index supports radius <= {N_CHUNKS - 1}, got {radius}")
-    planes = _hyperplanes()
-    qsk = _sketch_py(query_vec, planes)
-    pred = None
-    # ANY radius+1 chunks suffice: a candidate within hamming <= radius
-    # mismatches at most radius chunks, so among any radius+1 of them at
-    # least one matches exactly — smaller radii probe fewer buckets
-    for i, (off, size) in enumerate(_chunk_bounds()[: radius + 1]):
-        clause = (F.col("chunk_id") == i) & (
-            F.col("chunk_val") == ((qsk >> off) & ((1 << size) - 1))
-        )
-        pred = clause if pred is None else pred | clause
-    cand = (
-        _read_lsh_index(emb.sparkSession, index_path)
-        .filter(pred)
-        .filter(F.bit_count(F.col("sketch").bitwiseXOR(F.lit(qsk))) <= radius)
-        .select("vec_id")
-        .dropDuplicates()
-    )
-    if exclude_vec_id is not None:
-        cand = cand.filter(F.col("vec_id") != exclude_vec_id)
-    qe = F.array(*[F.lit(float(x)) for x in query_vec])
-    return (
-        cand.join(emb, "vec_id")
-        .select(
-            "vec_id",
-            "label",
-            F.round(cosine(F.col("embedding"), qe), 4).alias("cos"),
-        )
-        .orderBy(F.col("cos").desc(), F.col("vec_id"))
-        .limit(k)
-    )
-
-
-# Per-process index cache (same discipline + fingerprint keying as the IVF
-# cache below): the driver and bench probe the same corpus repeatedly.
+# Per-process index cache, keyed by the corpus fingerprint: the driver and
+# bench probe the same corpus repeatedly.
 _LSH_INDEX: dict[tuple, str] = {}
 
 
@@ -371,17 +287,18 @@ def _lsh_index_for(spark: SparkSession, sf_dir: str) -> str:
 
 
 def q_sim_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver query for `sim_ann_lsh`: the PRUNED probe (build once per
-    corpus, look up buckets per query).  Same candidate set and scores as
-    the full-scan `ann_lsh_topk` at the same radius — parity is test-pinned
-    (tests/test_similarity.py)."""
+    """Driver query for `sim_ann_lsh`: top-10 neighbours of stored vector 0,
+    the batch probe over a one-row query frame.  Same rows as the
+    full-scan `ann_lsh_topk` at the same radius (test-pinned)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    row = emb.filter(F.col("vec_id") == 0).select("embedding").head()
-    if row is None:  # query vector absent (empty/filtered corpus)
-        return spark.createDataFrame([], "vec_id long, label int, cos double")
-    idx = _lsh_index_for(spark, sf_dir)
-    qv = [float(x) for x in row.embedding]
-    return lsh_probe(emb, idx, qv, k=10, radius=4, exclude_vec_id=0)
+    queries = emb.filter(F.col("vec_id") == 0).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    return (
+        lsh_probe_batch(emb, _lsh_index_for(spark, sf_dir), queries, k=10, radius=4)
+        .orderBy("rk")
+        .select("vec_id", "label", "cos")
+    )
 
 
 def lsh_probe_batch(
@@ -410,8 +327,8 @@ def lsh_probe_batch(
     survivors then join `emb` (the indexed corpus, read once) for label
     and embedding, and the per-query top-k window (partitioned by
     query_id — a uniform key, no skew) completes the exact re-rank.
-    Per-query results are IDENTICAL to `lsh_probe` at the same radius
-    (parity test-pinned).
+    Per-query results are IDENTICAL to the full-scan `ann_lsh_topk` at the
+    same radius (parity test-pinned).
 
     `queries` must be deterministic: it is evaluated twice (once for the
     probe keys, once to re-attach each query's embedding), so a source
@@ -419,7 +336,9 @@ def lsh_probe_batch(
     limit) would silently drop or mispair candidates — cache it first."""
     if radius >= N_CHUNKS:
         raise ValueError(f"index supports radius <= {N_CHUNKS - 1}, got {radius}")
-    # same any-(radius+1)-chunks-suffice bound as lsh_probe
+    # ANY radius+1 chunks suffice: a candidate within hamming <= radius
+    # mismatches at most radius chunks, so among any radius+1 of them at
+    # least one matches exactly — smaller radii probe fewer buckets
     chunks = F.array(
         *[
             F.shiftrightunsigned(F.col("qsk"), off).bitwiseAND(F.lit((1 << size) - 1))
@@ -456,7 +375,7 @@ def lsh_probe_batch(
     # sqrt-fold runs |Q| times, not once per candidate); na*qn is the
     # identical IEEE multiply cosine() evaluates as na*nb, and the
     # when/round shape matches exactly -> every cos is bit-identical
-    # (parity with lsh_probe stays test-pinned)
+    # (parity with ann_lsh_topk and topk_cosine stays test-pinned)
     sqsum = lambda a: F.aggregate(  # noqa: E731
         F.transform(a, lambda x: x.cast("double") * x.cast("double")),
         F.lit(0.0),
@@ -496,535 +415,6 @@ def q_sim_ann_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lsh_probe_batch(emb, idx, queries, k=5, radius=4)
 
 
-def _cos_py(a: list[float], b: list[float]) -> float:
-    dot = sum(x * y for x, y in zip(a, b))
-    na = sum(x * x for x in a) ** 0.5
-    nb = sum(y * y for y in b) ** 0.5
-    return dot / (na * nb) if na and nb else 0.0
-
-
-def build_ivf_index(emb: DataFrame, index_path: str, n_centroids: int = 16,
-                    seed: int = 42) -> str:
-    """Build an IVF (inverted-file) ANN index ONCE: KMeans-partition the
-    vectors and persist them partitioned by `centroid_id`, plus a tiny
-    sidecar centroids table.  This is the offline half of the standard
-    IVF split — at 100 TB the fit is a (sampled) batch job, the layout is
-    written once, and every probe afterwards reads only n_probe/n_centroids
-    of the data via partition pruning.  Uses the public spark.ml KMeans
-    with a fixed seed (deterministic rebuilds)."""
-    import os
-
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    # bounded probe of the corpus size: enough rows to clamp k, never a
-    # full count of a 100 TB table
-    n_head = emb.limit(n_centroids).count()
-    if n_head == 0:
-        # KMeans cannot fit zero rows; write schema-bearing empty layouts
-        # so probes degrade to empty results instead of read errors
-        emb.select("vec_id", "label", "embedding").withColumn(
-            "centroid_id", F.lit(0)
-        ).limit(0).write.mode("overwrite").parquet(os.path.join(index_path, "vectors"))
-        emb.sparkSession.createDataFrame(
-            [], "centroid_id int, centroid array<double>"
-        ).write.mode("overwrite").parquet(os.path.join(index_path, "centroids"))
-        return index_path
-
-    if n_head == 1:
-        # spark.ml KMeans requires k > 1; a 1-vector corpus gets the
-        # trivial single-centroid layout
-        emb.select("vec_id", "label", "embedding").withColumn(
-            "centroid_id", F.lit(0)
-        ).write.mode("overwrite").partitionBy("centroid_id").parquet(
-            os.path.join(index_path, "vectors")
-        )
-        only = emb.select("embedding").head()
-        emb.sparkSession.createDataFrame(
-            [(0, [float(x) for x in only.embedding])],
-            "centroid_id int, centroid array<double>",
-        ).write.mode("overwrite").parquet(os.path.join(index_path, "centroids"))
-        return index_path
-
-    vecs = emb.withColumn("features", array_to_vector("embedding"))
-    km = KMeans(
-        k=min(n_centroids, n_head),  # k can never exceed the point count
-        seed=seed,
-        featuresCol="features",
-        predictionCol="centroid_id",
-    )
-    model = km.fit(vecs)
-    assigned = model.transform(vecs).select("vec_id", "label", "embedding", "centroid_id")
-    assigned.write.mode("overwrite").partitionBy("centroid_id").parquet(
-        os.path.join(index_path, "vectors")
-    )
-    cent = emb.sparkSession.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
-        "centroid_id int, centroid array<double>",
-    )
-    cent.coalesce(1).write.mode("overwrite").parquet(os.path.join(index_path, "centroids"))
-    return index_path
-
-
-def ivf_probe(
-    spark: SparkSession,
-    index_path: str,
-    query_vec: list[float],
-    k: int = 10,
-    n_probe: int = 4,
-    exclude_vec_id: int | None = None,
-) -> DataFrame:
-    """Online half of the IVF split: rank centroids against the query
-    driver-side (the centroid table is n_centroids rows — a sanctioned tiny
-    collect), then scan ONLY the n_probe matching partitions of the
-    partitioned vector layout (partition pruning, asserted in
-    tests/test_similarity.py) and exact-cosine re-rank inside them."""
-    import os
-
-    cents = spark.read.parquet(os.path.join(index_path, "centroids")).collect()
-    qv = [float(x) for x in query_vec]
-    probe = [
-        int(r.centroid_id)
-        for r in sorted(cents, key=lambda r: -_cos_py(qv, list(r.centroid)))[:n_probe]
-    ]
-    vectors = spark.read.parquet(os.path.join(index_path, "vectors")).filter(
-        F.col("centroid_id").isin(probe) if probe else F.lit(False)
-    )
-    if exclude_vec_id is not None:
-        vectors = vectors.filter(F.col("vec_id") != exclude_vec_id)
-    qe = F.array(*[F.lit(x) for x in qv])
-    return (
-        vectors.select(
-            "vec_id", "label", F.col("centroid_id").cast("int").alias("centroid_id"),
-            F.round(cosine(F.col("embedding"), qe), 4).alias("cos"),
-        )
-        .orderBy(F.col("cos").desc(), F.col("vec_id"))
-        .limit(k)
-    )
-
-
-# Per-process index cache for the driver-facing query: the driver and bench
-# call q_sim_ivf repeatedly with the same sf_dir — fit once, probe many.
-_IVF_INDEX: dict[tuple, str] = {}
-
-
-def _ivf_index_for(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-keyed per-process IVF index cache: if the fixture is
-    regenerated in place, a stale on-disk index from a previous process
-    must NOT be reused (the IVF queries have no oracle, so outdated
-    neighbors would go unnoticed)."""
-    from realparse_spark.cache import fingerprint_key, snapshot_path
-
-    return snapshot_path(
-        _IVF_INDEX,
-        fingerprint_key(sf_dir, "embeddings", 16, 42),
-        "realparse_ivf_",
-        lambda tmp: build_ivf_index(
-            load_table(spark, sf_dir, "embeddings"), tmp, n_centroids=16, seed=42
-        ),
-    )
-
-
-def q_sim_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    row = emb.filter(F.col("vec_id") == 0).select("embedding").head()
-    if row is None:  # query vector absent (empty/filtered corpus)
-        return spark.createDataFrame([], "vec_id long, label int, centroid_id int, cos double")
-    path = _ivf_index_for(spark, sf_dir)
-    qv = [float(x) for x in row.embedding]
-    return ivf_probe(spark, path, qv, k=10, n_probe=4, exclude_vec_id=0)
-
-
-def knn_join_ivf(spark: SparkSession, index_path: str, k: int = 3) -> DataFrame:
-    """Batch k-NN with the IVF centroid id as the block key — the 100 TB
-    block key that `knn_join`'s docstring promises (`label` is the fixture
-    stand-in).  Reads the partitioned IVF vector layout; the self-join on
-    `centroid_id` bounds pairwise work to |block|² per centroid block, and
-    blocks stay balanced because KMeans sizes them from the data (vs a
-    categorical label whose block sizes the pipeline doesn't control).
-    Approximate at block boundaries — recall-gated in tests."""
-    import os
-
-    vecs = spark.read.parquet(os.path.join(index_path, "vectors"))
-    # hoist each side's norm BELOW the join: `cosine()` inlined per pair
-    # re-folds both norms for every candidate pair (O(|block|^2 * d) extra
-    # lambda evaluations); computing sqrt(sum x^2) once per input row is
-    # the identical float expression on identical values, so dot/(na*nb)
-    # is bit-for-bit the same cosine (guide §1.2 step 2: per-task work).
-    norm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(
-            F.transform(c, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
-    a = vecs.select(
-        F.col("vec_id").alias("vec_a"), "centroid_id",
-        F.col("embedding").alias("ea"), norm(F.col("embedding")).alias("na"),
-    )
-    b = vecs.select(
-        F.col("vec_id").alias("vec_b"), "centroid_id",
-        F.col("embedding").alias("eb"), norm(F.col("embedding")).alias("nb"),
-    )
-    dot = F.aggregate(
-        F.zip_with("ea", "eb", lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    denom = F.col("na") * F.col("nb")
-    pairs = (
-        a.join(b, "centroid_id")
-        .filter(F.col("vec_a") != F.col("vec_b"))
-        .select(
-            F.col("centroid_id").cast("int").alias("centroid_id"),
-            "vec_a",
-            "vec_b",
-            F.round(F.when(denom > 0, dot / denom), 4).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("vec_a").orderBy(F.col("cos").desc(), F.col("vec_b"))
-    return (
-        pairs.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("vec_a", "rk", "vec_b", "centroid_id", "cos")
-    )
-
-
-def q_knn_join_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return knn_join_ivf(spark, _ivf_index_for(spark, sf_dir), k=3)
-
-
-# ---------------------------------------------------------------------------
-# Product quantization (PQ): the 100 TB vector-COMPRESSION path.
-#
-# IVF (above) prunes WHICH vectors a probe reads; PQ shrinks WHAT is read:
-# split the d-dim vector into M subspaces, fit a K-centroid codebook per
-# subspace (offline, sampled at scale), and store each vector as M small
-# codes — 8 bytes here vs 256 for raw float32 (32x).  Probes then score in
-# the COMPRESSED domain via asymmetric distance computation (ADC): the
-# query stays full-precision, per-subspace dot products against all K
-# centroids are precomputed driver-side into M tiny lookup tables, and
-# scoring a corpus vector is M array lookups + adds — no decode, no
-# per-dim math.  (Jégou et al., "Product Quantization for Nearest
-# Neighbor Search", TPAMI 2011 — the IVF-PQ layout every production ANN
-# system ships.)
-#
-# Approximate by construction -> rows-only driver checks; reconstruction
-# error and ADC recall are gated in tests/test_similarity.py.
-# ---------------------------------------------------------------------------
-
-PQ_M = 8   # subspaces
-PQ_K = 64  # codes per subspace (6 bits; 8 codes/vector vs 256 B float32)
-PQ_FIT_SAMPLE = 16384  # codebooks always fit on a bounded sample
-
-
-def _subslices(dim: int, m: int = PQ_M) -> list[tuple[int, int]]:
-    """(offset, length) per subspace; lengths differ by at most 1."""
-    base, rem = divmod(dim, m)
-    sizes = [base + (1 if i < rem else 0) for i in range(m)]
-    offs = [sum(sizes[:i]) for i in range(m)]
-    return list(zip(offs, sizes))
-
-
-def fit_pq_codebooks(
-    emb: DataFrame,
-    m: int = PQ_M,
-    k: int = PQ_K,
-    seed: int = 42,
-    sample: int = PQ_FIT_SAMPLE,
-    iters: int = 25,
-) -> list[list[list[float]]]:
-    """Offline half: per-subspace k-means codebooks, fit DRIVER-SIDE on a
-    bounded deterministic sample — the `sample` lowest xxhash64(vec_id)
-    rows, i.e. a UNIFORM hash sample via TakeOrdered (per-partition heaps,
-    never a full sort; lowest-raw-ids would bias the fit to one region of
-    an id-correlated corpus).  That is the production shape: at 100 TB
-    codebooks are always trained on a sample (16k × 64 floats = 4 MB
-    here), then applied corpus-wide; an exact distributed fit would buy
-    nothing.  Seeded numpy k-means (argmin ties -> lowest code) keeps
-    rebuilds deterministic.  Result: M×K×(d/M) floats ≈ 32 KB, shipped to
-    the encode kernel as a constant."""
-    import numpy as np
-
-    rows = (
-        emb.select("embedding", F.xxhash64("vec_id").alias("_h"))
-        .orderBy("_h")
-        .limit(sample)
-        .collect()
-    )
-    if not rows:
-        return []
-    X = np.asarray([r.embedding for r in rows], dtype=np.float64)
-    dim = X.shape[1]
-    slices = _subslices(dim, m)
-    rng = np.random.RandomState(seed)
-    books: list[list[list[float]]] = []
-    for off, size in slices:
-        sub = X[:, off : off + size]
-        kk = min(k, len(sub))
-        # k-means++ seeding (random init loses ~30pp of downstream ADC
-        # recall on this data — measured)
-        idx = [int(rng.randint(len(sub)))]
-        d2min = ((sub - sub[idx[0]]) ** 2).sum(axis=1)
-        for _ in range(1, kk):
-            p = d2min / d2min.sum() if d2min.sum() > 0 else None
-            nxt = int(rng.choice(len(sub), p=p))
-            idx.append(nxt)
-            d2min = np.minimum(d2min, ((sub - sub[nxt]) ** 2).sum(axis=1))
-        C = sub[idx].copy()
-        for _ in range(iters):
-            d2 = ((sub[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-            assign = d2.argmin(axis=1)
-            for j in range(kk):
-                pts = sub[assign == j]
-                if len(pts):
-                    C[j] = pts.mean(axis=0)
-        books.append([[float(x) for x in c] for c in C])
-    return books
-
-
-def pq_encode(emb: DataFrame, books: list[list[list[float]]]) -> DataFrame:
-    """Encode every vector as M codes via a vectorized Arrow kernel
-    (`mapInPandas` + one batched (n,1,sd)-(1,k,sd) argmin per subspace) —
-    the sanctioned Python escape (cf. `topk_cosine_arrow`): M×K distance
-    expressions would blow past codegen limits and run interpreted (~20 s
-    at sf0.1 measured; the kernel is ~0.1 s).  Shuffle-free, deterministic
-    (numpy argmin breaks ties to the lowest code).  Adds `codes`
-    (array<int>) and `mse` (per-dim reconstruction error)."""
-    import numpy as np
-
-    if not books:
-        return emb.select(
-            "vec_id", "label",
-            F.lit(None).cast("array<int>").alias("codes"),
-            F.lit(None).cast("double").alias("mse"),
-        ).limit(0)
-    dim = sum(len(b[0]) for b in books)
-    slices = _subslices(dim, len(books))
-    cents = [np.asarray(b, dtype=np.float64) for b in books]
-
-    def kernel(batches):
-        import pandas as pd  # noqa: PLC0415 — executor-side import
-
-        for pdf in batches:
-            X = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            codes = np.empty((len(X), len(cents)), dtype=np.int32)
-            err = np.zeros(len(X))
-            for mi, ((off, size), C) in enumerate(zip(slices, cents)):
-                sub = X[:, off : off + size]
-                d2 = ((sub[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-                c = d2.argmin(axis=1)
-                codes[:, mi] = c
-                err += d2[np.arange(len(X)), c]
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"],
-                    "label": pdf["label"],
-                    "codes": list(codes),
-                    "mse": err / dim,
-                }
-            )
-
-    return emb.select("vec_id", "label", "embedding").mapInPandas(
-        kernel, "vec_id long, label int, codes array<int>, mse double"
-    )
-
-
-_PQ_BOOKS: dict[tuple, list[list[list[float]]]] = {}
-
-
-def _pq_books_for(spark: SparkSession, sf_dir: str) -> list[list[list[float]]]:
-    import os
-
-    st = os.stat(os.path.join(sf_dir, "embeddings.parquet"))
-    key = (os.path.abspath(sf_dir), int(st.st_mtime_ns), st.st_size, PQ_M, PQ_K)
-    books = _PQ_BOOKS.get(key)
-    if books is None:
-        books = fit_pq_codebooks(load_table(spark, sf_dir, "embeddings"))
-        _PQ_BOOKS[key] = books
-    return books
-
-
-def q_emb_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver query for `emb_pq`: encode the corpus (64 B float32 payload →
-    4 codes) and report per-label compression quality — vector count and
-    mean per-dim reconstruction error.  Rows-only (KMeans codebooks are
-    not SQL-reproducible); the error bound vs the 1-centroid baseline and
-    the ADC recall are pytest-gated."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    books = _pq_books_for(spark, sf_dir)
-    if not books:
-        return spark.createDataFrame([], "label int, n_vecs bigint, avg_mse double")
-    return (
-        pq_encode(emb, books)
-        .groupBy("label")
-        .agg(
-            F.count(F.lit(1)).alias("n_vecs"),
-            F.round(F.avg("mse"), 6).alias("avg_mse"),
-        )
-        .orderBy("label")
-    )
-
-
-def pq_adc_topk(
-    emb: DataFrame,
-    books: list[list[list[float]]],
-    query_vec: list[float],
-    k: int = 10,
-    exclude_vec_id: int | None = None,
-) -> DataFrame:
-    """ADC probe: score = Σ_m LUT_m[code_m], where LUT_m[j] =
-    dot(query_sub_m, centroid_{m,j}) is precomputed driver-side (M×K dots
-    on 4 KB of codebook — no job).  The corpus side never touches its
-    floats: M array lookups + adds per row, over the codes column only.
-    Scores approximate the raw dot product; ranking quality is the PQ
-    trade, recall-gated in tests."""
-    if not books:
-        raise ValueError("pq_adc_topk: empty codebooks (fit_pq_codebooks first)")
-    dim = sum(len(b[0]) for b in books)
-    slices = _subslices(dim, len(books))
-    qv = [float(x) for x in query_vec]
-    luts = [
-        [sum(qv[off + i] * cent[i] for i in range(size)) for cent in book]
-        for (off, size), book in zip(slices, books)
-    ]
-    encoded = pq_encode(emb, books)
-    if exclude_vec_id is not None:
-        encoded = encoded.filter(F.col("vec_id") != exclude_vec_id)
-    score = None
-    for mi, lut in enumerate(luts):
-        term = F.element_at(
-            F.array(*[F.lit(v) for v in lut]),
-            F.element_at(F.col("codes"), mi + 1) + 1,
-        )
-        score = term if score is None else score + term
-    return (
-        encoded.select(
-            "vec_id", "label", F.round(score, 4).alias("adc_dot")
-        )
-        .orderBy(F.col("adc_dot").desc(), F.col("vec_id"))
-        .limit(k)
-    )
-
-
-def pq_search(
-    emb: DataFrame,
-    books: list[list[list[float]]],
-    query_vec: list[float],
-    k: int = 10,
-    shortlist: int = 100,
-    exclude_vec_id: int | None = None,
-) -> DataFrame:
-    """Two-phase PQ search, the shape every IVF-PQ system ships: ADC over
-    the compressed codes produces a `shortlist` of candidates (reading
-    NOTHING but 8 codes per corpus row), then ONLY those rows' floats are
-    fetched for an exact cosine re-rank.  At 100 TB the codes table is
-    ~1/32 the corpus and fits hot storage; the re-rank reads `shortlist`
-    rows — the float corpus is never scanned.  Ranking equals brute force
-    whenever the true top-k survives the shortlist (recall-gated in
-    tests)."""
-    sl = pq_adc_topk(
-        emb, books, query_vec, k=shortlist, exclude_vec_id=exclude_vec_id
-    ).select("vec_id")
-    qe = F.array(*[F.lit(float(x)) for x in query_vec])
-    return (
-        emb.join(F.broadcast(sl), "vec_id")
-        .select(
-            "vec_id", "label", F.round(cosine(F.col("embedding"), qe), 4).alias("cos")
-        )
-        .orderBy(F.col("cos").desc(), "vec_id")
-        .limit(k)
-    )
-
-
-def q_sim_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver query for `sim_ann_pq`: compressed-domain ADC shortlist +
-    exact re-rank for stored vector 0."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    row = emb.filter(F.col("vec_id") == 0).select("embedding").head()
-    if row is None:
-        return spark.createDataFrame([], "vec_id long, label int, cos double")
-    books = _pq_books_for(spark, sf_dir)
-    # the shortlist is THE recall knob: this corpus is random unit vectors
-    # (PQ's adversarial worst case — no cluster structure, so ADC noise is
-    # large vs the cosine spread), and a fixed shortlist decays with corpus
-    # growth; ~10% holds recall@10 >= 0.9 at every fixture scale (parquet
-    # row count is a metadata read, not a scan)
-    shortlist = max(100, emb.count() // 10)
-    return pq_search(emb, books, [float(x) for x in row.embedding], k=10,
-                     shortlist=shortlist, exclude_vec_id=0)
-
-
-def ivf_pq_search(
-    spark: SparkSession,
-    index_path: str,
-    books: list[list[list[float]]],
-    query_vec: list[float],
-    k: int = 10,
-    n_probe: int = 4,
-    shortlist: int = 100,
-    exclude_vec_id: int | None = None,
-) -> DataFrame:
-    """IVF-PQ — the two halves composed into the layout every production
-    ANN system ships (FAISS's default): IVF partition pruning decides
-    WHICH vectors are read (n_probe of n_centroids partitions), PQ/ADC
-    decides HOW — codes only — and the exact re-rank touches floats for
-    just the shortlist.  At 100 TB: centroid ranking is driver-side over
-    a KB table, the probe reads ~n_probe/n_centroids of the CODES
-    (~1/32 of the vector bytes), and float I/O is `shortlist` rows.
-    Recall multiplies the two stages' recalls — both knobs (n_probe,
-    shortlist) scale independently; gated in tests."""
-    import os
-
-    cents = spark.read.parquet(os.path.join(index_path, "centroids")).collect()
-    qv = [float(x) for x in query_vec]
-    probe = [
-        int(r.centroid_id)
-        for r in sorted(cents, key=lambda r: -_cos_py(qv, list(r.centroid)))[:n_probe]
-    ]
-    vectors = spark.read.parquet(os.path.join(index_path, "vectors")).filter(
-        F.col("centroid_id").isin(probe) if probe else F.lit(False)
-    )
-    if exclude_vec_id is not None:
-        vectors = vectors.filter(F.col("vec_id") != exclude_vec_id)
-    # ADC shortlist over the pruned partitions' codes, then exact re-rank
-    sl = pq_adc_topk(vectors, books, qv, k=shortlist).select("vec_id")
-    qe = F.array(*[F.lit(x) for x in qv])
-    return (
-        vectors.join(F.broadcast(sl), "vec_id")
-        .select(
-            "vec_id", "label",
-            F.col("centroid_id").cast("int").alias("centroid_id"),
-            F.round(cosine(F.col("embedding"), qe), 4).alias("cos"),
-        )
-        .orderBy(F.col("cos").desc(), "vec_id")
-        .limit(k)
-    )
-
-
-def q_sim_ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver query for `sim_ann_ivf_pq`: the composed IVF-PQ probe for
-    stored vector 0.  n_probe=12 of 16: random unit vectors give KMeans
-    nothing to cluster, so true neighbors scatter across partitions and
-    the IVF stage needs a wide probe for recall >= 0.9 here — on a real
-    clustered corpus the same layout runs n_probe ≈ 1-4 of hundreds (the
-    whole point of the pruning); the ~10% ADC shortlist mirrors
-    `sim_ann_pq`."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    row = emb.filter(F.col("vec_id") == 0).select("embedding").head()
-    if row is None:
-        return spark.createDataFrame(
-            [], "vec_id long, label int, centroid_id int, cos double"
-        )
-    idx = _ivf_index_for(spark, sf_dir)
-    books = _pq_books_for(spark, sf_dir)
-    n = emb.count()
-    return ivf_pq_search(
-        spark, idx, books, [float(x) for x in row.embedding],
-        k=10, n_probe=12, shortlist=max(100, n // 10), exclude_vec_id=0,
-    )
-
-
 # ---------------------------------------------------------------------------
 # Matryoshka truncation evaluation
 # ---------------------------------------------------------------------------
@@ -1052,15 +442,15 @@ def matryoshka_eval(
     explode over the width list (never one scan per width); per-(query,
     width) ranking is a keyed window over the corpus — the brute-force
     eval baseline, priced per eval query, matching `topk_cosine`.  A
-    production run at full corpus scale evaluates against IVF/LSH
-    candidate sets instead (the indexes above); this operator is the
+    production run at full corpus scale evaluates against LSH candidate
+    sets instead (the index above); this operator is the
     exact yardstick those evals compare to."""
     # explode the width list and compute each side's truncated slice AND
     # its norm BEFORE the pair join: `cosine()` inlined per pair re-folds
     # both slice norms for every (query, vector, width) row — precomputing
     # them per (row, width) is the identical float expression on identical
-    # values, so dot/(na*nb) is bit-for-bit the same cosine (the
-    # knn_join_ivf norm-hoist; guide §1.2 step 2).
+    # values, so dot/(na*nb) is bit-for-bit the same cosine (guide §1.2
+    # step 2).
     dim_arr = F.explode(F.array(*[F.lit(d) for d in dims])).alias("dim")
     norm = lambda c: F.sqrt(  # noqa: E731
         F.aggregate(
@@ -1248,9 +638,10 @@ def retrieval_eval(
     scan scores all queries; the top-k window partitions by query id
     (uniform key, k rows kept per query).  This is the exact-baseline
     eval — production evaluates an ANN index by swapping the scored
-    stage for the index probe (`lsh_probe_batch` / `knn_join_ivf`)
-    against the same planted relevance, which is why the metric plumbing
-    lives apart from any index (`_retrieval_metrics`)."""
+    stage for the index probe (`lsh_probe_batch`, as
+    `q_retrieval_eval_ann` does) against the same planted relevance,
+    which is why the metric plumbing lives apart from any index
+    (`_retrieval_metrics`)."""
     labn = emb.groupBy("label").agg(F.count(F.lit(1)).cast("int").alias("n_label"))
     scored = _scored_queries(emb, query_mod)
     w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("vec_id"))
@@ -1338,8 +729,9 @@ def q_retrieval_eval_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     not paper over.  Rows-only driver check (the LSH sketch is
     xxhash-free but hyperplane-LCG based — not worth a second SQL
     mirror); the exact-side arithmetic is already hash-verified via
-    `retrieval_eval`, and bounds/consistency gates live in
-    tests/test_similarity.py.
+    `retrieval_eval`, bounds/consistency gates live in
+    tests/test_similarity.py, and the probe itself is tied to the exact
+    `topk_cosine` there (recall@k and exact scores).
 
     Scale: probe work is Σ|bucket| over probed buckets (dynamic
     partition pruning on the postings scan), the re-rank reads
@@ -2153,15 +1545,9 @@ FROM met GROUP BY 1 ORDER BY 1
 
 QUERIES = {
     "sim_topk_cosine": q_sim_topk,
-    "sim_topk_cosine_arrow": q_sim_topk_arrow,
     "sim_ann_lsh": q_sim_ann,
     "sim_ann_lsh_batch": q_sim_ann_batch,
-    "sim_ann_ivf": q_sim_ivf,
     "emb_knn_join": q_knn_join,
-    "emb_knn_join_ivf": q_knn_join_ivf,
-    "emb_pq": q_emb_pq,
-    "sim_ann_pq": q_sim_ann_pq,
-    "sim_ann_ivf_pq": q_sim_ann_ivf_pq,
     "emb_matryoshka_eval": q_emb_matryoshka,
     "retrieval_eval": q_retrieval_eval,
     # ANN-probe evaluation: rows-only (LCG hyperplane sketches); the
@@ -2177,10 +1563,9 @@ QUERIES = {
 
 ORACLES = {
     "sim_topk_cosine": SIM_TOPK_SQL,
-    # the Arrow path must reproduce the exact same rounded scores
-    "sim_topk_cosine_arrow": SIM_TOPK_SQL,
-    # sim_ann_lsh is approximate by design -> rows-only driver check;
-    # recall vs brute force asserted in tests/test_similarity.py.
+    # sim_ann_lsh is approximate by design -> rows-only driver check; its
+    # probe is tied to ann_lsh_topk and to topk_cosine (recall and exact
+    # scores) in tests/test_similarity.py.
     "emb_knn_join": EMB_KNN_JOIN_SQL,
     "emb_matryoshka_eval": EMB_MATRYOSHKA_SQL,
     "retrieval_eval": RETRIEVAL_EVAL_SQL,

@@ -40,17 +40,16 @@ def test_all_queries_have_oracle_or_reason():
         # family row is dedup_minhash_portable (md5 signatures, oracled)
         "dedup_incremental_minhash",  # xxhash64 band keys; batch-equality gate in test_dedup
         "dedup_simhash",
+        # sim_ann_lsh, sim_ann_lsh_batch and retrieval_eval_ann reach the
+        # index only through lsh_probe_batch, which test_similarity ties to
+        # the full-scan ann_lsh_topk (row parity) and to the exact
+        # topk_cosine (recall@k and exact scores)
         "sim_ann_lsh",
-        "sim_ann_lsh_batch",  # approximate; exact per-query parity gate vs lsh_probe
+        "sim_ann_lsh_batch",
         "retrieval_eval_ann",  # ANN probe in the retrieval seat; metric
         # arithmetic hash-verified via retrieval_eval's oracle (shared
         # _retrieval_metrics rollup); bounds/consistency gates in
         # test_similarity
-        "sim_ann_ivf",
-        "emb_knn_join_ivf",  # approximate (block boundaries); recall-gated
-        "emb_pq",  # KMeans codebooks not SQL-reproducible; error-bound gate
-        "sim_ann_pq",  # compressed-domain ADC ranking; recall-gated
-        "sim_ann_ivf_pq",  # composed IVF-PQ probe; recall-gated
         "approx_distinct",
         "approx_distinct_merge",  # HLL blob merge; error gate vs exact in tests
         "approx_topk_users",  # frequent-items sketch; exact-match gate in tests
