@@ -338,6 +338,22 @@ def test_lsh_batch_probe_recall_and_scores_vs_exact(spark, tmp_path):
     assert min(recalls) >= 0.95, recalls
 
 
+def test_ann_recall_vs_bruteforce(spark, sf_dir):
+    emb = load_table(spark, sf_dir, "embeddings")
+    exact = [r.vec_id for r in topk_cosine(emb, query_vec_id=0, k=10).collect()]
+    approx = [r.vec_id for r in ann_lsh_topk(emb, query_vec_id=0, k=10, radius=6).collect()]
+    recall = len(set(exact) & set(approx)) / len(exact)
+    assert recall >= 0.5, (recall, exact, approx)
+
+
+def test_ann_scores_match_exact_for_common_hits(spark, sf_dir):
+    emb = load_table(spark, sf_dir, "embeddings")
+    exact = {r.vec_id: r.cos for r in topk_cosine(emb, query_vec_id=0, k=10).collect()}
+    approx = {r.vec_id: r.cos for r in ann_lsh_topk(emb, query_vec_id=0, k=10, radius=6).collect()}
+    for vid in set(exact) & set(approx):
+        assert exact[vid] == approx[vid]  # same re-rank metric, same value
+
+
 def test_matryoshka_lossless_truncation_perfect_recall(spark):
     """If every component beyond the smallest evaluated width is zero,
     truncation loses nothing: recall@k must be exactly 1.0 at EVERY
