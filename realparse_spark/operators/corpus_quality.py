@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from realparse_spark.operators.dedup import word_ngrams
 from realparse_spark.operators.distrank import rank_distributed
-from realparse_spark.operators.text import WINNOW_P, _poly_hash_expr, ws_tokens
+from realparse_spark.operators.text import WINNOW_P, _poly_hash_expr, fingerprint_md5, ws_tokens
 from realparse_spark.sources.tables import load_table
 
 # ---------------------------------------------------------------------------
@@ -142,11 +142,10 @@ def q_corpus_datasheet(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     n_tok = F.size(ws_tokens(F.col("text")))
     n_punct = F.size(F.regexp_extract_all(F.col("text"), F.lit(r"[^\w\s]"), 0))
-    norm = F.regexp_replace(F.trim(F.lower(F.col("text"))), r"\s+", " ")
     base = docs.select(
         "source",
         "lang",
-        F.md5(norm).alias("fp"),
+        fingerprint_md5(F.col("text")).alias("fp"),
         n_tok.cast("bigint").alias("n_tok"),
         ((n_tok >= 5) & (n_punct * 5 < F.length("text")))
         .cast("long")

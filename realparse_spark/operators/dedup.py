@@ -11,10 +11,13 @@ Scale design notes (the part that matters at 100 TB):
             > df_cap docs) bounds the candidate blowup the way real
             pipelines do.
 - minhash:  constant-size signatures (K hashes) replace the full ngram
-            set; LSH banding makes candidate generation O(docs x bands),
-            i.e. linear scans + one groupBy per band batch — the only
-            strategy that survives 100 TB.  Signatures are built with
-            one posexplode x K min-aggregation, all JVM-side.
+            set; LSH banding makes candidate generation O(docs x bands) —
+            the only strategy that survives 100 TB.  Signatures are one
+            narrow array_min(transform) projection per permutation (zero
+            shuffles, all JVM-side); banding is `_band_join`, one
+            (band, bucket) window plus one equi-join and one verify, and
+            the batch self-join, the incremental probe and the oracled
+            portable row all run it.
 - simhash:  64-bit signature via bitwise vote over token hashes; near-dup
             candidates join on 16-bit chunk equality (pigeonhole: hamming
             <= 3 guarantees one of 4 chunks equal).
@@ -23,18 +26,21 @@ Scale design notes (the part that matters at 100 TB):
 
 `minhash` / `simhash` use xxhash64, which DuckDB cannot reproduce, so the
 driver records rows-only checks for them; their *quality* (agreement with
-exact Jaccard) is asserted in tests/test_dedup.py instead.
+exact Jaccard) is asserted in tests/test_dedup.py instead.  Their md5-hash
+twins (`dedup_minhash_portable`, `dedup_simhash_portable`) are oracled and
+differ only in the token hash (and the MinHash band key), so the DuckDB
+check covers the same banding and pigeonhole plans.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 from realparse_spark.cache import fingerprint_key, snapshot_path
 from realparse_spark.operators.distrank import rank_distributed
-from realparse_spark.operators.text import ws_tokens
+from realparse_spark.operators.text import fingerprint_md5, ws_tokens
 from realparse_spark.sources.tables import fan_out, load_table
 
 # deterministic MinHash permutation parameters (public textbook scheme:
@@ -74,9 +80,8 @@ def word_ngrams(text: Column, n: int = 3) -> Column:
 def exact_dedup(docs: DataFrame) -> DataFrame:
     """Hash-groupBy exact dedup: canonical doc = min(doc_id) per normalized
     text hash; emits group size so the caller can filter dup groups."""
-    norm = F.regexp_replace(F.trim(F.lower(F.col("text"))), r"\s+", " ")
     return (
-        docs.select("doc_id", F.md5(norm).alias("fp"))
+        docs.select("doc_id", fingerprint_md5(F.col("text")).alias("fp"))
         .groupBy("fp")
         .agg(
             F.min("doc_id").alias("canonical_doc_id"),
@@ -137,11 +142,10 @@ def soft_dedup_weights(docs: DataFrame) -> DataFrame:
     fingerprint; the count joins back on the same key (shuffle reuse),
     then ONE groupBy(source) with O(sources) output.  No pairwise work
     anywhere — this is the linear companion to `dedup_exact`."""
-    norm = F.regexp_replace(F.trim(F.lower(F.col("text"))), r"\s+", " ")
     base = docs.select(
         "doc_id",
         "source",
-        F.md5(norm).alias("fp"),
+        fingerprint_md5(F.col("text")).alias("fp"),
         F.size(ws_tokens(F.col("text"))).cast("bigint").alias("n_tokens"),
     )
     mult = base.groupBy("fp").agg(F.count(F.lit(1)).alias("m"))
@@ -232,12 +236,17 @@ def ngram_jaccard_pairs(
     (The previous shape deduplicated candidates then re-joined both full
     shingle arrays to score — at bench scale that array scoring was ~5x
     the cost of everything else.)"""
-    jac = F.round(F.col("c").cast("double") / (F.col("na") + F.col("nb") - F.col("c")), 6)
-    return (
-        _gram_pair_counts(docs, n, df_cap)
-        .select("doc_a", "doc_b", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
-    )
+    return _gram_score(_gram_pair_counts(docs, n, df_cap), "jaccard", threshold)
+
+
+def _gram_score(counts: DataFrame, measure: str, threshold: float = 0.0) -> DataFrame:
+    """(doc_a, doc_b, <measure>) for the pairs of a `_gram_pair_counts_from`
+    frame scoring >= threshold: "jaccard" |A∩B| / |A∪B| or "containment"
+    |A∩B| / min(|A|, |B|), round(6) as the oracles compute them — the one
+    formula per measure that the batch and snapshot paths share."""
+    c = F.col("c").cast("double")
+    den = F.col("na") + F.col("nb") - F.col("c") if measure == "jaccard" else F.least(F.col("na"), F.col("nb"))
+    return counts.select("doc_a", "doc_b", F.round(c / den, 6).alias(measure)).filter(F.col(measure) >= threshold)
 
 
 def _rare_postings(docs: DataFrame, n: int, df_cap: int) -> DataFrame:
@@ -296,23 +305,13 @@ def ngram_containment_pairs(
     Jaccard misses (the union term dilutes the score).  Same inverted-index
     candidate join as `ngram_jaccard_pairs`; only the score differs, so the
     same df_cap bounds the quadratic blowup at scale."""
-    cont = F.round(F.col("c").cast("double") / F.least(F.col("na"), F.col("nb")), 6)
-    return (
-        _gram_pair_counts(docs, n, df_cap)
-        .select("doc_a", "doc_b", cont.alias("containment"))
-        .filter(F.col("containment") >= threshold)
-    )
+    return _gram_score(_gram_pair_counts(docs, n, df_cap), "containment", threshold)
 
 
 def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # reads the shared per-snapshot posting table (see _postings_for)
     rare = spark.read.parquet(_postings_for(spark, sf_dir, n=3, df_cap=1000))
-    cont = F.round(F.col("c").cast("double") / F.least(F.col("na"), F.col("nb")), 6)
-    return (
-        _gram_pair_counts_from(rare)
-        .select("doc_a", "doc_b", cont.alias("containment"))
-        .filter(F.col("containment") >= 0.8)
-    )
+    return _gram_score(_gram_pair_counts_from(rare), "containment", 0.8)
 
 
 # DEDUP_CONTAINMENT_SQL is defined after _NGRAM_CTES_TEMPLATE below.
@@ -321,12 +320,7 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     # reads the shared per-snapshot posting table (see _postings_for)
     rare = spark.read.parquet(_postings_for(spark, sf_dir, n=3, df_cap=1000))
-    jac = F.round(F.col("c").cast("double") / (F.col("na") + F.col("nb") - F.col("c")), 6)
-    return (
-        _gram_pair_counts_from(rare)
-        .select("doc_a", "doc_b", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= 0.5)
-    )
+    return _gram_score(_gram_pair_counts_from(rare), "jaccard", 0.5)
 
 
 # ---------------------------------------------------------------------------
@@ -655,46 +649,151 @@ DEDUP_CONTAINMENT_SQL = (
 # MinHash + LSH near-dup (the 100 TB-scale path; rows-only driver check)
 # ---------------------------------------------------------------------------
 
+# Token hashes, as SQL over a token `t`: xxhash64 for production, and md5's
+# first 15 hex chars as an int (the hash_split idiom, pipeline_ops.py) for
+# the engine-portable companions that DuckDB reproduces bit for bit.
+_XXHASH_TOKEN = "xxhash64(t)"
+_MD5_TOKEN = "cast(conv(substring(md5(t), 1, 15), 16, 10) as bigint)"
 
-def minhash_signatures(docs: DataFrame, n: int = 3, k: int = 32) -> DataFrame:
-    """K-permutation MinHash signatures over word-n-gram shingles.
-    Shape: hash each token ONCE (xxhash64), combine per-window with integer
-    arithmetic (no per-shingle string building, no distinct — min() is
-    duplicate-insensitive), then take each permutation's minimum with
-    `array_min(transform(...))` INSIDE the row.  The whole signature build
-    is a narrow projection: zero shuffles, scan-speed at any scale (the
-    previous shape exploded shingles into rows and re-grouped by doc_id —
-    a full shuffle of |docs| x |shingles| rows that this plan deletes).
 
-    Docs with fewer than n tokens emit one partial shingle (missing
+def _shingle_hashes(docs: DataFrame, token_hash: str) -> DataFrame:
+    """(doc_id, _sh): every whitespace token hashed ONCE by `token_hash`,
+    then each 3-token window combined with integer arithmetic (no
+    per-shingle string building, no distinct — min() is
+    duplicate-insensitive).  Token hashes are reduced to 31 bits BEFORE the
+    polynomial combine, so every intermediate stays << 2^63 (a < p and
+    h < p, so a*h+b < 2^62 — no silent overflow even under ANSI mode).
+
+    Docs with fewer than 3 tokens emit one partial shingle (missing
     positions hash as 0 via try_element_at -> ifnull) instead of
     aborting: under the driver's ANSI session a plain element_at on a
     short token array raises INVALID_ARRAY_INDEX_IN_ELEMENT_AT."""
-    if n != 3:
-        raise ValueError("arithmetic shingle combine is specialized to n=3")
     toks = docs.select("doc_id", ws_tokens(F.col("text")).alias("_toks"))
-    # token hashes reduced to 31-bit BEFORE the polynomial combine so every
-    # intermediate stays << 2^63 (a < p and h < p, so a*h+b < 2^62 — no
-    # silent overflow even under ANSI mode)
-    hashed = toks.withColumn(
-        "_th", F.expr("transform(_toks, t -> pmod(xxhash64(t), 2147483647))")
-    ).withColumn(
-        "_sh",
+    th = F.expr(f"transform(_toks, t -> pmod({token_hash}, 2147483647))")
+    return toks.select("doc_id", th.alias("_th")).select(
+        "doc_id",
         F.expr(
             "transform(sequence(1, greatest(size(_th)-2, 1)),"
             " i -> pmod(ifnull(try_element_at(_th,i),0)*1000003"
             "        + ifnull(try_element_at(_th,i+1),0)*8191"
             "        + ifnull(try_element_at(_th,i+2),0), 2147483647))"
-        ),
+        ).alias("_sh"),
     )
-    return hashed.select(
+
+
+def _minhash_projection(sh: DataFrame, k: int, prefix: str) -> DataFrame:
+    """(doc_id, <prefix>0 .. <prefix>k-1): each permutation's minimum over
+    the `_shingle_hashes` list, taken with `array_min(transform(...))`
+    INSIDE the row — a narrow projection, zero shuffles."""
+    return sh.select(
         "doc_id",
         *[
             F.array_min(
                 F.expr(f"transform(_sh, h -> pmod(h * {a}L + {b}L, {MINHASH_P}L))")
-            ).alias(f"mh_{i}")
+            ).alias(f"{prefix}{i}")
             for i, (a, b) in enumerate(_perm_params(k))
         ],
+    )
+
+
+def minhash_signatures(docs: DataFrame, n: int = 3, k: int = 32) -> DataFrame:
+    """K-permutation MinHash signatures (doc_id, mh_0 .. mh_k-1) over
+    word-3-gram shingles of xxhash64 token hashes.  The whole build is a
+    narrow projection (`_shingle_hashes` then `_minhash_projection`): zero
+    shuffles, scan speed at any scale."""
+    if n != 3:
+        raise ValueError("arithmetic shingle combine is specialized to n=3")
+    return _minhash_projection(_shingle_hashes(docs, _XXHASH_TOKEN), k, "mh_")
+
+
+def _bands(k: int, bands: int) -> list[list[Column]]:
+    """The mh_* columns of each of `bands` bands of k/bands hashes."""
+    if k % bands != 0:
+        raise ValueError(f"bands ({bands}) must divide signature width k ({k})")
+    r = k // bands
+    return [[F.col(f"mh_{b * r + j}") for j in range(r)] for b in range(bands)]
+
+
+def _band_key_array(k: int, bands: int) -> Column:
+    """Per-doc array of `bands` 64-bit band keys (xxhash64 of the band's
+    hashes) — the production bucket key."""
+    return F.array(*[F.xxhash64(F.lit(b), *cols) for b, cols in enumerate(_bands(k, bands))])
+
+
+def _band_struct_array(k: int, bands: int) -> Column:
+    """Per-doc array of each band's RAW hash tuple (h0, h1, ...) — what
+    `_band_key_array` compacts, minus its collision caveat; the portable
+    path keys on it so its whole plan stays oracle-expressible."""
+    return F.array(
+        *[F.struct(*[c.alias(f"h{j}") for j, c in enumerate(cols)]) for cols in _bands(k, bands)]
+    )
+
+
+def _band_join(
+    left_sig: DataFrame,
+    right_sig: DataFrame,
+    band_keys: Column,
+    k: int,
+    threshold: float,
+    max_bucket: int,
+) -> DataFrame:
+    """The one MinHash banding plan: probe `left_sig`'s band rows against
+    `right_sig`'s band index, then verify.  Both signature tables are
+    (doc_id, mh_0 .. mh_k-1); `band_keys` is the per-doc array of band
+    bucket keys.  Returns (doc_l, doc_r, est_jaccard >= threshold), with
+    est = matching signature positions / k.
+
+    The index side runs ONE window over (band_no, bucket) for its size and
+    min-doc representative.  Skew guard: a bucket of B docs would fan each
+    probe out to all B members — on boilerplate-heavy corpora (thousands
+    of identical docs) one hot bucket dominates the whole job — so buckets
+    larger than `max_bucket` keep only their representative: each probe
+    then connects to the bucket through it (a STAR, O(B) pairs, not B²/2),
+    and since hot-bucket members share a full band the star keeps every
+    true duplicate connected for `dup_clusters`.  The trade-off is
+    pairwise completeness inside hot buckets, mirroring the ngram df_cap
+    policy.  Candidates are ONE equi-join on (band_no, bucket), not one
+    join per band."""
+    wb = Window.partitionBy("band_no", "bk")
+    index = (
+        right_sig.select(F.col("doc_id").alias("doc_r"), F.posexplode(band_keys).alias("band_no", "bk"))
+        .select(
+            "doc_r", "band_no", "bk",
+            F.count(F.lit(1)).over(wb).alias("_sz"),
+            F.min("doc_r").over(wb).alias("_rep"),
+        )
+        .filter((F.col("_sz") <= max_bucket) | (F.col("doc_r") == F.col("_rep")))
+    )
+    probe = left_sig.select(F.col("doc_id").alias("doc_l"), F.posexplode(band_keys).alias("band_no", "bk"))
+    cand = probe.join(index, ["band_no", "bk"]).select("doc_l", "doc_r").distinct()
+    sig = F.array(*[f"mh_{i}" for i in range(k)])
+    sl = left_sig.select(F.col("doc_id").alias("doc_l"), sig.alias("sig_l"))
+    sr = right_sig.select(F.col("doc_id").alias("doc_r"), sig.alias("sig_r"))
+    est = (
+        F.size(F.filter(F.zip_with("sig_l", "sig_r", lambda x, y: x == y), lambda v: v))
+        .cast("double") / F.lit(k)
+    )
+    return (
+        cand.join(sl, "doc_l")
+        .join(sr, "doc_r")
+        .select("doc_l", "doc_r", F.round(est, 6).alias("est_jaccard"))
+        .filter(F.col("est_jaccard") >= threshold)
+    )
+
+
+def _self_band_join(
+    sig: DataFrame, band_keys: Column, k: int, threshold: float, max_bucket: int
+) -> DataFrame:
+    """The batch self-join as the self-probe `_band_join(sig, sig)`, as
+    (doc_a < doc_b) pairs.  A small bucket yields each pair both ways and
+    a hot bucket yields (member, representative) with the representative
+    the bucket's min doc, so keeping doc_l > doc_r drops the self-pairs
+    and keeps every candidate once; the filter pushes below the
+    candidate `distinct`, so no second dedup runs."""
+    return (
+        _band_join(sig, sig, band_keys, k, threshold, max_bucket)
+        .filter(F.col("doc_l") > F.col("doc_r"))
+        .select(F.col("doc_r").alias("doc_a"), F.col("doc_l").alias("doc_b"), "est_jaccard")
     )
 
 
@@ -707,90 +806,24 @@ def minhash_lsh_pairs(
     max_bucket: int = 1000,
     sig: DataFrame | None = None,
 ) -> DataFrame:
-    """LSH banding: signature split into `bands` rows of k/bands hashes;
+    """LSH banding: signature split into `bands` bands of k/bands hashes;
     docs agreeing on any full band become candidates; candidates are
     scored by full-signature agreement (estimated Jaccard) and filtered.
-
-    At scale each band is one narrow groupBy on a 64-bit band key —
-    no pairwise work outside hash buckets.
-
-    Skew guard: a (band, bucket) group with B docs would emit B²/2
-    candidate rows from the all-pairs self-join — on boilerplate-heavy
-    corpora (thousands of identical docs) one hot bucket dominates the
-    whole job.  Buckets larger than `max_bucket` switch to STAR pairs
-    (every member paired with the bucket's min doc_id): candidates become
-    O(B) per hot bucket, and since hot-bucket members share a full band
-    (near-identical signatures), the star edges keep every true duplicate
-    connected for downstream `dup_clusters` — the trade-off is pairwise
-    completeness inside hot buckets, mirroring the ngram df_cap policy."""
-    if k % bands != 0:
-        raise ValueError(f"bands ({bands}) must divide signature width k ({k})")
+    The plan is the self-probe of `_band_join` (hot-bucket star cap
+    `max_bucket`) over xxhash64 band keys."""
     if docs is None and sig is None:
         raise ValueError("minhash_lsh_pairs needs either docs or a sig table")
     # a precomputed signature table (see _minhash_sig_for) skips the
     # narrow-but-arithmetic-heavy build; either way the plan references
-    # the signatures three times (banding + both verify sides), so the
-    # table must be materialized once.  localCheckpoint, NOT persist: the
-    # function returns a LAZY frame, so a persist/finally-unpersist pair
-    # is already unpersisted by the time the caller materializes and all
-    # three branches silently rebuilt the signatures from scratch.
+    # the signatures four times (both band sides + both verify sides), so
+    # the table must be materialized once.  localCheckpoint, NOT persist:
+    # the function returns a LAZY frame, so a persist/finally-unpersist
+    # pair is already unpersisted by the time the caller materializes and
+    # every branch silently rebuilt the signatures from scratch.
     if sig is None:
         sig = minhash_signatures(docs, n, k)
     sig = sig.localCheckpoint(eager=False)
-    r = k // bands
-    # one (doc_id, band_no, bucket) row per band via a single explode —
-    # the whole candidate generation is ONE self-join keyed on
-    # (band_no, bucket), not `bands` separate joins
-    band_arr = _band_key_array(k, bands)
-    from pyspark.sql import Window
-
-    # bucket size + representative in ONE pass (window over the same
-    # partitioning the join needs — no extra shuffle vs groupBy+join)
-    wb = Window.partitionBy("band_no", "bk")
-    banded = sig.select(
-        "doc_id", F.posexplode(band_arr).alias("band_no", "bk")
-    ).select(
-        "doc_id", "band_no", "bk",
-        F.count(F.lit(1)).over(wb).alias("_sz"),
-        F.min("doc_id").over(wb).alias("_rep"),
-    )
-    small = banded.filter(F.col("_sz") <= max_bucket)
-    l = small.select(F.col("doc_id").alias("doc_a"), "band_no", "bk")
-    rr = small.select(F.col("doc_id").alias("doc_b"), "band_no", "bk")
-    pair_small = (
-        l.join(rr, ["band_no", "bk"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-    )
-    pair_hot = (
-        banded.filter((F.col("_sz") > max_bucket) & (F.col("doc_id") != F.col("_rep")))
-        .select(F.col("_rep").alias("doc_a"), F.col("doc_id").alias("doc_b"))
-    )
-    cand = pair_small.union(pair_hot).distinct()
-
-    sa = sig.select(F.col("doc_id").alias("doc_a"), F.array(*[f"mh_{i}" for i in range(k)]).alias("sig_a"))
-    sb = sig.select(F.col("doc_id").alias("doc_b"), F.array(*[f"mh_{i}" for i in range(k)]).alias("sig_b"))
-    est = (
-        F.size(F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda v: v))
-        .cast("double") / F.lit(k)
-    )
-    return (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select("doc_a", "doc_b", F.round(est, 6).alias("est_jaccard"))
-        .filter(F.col("est_jaccard") >= threshold)
-    )
-
-
-def _band_key_array(k: int, bands: int) -> Column:
-    """Per-doc array of `bands` 64-bit band keys over the mh_* columns."""
-    r = k // bands
-    return F.array(
-        *[
-            F.xxhash64(F.lit(b), *[F.col(f"mh_{b * r + j}") for j in range(r)])
-            for b in range(bands)
-        ]
-    )
+    return _self_band_join(sig, _band_key_array(k, bands), k, threshold, max_bucket)
 
 
 def minhash_probe_pairs(
@@ -803,60 +836,17 @@ def minhash_probe_pairs(
 ) -> DataFrame:
     """Incremental near-dup: probe an incoming batch's signatures against
     an EXISTING corpus signature table (the _minhash_sig_for snapshot) —
-    the daily-ingest shape: nothing about the corpus is recomputed, and
-    candidate generation is ONE equi-join on (band_no, band_key) between
-    the (small) incoming band rows and the corpus band index.
-
-    Hot corpus buckets (> max_bucket members — boilerplate signatures)
-    are collapsed to their min-doc representative before the join, the
-    same skew policy as the batch path: each incoming doc still connects
-    to the bucket (via its representative) for downstream clustering,
-    but never fans out to every member.
+    the daily-ingest shape: nothing about the corpus is recomputed.  The
+    plan is `_band_join(incoming, corpus)`, the same probe-and-verify the
+    batch self-join runs: hot corpus buckets (> max_bucket members) are
+    collapsed to their min-doc representative, so each incoming doc still
+    connects to the bucket for downstream clustering but never fans out
+    to every member.
 
     Returns (inc_doc, corpus_doc, est_jaccard >= threshold)."""
-    if k % bands != 0:
-        raise ValueError(f"bands ({bands}) must divide signature width k ({k})")
-    from pyspark.sql import Window
-
-    band_arr = _band_key_array(k, bands)
-    wb = Window.partitionBy("band_no", "bk")
-    cb = (
-        corpus_sig.select(
-            F.col("doc_id").alias("corpus_doc"),
-            F.posexplode(band_arr).alias("band_no", "bk"),
-        )
-        .select(
-            "corpus_doc", "band_no", "bk",
-            F.count(F.lit(1)).over(wb).alias("_sz"),
-            F.min("corpus_doc").over(wb).alias("_rep"),
-        )
-        .filter(
-            (F.col("_sz") <= max_bucket) | (F.col("corpus_doc") == F.col("_rep"))
-        )
-        .select("corpus_doc", "band_no", "bk")
-    )
-    ib = incoming_sig.select(
-        F.col("doc_id").alias("inc_doc"),
-        F.posexplode(band_arr).alias("band_no", "bk"),
-    )
-    cand = ib.join(cb, ["band_no", "bk"]).select("inc_doc", "corpus_doc").distinct()
-    sa = incoming_sig.select(
-        F.col("doc_id").alias("inc_doc"),
-        F.array(*[f"mh_{i}" for i in range(k)]).alias("sig_a"),
-    )
-    sb = corpus_sig.select(
-        F.col("doc_id").alias("corpus_doc"),
-        F.array(*[f"mh_{i}" for i in range(k)]).alias("sig_b"),
-    )
-    est = (
-        F.size(F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda v: v))
-        .cast("double") / F.lit(k)
-    )
     return (
-        cand.join(sa, "inc_doc")
-        .join(sb, "corpus_doc")
-        .select("inc_doc", "corpus_doc", F.round(est, 6).alias("est_jaccard"))
-        .filter(F.col("est_jaccard") >= threshold)
+        _band_join(incoming_sig, corpus_sig, _band_key_array(k, bands), k, threshold, max_bucket)
+        .select(F.col("doc_l").alias("inc_doc"), F.col("doc_r").alias("corpus_doc"), "est_jaccard")
         .orderBy("inc_doc", "corpus_doc")
     )
 
@@ -921,52 +911,19 @@ PORTABLE_MINHASH_K = 8
 PORTABLE_MINHASH_BANDS = 4
 
 
-def _portable_shingle_arrays(docs: DataFrame) -> DataFrame:
-    """(doc_id, _sh) where _sh is the md5-derived hashed-3-gram shingle
-    list — the engine-portable shingle construction shared by the
-    portable MinHash signatures and the dedup_eval ground truth (both
-    must sketch/score the SAME sets or the eval measures the wrong
-    estimator)."""
-    toks = docs.select("doc_id", ws_tokens(F.col("text")).alias("_toks"))
-    return toks.withColumn(
-        "_th",
-        F.expr(
-            "transform(_toks, t -> pmod(cast(conv(substring(md5(t), 1, 15), 16, 10)"
-            " as bigint), 2147483647))"
-        ),
-    ).withColumn(
-        "_sh",
-        F.expr(
-            "transform(sequence(1, greatest(size(_th)-2, 1)),"
-            " i -> pmod(ifnull(try_element_at(_th,i),0)*1000003"
-            "        + ifnull(try_element_at(_th,i+1),0)*8191"
-            "        + ifnull(try_element_at(_th,i+2),0), 2147483647))"
-        ),
-    )
-
-
 def minhash_portable_signatures(
     docs: DataFrame, k: int = PORTABLE_MINHASH_K, sh: DataFrame | None = None
 ) -> DataFrame:
-    """MinHash signatures whose every hash is ENGINE-PORTABLE: token
-    hashes come from md5 (first 15 hex chars as an int — the hash_split
-    idiom, pipeline_ops.py) instead of xxhash64, so DuckDB reproduces the
-    signature bit-for-bit.  Same shingle combine and permutation family
-    as `minhash_signatures` (shared `_perm_params`); k=8 keeps the SQL
-    mirror tractable.  This exists so the MinHash FAMILY has a
-    hash-verified driver row — the production path stays
-    `minhash_signatures` (xxhash64 is JVM-side and ~10× cheaper than
-    md5-hex-parse at scale)."""
-    hashed = _portable_shingle_arrays(docs) if sh is None else sh
-    return hashed.select(
-        "doc_id",
-        *[
-            F.array_min(
-                F.expr(f"transform(_sh, h -> pmod(h * {a}L + {b}L, {MINHASH_P}L))")
-            ).alias(f"pmh_{i}")
-            for i, (a, b) in enumerate(_perm_params(k))
-        ],
-    )
+    """MinHash signatures (doc_id, pmh_0 .. pmh_k-1) whose every hash is
+    ENGINE-PORTABLE: the `minhash_signatures` shingle combine and
+    permutation projection over md5 token hashes (`_MD5_TOKEN`) in place
+    of xxhash64, so DuckDB reproduces the signature bit for bit; k=8 keeps
+    the SQL mirror tractable.  `sh` is a prebuilt md5 `_shingle_hashes`
+    frame (dedup_eval shares one with its ground truth).  This exists so
+    the MinHash FAMILY has a hash-verified driver row — the production
+    path stays `minhash_signatures` (xxhash64 is JVM-side and ~10x cheaper
+    than md5-hex-parse at scale)."""
+    return _minhash_projection(_shingle_hashes(docs, _MD5_TOKEN) if sh is None else sh, k, "pmh_")
 
 
 def minhash_portable_pairs(
@@ -977,70 +934,19 @@ def minhash_portable_pairs(
     bands: int = PORTABLE_MINHASH_BANDS,
     sh: DataFrame | None = None,
 ) -> DataFrame:
-    """LSH banding over the portable signatures — the same candidate /
-    verify / hot-bucket-star plan as `minhash_lsh_pairs`, except the
-    band bucket key is the RAW (h0, h1) hash tuple instead of an
-    xxhash64 compaction (the tuple is what the compaction stands for;
-    grouping on it directly keeps the whole plan oracle-expressible and
-    removes even the compaction-collision caveat).  Emits
-    (doc_a, doc_b, est_jaccard) with est = matching positions / k,
-    mirrored term-for-term in DEDUP_MINHASH_PORTABLE_SQL including the
-    max_bucket star cutover."""
-    from pyspark.sql import Window
-
-    r = k // bands
-    # localCheckpoint, NOT persist: the frame returned here is lazy, so a
-    # persist/finally-unpersist pair is gone before the caller ever
-    # materializes — banding and both verify sides each rebuilt the md5
-    # signatures from the raw text.  `sh` lets a caller that already built
-    # the shingle arrays (dedup_eval's ground-truth side) share the scan.
-    sig = minhash_portable_signatures(docs, k, sh=sh).localCheckpoint(eager=False)
-    band_arr = F.array(
-        *[
-            F.struct(
-                F.col(f"pmh_{b * r}").alias("h0"),
-                F.col(f"pmh_{b * r + 1}").alias("h1"),
-            )
-            for b in range(bands)
-        ]
-    )
-    wb = Window.partitionBy("band_no", "h0", "h1")
-    banded = (
-        sig.select("doc_id", F.posexplode(band_arr).alias("band_no", "bk"))
-        .select("doc_id", "band_no", F.col("bk.h0").alias("h0"), F.col("bk.h1").alias("h1"))
-        .select(
-            "doc_id", "band_no", "h0", "h1",
-            F.count(F.lit(1)).over(wb).alias("_sz"),
-            F.min("doc_id").over(wb).alias("_rep"),
-        )
-    )
-    small = banded.filter(F.col("_sz") <= max_bucket)
-    l = small.select(F.col("doc_id").alias("doc_a"), "band_no", "h0", "h1")
-    rr = small.select(F.col("doc_id").alias("doc_b"), "band_no", "h0", "h1")
-    pair_small = (
-        l.join(rr, ["band_no", "h0", "h1"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-    )
-    pair_hot = banded.filter(
-        (F.col("_sz") > max_bucket) & (F.col("doc_id") != F.col("_rep"))
-    ).select(F.col("_rep").alias("doc_a"), F.col("doc_id").alias("doc_b"))
-    cand = pair_small.union(pair_hot).distinct()
-
-    cols = [f"pmh_{i}" for i in range(k)]
-    sa = sig.select(F.col("doc_id").alias("doc_a"), F.array(*cols).alias("sig_a"))
-    sb = sig.select(F.col("doc_id").alias("doc_b"), F.array(*cols).alias("sig_b"))
-    est = (
-        F.size(
-            F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda v: v)
-        ).cast("double")
-        / F.lit(k)
-    )
-    return (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select("doc_a", "doc_b", F.round(est, 6).alias("est_jaccard"))
-        .filter(F.col("est_jaccard") >= threshold)
+    """LSH banding over the portable signatures: the `_band_join`
+    self-probe of `minhash_lsh_pairs`, keyed on each band's RAW (h0, h1)
+    hash tuple (`_band_struct_array`) instead of its xxhash64 compaction,
+    which keeps the whole plan oracle-expressible.  Emits (doc_a, doc_b,
+    est_jaccard) with est = matching positions / k; DEDUP_MINHASH_PORTABLE_SQL
+    mirrors it, max_bucket star cutover included (its all-pairs-plus-star
+    candidate form yields the self-probe's candidates)."""
+    # localCheckpoint, NOT persist, for the reason minhash_lsh_pairs gives;
+    # `sh` lets a caller that already built the shingle lists (dedup_eval's
+    # ground-truth side) share the scan
+    sig = minhash_portable_signatures(docs, k, sh=sh).toDF("doc_id", *(f"mh_{i}" for i in range(k)))
+    return _self_band_join(
+        sig.localCheckpoint(eager=False), _band_struct_array(k, bands), k, threshold, max_bucket
     )
 
 
@@ -1064,7 +970,7 @@ def _portable_bands_sql(k: int = PORTABLE_MINHASH_K, bands: int = PORTABLE_MINHA
 
 
 # t/h/shl: the md5-derived hashed-3-gram shingle lists (the SQL mirror of
-# `_portable_shingle_arrays`), shared by the portable-MinHash oracle and
+# `_shingle_hashes(docs, _MD5_TOKEN)`), shared by the portable-MinHash oracle and
 # the dedup_eval ground truth.
 _PORTABLE_SHL_CTES = r"""t AS (
   SELECT doc_id,
@@ -1142,8 +1048,8 @@ def dedup_eval(
     report a curation run publishes before trusting a sketch-based
     dedup pass (the dedup-side analogue of ``retrieval_eval``).
 
-    Truth and estimator score the SAME sets: both sides consume
-    `_portable_shingle_arrays` (md5-hashed 3-gram shingles), so the
+    Truth and estimator score the SAME sets: both sides consume one
+    md5 `_shingle_hashes` frame (hashed 3-gram shingles), so the
     eval isolates MinHash/LSH error (k=8 quantization + band misses)
     from tokenization differences.  Truth pairs come from the exact
     inverted-index self-join (`_gram_pair_counts_from`) over distinct
@@ -1166,23 +1072,14 @@ def dedup_eval(
     # ONE tokenize+md5 shingle pass feeds BOTH the exact ground truth and
     # the MinHash estimator under eval (guide §2.4: don't recompute what
     # two branches share) — narrow to (doc_id, _sh) before materializing
-    sh = (
-        _portable_shingle_arrays(docs)
-        .select("doc_id", "_sh")
-        .localCheckpoint(eager=False)
-    )
+    sh = _shingle_hashes(docs, _MD5_TOKEN).localCheckpoint(eager=False)
     # postings feed three consumers (sizes + both join sides): cut lineage
     # once, same rationale as _gram_pair_counts
     postings = (
         sh.select("doc_id", F.explode(F.array_distinct("_sh")).alias("g"))
         .localCheckpoint()
     )
-    jac = F.round(
-        F.col("c").cast("double") / (F.col("na") + F.col("nb") - F.col("c")), 6
-    )
-    truth = _gram_pair_counts_from(postings).select(
-        "doc_a", "doc_b", jac.alias("jac")
-    )
+    truth = _gram_score(_gram_pair_counts_from(postings), "jaccard").withColumnRenamed("jaccard", "jac")
     pred = minhash_portable_pairs(docs, threshold=min(thresholds), sh=sh)
     both = truth.join(pred, ["doc_a", "doc_b"], "full_outer").select(
         F.coalesce(F.col("jac"), F.lit(0.0)).alias("jac"),
@@ -1290,20 +1187,20 @@ ORDER BY threshold
 # ---------------------------------------------------------------------------
 
 
-def simhash_signatures(docs: DataFrame) -> DataFrame:
-    """64-bit SimHash over whitespace tokens: each token's xxhash64 votes
-    +1/-1 per bit; sign of the per-bit sum forms the signature.  Built with
-    array arithmetic (zip_with over a 64-wide vote vector) — one explode +
-    one groupBy, JVM-side."""
+def _simhash_signatures(docs: DataFrame, token_hash: str, nbits: int) -> DataFrame:
+    """(doc_id, simhash): nbits-bit SimHash over whitespace tokens — each
+    token's hash (the SQL `token_hash` of `t`) votes +1/-1 per bit, and the
+    sign of each per-bit sum is one signature bit.  One explode + one
+    groupBy, JVM-side."""
     toks = docs.select(
         "doc_id", F.explode(ws_tokens(F.col("text"))).alias("t")
-    ).select("doc_id", F.xxhash64("t").alias("h"))
-    vote = lambda b: (F.shiftright(F.col("h"), b).bitwiseAND(F.lit(1)) * 2 - 1).cast("long")
+    ).select("doc_id", F.expr(token_hash).alias("h"))
+    vote = lambda b: (F.shiftright(F.col("h"), b).bitwiseAND(F.lit(1)) * 2 - 1).cast("long")  # noqa: E731
     summed = toks.groupBy("doc_id").agg(
-        *[F.sum(vote(b)).alias(f"s{b}") for b in range(64)]
+        *[F.sum(vote(b)).alias(f"s{b}") for b in range(nbits)]
     )
     sig = None
-    for b in range(64):
+    for b in range(nbits):
         bit = F.when(F.col(f"s{b}") > 0, F.shiftleft(F.lit(1).cast("long"), b)).otherwise(F.lit(0).cast("long"))
         sig = bit if sig is None else sig.bitwiseOR(bit)
     return summed.select("doc_id", sig.alias("simhash"))
@@ -1315,7 +1212,7 @@ def simhash_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     chunks — any pair within the bound must agree on >= 1 full chunk, so
     candidate generation is an equi join (shuffle-hash), never a cross
     product, and the candidate set is provably complete."""
-    return _simhash_pigeonhole_pairs(simhash_signatures(docs), max_hamming, nbits=64)
+    return _simhash_pigeonhole_pairs(_simhash_signatures(docs, _XXHASH_TOKEN, 64), max_hamming, nbits=64)
 
 
 def _simhash_pigeonhole_pairs(
@@ -1376,27 +1273,8 @@ def simhash_portable_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     equivalent because the pigeonhole candidate set is complete for
     hamming <= max_hamming.  Production stays xxhash64 (JVM-side, full
     64 bits)."""
-    nbits = PORTABLE_SIMHASH_BITS
-    toks = docs.select(
-        "doc_id", F.explode(ws_tokens(F.col("text"))).alias("t")
-    ).select(
-        "doc_id",
-        F.expr("cast(conv(substring(md5(t), 1, 15), 16, 10) as bigint)").alias("h"),
-    )
-    vote = lambda b: (  # noqa: E731
-        F.shiftright(F.col("h"), b).bitwiseAND(F.lit(1)) * 2 - 1
-    ).cast("long")
-    summed = toks.groupBy("doc_id").agg(
-        *[F.sum(vote(b)).alias(f"s{b}") for b in range(nbits)]
-    )
-    sig = None
-    for b in range(nbits):
-        bit = F.when(
-            F.col(f"s{b}") > 0, F.shiftleft(F.lit(1).cast("long"), b)
-        ).otherwise(F.lit(0).cast("long"))
-        sig = bit if sig is None else sig.bitwiseOR(bit)
-    sigs = summed.select("doc_id", sig.alias("simhash"))
-    return _simhash_pigeonhole_pairs(sigs, max_hamming, nbits=nbits)
+    sig = _simhash_signatures(docs, _MD5_TOKEN, PORTABLE_SIMHASH_BITS)
+    return _simhash_pigeonhole_pairs(sig, max_hamming, nbits=PORTABLE_SIMHASH_BITS)
 
 
 def q_dedup_simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1547,8 +1425,6 @@ def q_emb_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     bands = pairs.select(
         F.floor(F.col("cos") * 10).cast("int").alias("band")
     ).groupBy("band").agg(F.count(F.lit(1)).cast("bigint").alias("n_pairs"))
-    from pyspark.sql import Window
-
     w = Window.orderBy(F.col("band").desc()).rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
@@ -1774,12 +1650,9 @@ def dedup_incremental(incoming: DataFrame, corpus: DataFrame) -> DataFrame:
     then collapse in-batch duplicates to the lowest doc_id.  Returns the
     surviving rows with their fingerprint (what gets appended to the
     store)."""
-    fp = lambda c: F.md5(F.regexp_replace(F.trim(F.lower(c)), r"\s+", " "))  # noqa: E731
-    inc = incoming.withColumn("fp_md5", fp(F.col("text")))
-    seen = corpus.select(fp(F.col("text")).alias("fp_md5")).distinct()
+    inc = incoming.withColumn("fp_md5", fingerprint_md5(F.col("text")))
+    seen = corpus.select(fingerprint_md5(F.col("text")).alias("fp_md5")).distinct()
     fresh = inc.join(seen, "fp_md5", "left_anti")
-    from pyspark.sql import Window
-
     w = Window.partitionBy("fp_md5").orderBy("doc_id")
     return (
         fresh.withColumn("_rn", F.row_number().over(w))
@@ -1830,8 +1703,6 @@ def canonical_docs(
     skip recomputing components — the production consumption path.
     The ranking window partitions by cluster_id (hash-shuffled; near-dup
     clusters are small, so no skew) — never a global sort."""
-    from pyspark.sql import Window
-
     from realparse_spark.operators.text import token_count_ws
 
     if clusters is None:
@@ -1877,9 +1748,11 @@ def minhash_dedup_e2e(docs: DataFrame, sig: DataFrame | None = None) -> DataFram
     the keep-list partitions the corpus exactly.
 
     Scale: each stage is the registered operator's plan unchanged —
-    narrow signature projection, banded equi-joins with the hot-bucket
-    star cap, size-adaptive components, per-cluster (never global)
-    ranking window.  The signature table is the one reusable artifact;
+    narrow signature projection, the `_band_join` self-probe (one
+    window, one equi-join, hot-bucket star cap) whose banding the
+    DuckDB-checked `dedup_minhash_portable` row also runs,
+    size-adaptive components, per-cluster (never global) ranking
+    window.  The signature table is the one reusable artifact;
     production writes it next to the corpus snapshot (`_minhash_sig_for`)
     and this composition reads it back."""
     if sig is None:

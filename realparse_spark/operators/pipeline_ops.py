@@ -26,7 +26,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from realparse_spark.operators.distrank import rank_distributed
-from realparse_spark.operators.text import ws_tokens
+from realparse_spark.operators.text import fingerprint_md5, ws_tokens
 from realparse_spark.sources.tables import fan_out, load_table
 
 
@@ -344,9 +344,8 @@ def q_curation_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     n_tok = F.size(ws_tokens(F.col("text")))
     n_punct = F.size(F.regexp_extract_all(F.col("text"), F.lit(r"[^\w\s]"), 0))
-    norm = F.regexp_replace(F.trim(F.lower(F.col("text"))), r"\s+", " ")
     kept = docs.filter((n_tok >= 5) & (n_punct * 5 < F.length("text"))).select(
-        F.md5(norm).alias("fp"), n_tok.cast("bigint").alias("n_tok")
+        fingerprint_md5(F.col("text")).alias("fp"), n_tok.cast("bigint").alias("n_tok")
     )
     mult = kept.groupBy("fp").agg(
         F.count(F.lit(1)).alias("m"), F.sum("n_tok").cast("bigint").alias("g_tok")
@@ -508,8 +507,7 @@ def q_doc_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_tok = token_count_ws(F.col("text"))
     qual = docs.filter(n_tok >= 20).withColumn("n_tok", n_tok)
     # exact dedup: min doc_id per normalized-text md5 (fingerprint op)
-    norm = F.regexp_replace(F.trim(F.lower(F.col("text"))), r"\s+", " ")
-    w = Window.partitionBy(F.md5(norm)).orderBy("doc_id")
+    w = Window.partitionBy(fingerprint_md5(F.col("text"))).orderBy("doc_id")
     deduped = qual.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1)
     sampled = stratified_sample(deduped, SAMPLE_RATES)
     split = hash_split(sampled)
@@ -794,9 +792,8 @@ def group_safe_split(
     from the group key's md5 (deterministic, the hash_split discipline),
     ONE O(splits) rollup.  No joins back to the corpus — the group table
     already carries the counts."""
-    norm = F.regexp_replace(F.trim(F.lower(F.col("text"))), r"\s+", " ")
     base = docs.select(
-        F.md5(norm).alias("fp"),
+        fingerprint_md5(F.col("text")).alias("fp"),
         F.size(ws_tokens(F.col("text"))).cast("bigint").alias("n_tokens"),
     )
     groups = base.groupBy("fp").agg(

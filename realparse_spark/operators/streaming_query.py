@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from realparse_spark.operators.load_query import _write_rotation, persist_result
 from realparse_spark.operators.parse_queries import synth_style5
+from realparse_spark.operators.text import fingerprint_md5
 from realparse_spark.sources.tables import load_table
 
 
@@ -410,8 +411,7 @@ def q_stream_dedup_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     if docs.limit(1).count() == 0:  # empty corpus: typed empty report
         return spark.createDataFrame([], "doc_id long, fp_md5 string, ingest string")
 
-    norm = F.regexp_replace(F.trim(F.lower(F.col("text"))), r"\s+", " ")
-    rows = docs.select("doc_id", "text", F.md5(norm).alias("fp")).withColumn(
+    rows = docs.select("doc_id", "text", fingerprint_md5(F.col("text")).alias("fp")).withColumn(
         "_md", F.min("doc_id").over(Window.partitionBy("fp"))
     )
     canon = rows.filter(F.col("doc_id") == F.col("_md"))

@@ -95,11 +95,16 @@ def langid(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
+def fingerprint_md5(text: Column) -> Column:
+    """md5 of the lowercased, trimmed, whitespace-collapsed text: the
+    exact-duplicate key that every exact-dedup path groups or joins on."""
+    return F.md5(F.regexp_replace(F.trim(F.lower(text)), r"\s+", " "))
+
+
 def fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Document fingerprint: md5 of whitespace-normalized lowercase text
-    (the exact-dedup key), plus a 64-bit prefix as a compact join key."""
-    norm = F.regexp_replace(F.trim(F.lower(F.col(text_col))), r"\s+", " ")
-    fp = F.md5(norm)
+    """Document fingerprint: `fingerprint_md5` (the exact-dedup key), plus
+    a 64-bit prefix as a compact join key."""
+    fp = fingerprint_md5(F.col(text_col))
     return df.select(
         "doc_id",
         fp.alias("fp_md5"),

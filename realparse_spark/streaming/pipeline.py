@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from realparse_spark.operators.parse import parse_style5
+from realparse_spark.operators.text import fingerprint_md5, ws_tokens
 
 # the set/start/restore scope below is NOT atomic on the session conf; two
 # threads starting lifecycles concurrently (the test suite's thread-pooled
@@ -228,9 +229,8 @@ def stream_dedup_docs(
     Explicit schema (no streaming inference pass)."""
     schema = "doc_id long, text string, ingest_ts timestamp"
     docs = spark.readStream.schema(schema).json(in_dir)
-    norm = F.regexp_replace(F.trim(F.lower(F.col("text"))), r"\s+", " ")
     deduped = (
-        docs.withColumn("fp_md5", F.md5(norm))
+        docs.withColumn("fp_md5", fingerprint_md5(F.col("text")))
         .withWatermark("ingest_ts", delay)
         .dropDuplicatesWithinWatermark(["fp_md5"])
     )
@@ -389,8 +389,6 @@ def stream_quality_route(
     column deduped downstream).  The lifecycle here proves ROUTING and
     checkpointed no-reprocessing across rotations, the semantics the
     availableNow trigger pins deterministically."""
-    from realparse_spark.operators.text import ws_tokens
-
     schema = "doc_id long, source string, text string, ingest_ts timestamp"
     docs = spark.readStream.schema(schema).json(in_dir)
     n_tok = F.size(ws_tokens(F.col("text")))

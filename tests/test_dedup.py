@@ -437,7 +437,7 @@ def test_minhash_e2e_keeplist_partitions_corpus(spark):
 
 def test_minhash_e2e_job_budget(spark, sf_dir):
     """Over its signature snapshot, one `dedup_minhash_e2e` call is at most
-    11 Spark jobs: the snapshot is read with its known schema (no
+    10 Spark jobs: the snapshot is read with its known schema (no
     schema-inference job) and `dup_clusters` takes its pair count from an
     Observation on the checkpoint it runs anyway (a count() adds 2 jobs
     under AQE)."""
@@ -452,7 +452,34 @@ def test_minhash_e2e_job_budget(spark, sf_dir):
         sc._jsc.clearJobGroup()
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     n = len(sc.statusTracker().getJobIdsForGroup("budget-minhash"))
-    assert rows and n <= 11, n
+    assert rows and n <= 10, n
+
+
+def test_band_join_same_pairs_for_hashed_and_raw_band_keys(spark):
+    """`_band_join` returns the same pairs whether each band's bucket key is
+    its xxhash64 compaction (`_band_key_array`, which `dedup_minhash_e2e`
+    runs) or the raw hash tuple (`_band_struct_array`, which the
+    DuckDB-checked `dedup_minhash_portable` row runs), so that oracle also
+    vouches for the production banding.  max_bucket=2 forces the
+    hot-bucket star path, which must change the pair set."""
+    from realparse_spark.operators.dedup import (
+        _band_join,
+        _band_key_array,
+        _band_struct_array,
+    )
+    from realparse_spark.sources.tables import fan_out, load_table
+    from tests.conftest import SF_DIR_ORACLE
+
+    sig = minhash_signatures(fan_out(load_table(spark, SF_DIR_ORACLE, "documents"))).localCheckpoint()
+    by_cap = {}
+    for cap in (1000, 2):
+        hashed, raw = (
+            set(map(tuple, _band_join(sig, sig, keys(32, 8), 32, 0.5, cap).collect()))
+            for keys in (_band_key_array, _band_struct_array)
+        )
+        assert hashed == raw and hashed, (cap, len(hashed), len(raw))
+        by_cap[cap] = hashed
+    assert by_cap[2] != by_cap[1000]
 
 
 def test_minhash_portable_tracks_planted_structure(spark):

@@ -34,12 +34,17 @@ def test_all_queries_have_oracle_or_reason():
     missing = sorted(set(q) - set(o))
     # rows-only checks must be intentional; keep the allowlist here
     allowed_rows_only = {
+        # dedup_minhash_lsh, dedup_minhash_e2e and dedup_incremental_minhash
+        # hash with xxhash64; they run the same signature projection and
+        # _band_join as the oracled dedup_minhash_portable row, and
+        # test_dedup pins equal _band_join pairs for xxhash64 and raw band
+        # keys, the batch ≡ incremental cross-split pairs and the e2e
+        # planted-dup partition/canonical gates
         "dedup_minhash_lsh",
-        "dedup_minhash_e2e",  # composed xxhash64 lifecycle; planted-dup
-        # partition/canonical gates in test_dedup; the hash-verified
-        # family row is dedup_minhash_portable (md5 signatures, oracled)
-        "dedup_incremental_minhash",  # xxhash64 band keys; batch-equality gate in test_dedup
-        "dedup_simhash",
+        "dedup_minhash_e2e",
+        "dedup_incremental_minhash",
+        "dedup_simhash",  # xxhash64 votes; the oracled dedup_simhash_portable
+        # runs the same vote builder and pigeonhole join
         # sim_ann_lsh, sim_ann_lsh_batch and retrieval_eval_ann reach the
         # index only through lsh_probe_batch, which test_similarity ties to
         # the full-scan ann_lsh_topk (row parity) and to the exact
