@@ -3,23 +3,25 @@ index builders.
 
 A *snapshot* is a derived on-disk table (inverted posting index, cluster
 table, co-order edge list, ANN index) keyed by a content fingerprint of its
-source parquet plus build parameters.  Every builder installs through the
-warehouse's one write protocol (fs.py), with the snapshot's own directory
-as the lease root:
+source parquet plus build parameters.  Every builder installs under the
+warehouse's writer lease (fs.py), with the snapshot's own directory
+``<prefix><hash>/`` as the lease root; the table(s) go to its ``data/``
+subdirectory, so a builder's ``mode("overwrite")`` never deletes the
+``_lease`` file that a waiting builder locks:
 
-1. ``_SUCCESS`` (not just the directory) gates reuse, and the commit
-   publishes it last.  The marker is re-checked even on in-memory cache
-   hits, so an externally wiped /tmp triggers a rebuild instead of a failed
-   read of a vanished table.
+1. ``<prefix><hash>/_SUCCESS`` is the snapshot's commit and gates reuse; it
+   is written only after the build returns.  The marker is re-checked even
+   on in-memory cache hits, so an externally wiped /tmp triggers a rebuild
+   instead of a failed read of a vanished table.
 2. A missing snapshot is built under the key's lease, which serializes
-   threads and processes alike: the first builds into the lease's stage
-   and commits, the others wait, re-check the marker and use its table.
+   threads and processes alike: the first clears what a dead builder left
+   in ``data/``, builds there and writes the marker; the others wait,
+   re-check the marker and use its table.
 3. A completed snapshot is never rebuilt or deleted — a concurrent reader
    may hold a lazy Spark plan over its part-files.
 
 At 100 TB the same protocol maps onto an object store: the fingerprint key
-becomes the source table's snapshot id, the stage a staging prefix, and the
-commit a metastore pointer swap.
+becomes the source table's snapshot id and the marker a conditional PUT.
 """
 
 from __future__ import annotations
@@ -40,14 +42,15 @@ from realparse_spark.fs import LOCAL
 # on ANY such change (round 7: prefix-index token ids int -> bigint via
 # the distributed rank; version 3: the LSH index holds (vec_id, sketch)
 # postings only, and its sketches change for vectors whose width is not
-# 64).  Trade-off, deliberate: one global version rebuilds EVERY
-# snapshot family on a bump — acceptable here (seconds at
+# 64; version 4: each table moved to its snapshot's ``data/``
+# subdirectory).  Trade-off, deliberate: one global version rebuilds
+# EVERY snapshot family on a bump — acceptable here (seconds at
 # test scale, and correctness beats rebuild cost); a production system
 # with 100 TB derived tables would scope a version per artifact family
 # (one more `extras` element per builder) to bound the blast radius.
 # Old-version directories in /tmp are left for the OS tmp reaper —
 # deleting them could yank part-files from a concurrent reader's plan.
-SNAPSHOT_VERSION = 3
+SNAPSHOT_VERSION = 4
 
 # Every snapshot family's directory prefix (the ``prefix`` argument each
 # builder passes to ``snapshot_path``).  Kept here so a benchmark can find
@@ -96,20 +99,20 @@ def snapshot_path(
     building it via ``build(tmp_dir)`` if absent.
 
     ``build`` must write the snapshot's table(s) under ``tmp_dir``; the
-    top-level ``_SUCCESS`` marker is written after it returns, so a
-    multi-table snapshot gets one only after every sub-table landed.
+    marker is written after it returns, so a multi-table snapshot gets one
+    only after every sub-table landed.  ``cache`` maps ``key`` to the
+    snapshot's lease root, the parent of the returned directory.
     """
-    path = cache.get(key) or os.path.join(
+    root = cache.get(key) or os.path.join(
         tempfile.gettempdir(),
         prefix + hashlib.md5(repr(key).encode()).hexdigest()[:12],
     )
-    done = os.path.join(path, "_SUCCESS")
+    path, done = os.path.join(root, "data"), os.path.join(root, "_SUCCESS")
     if not os.path.isfile(done):
-        with LOCAL.lease(path) as stage:
+        with LOCAL.lease(root):
             if not os.path.isfile(done):  # no other builder finished meanwhile
-                build(stage)
-                LOCAL.write_text(os.path.join(stage, "_SUCCESS"), "")
-                names = sorted(LOCAL.list_dir(stage), key=lambda n: n == "_SUCCESS")
-                LOCAL.commit(path, [(os.path.join(stage, n), os.path.join(path, n)) for n in names])
-    cache[key] = path
+                LOCAL.rmtree(path)
+                build(path)
+                LOCAL.write_text(done, "")
+    cache[key] = root
     return path

@@ -5,8 +5,17 @@ runs (the reference ran per-day forever) a table becomes millions of tiny
 files and listing/open costs dominate every scan — the classic small-files
 problem.  `compact_table` rewrites a table into ~target-sized files under
 the writer lease of the table's parent directory — for a warehouse table,
-the warehouse, so a compaction and a load take turns — and one commit
-replaces the table with the rewrite (readers see old or new, never a mix).
+the warehouse, so a compaction and a load take turns.  The rewrite reads
+the files listed when the lease was taken, is written beside them, one
+commit (fs.py) lists it in their place, and only then are those files
+deleted, so a reader of the listed files sees old or new, never a mix and
+never an empty table.  Only a table that a load or an upsert lists in
+`_state` is written by nothing else: there the compaction first deletes
+unlisted files (a dead writer's).  Any other table stays unlisted, and
+the compaction deletes nothing but the files it rewrote, so what another
+job appends meanwhile is kept; a compaction of such a table that dies
+between its write and that deletion leaves its rewrite beside the old
+files, and a reader of the directory sees those rows twice.
 
 Partitioned tables are compacted per partition directory so partition
 pruning keeps working on the result.
@@ -20,7 +29,7 @@ import urllib.parse
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from realparse_spark.fs import LOCAL
+from realparse_spark.fs import LOCAL, claim, publish, read_committed, read_state
 
 
 def table_file_stats(spark: SparkSession, path: str) -> tuple[int, int]:
@@ -75,20 +84,21 @@ def compact_table(
             "zorder_cols currently applies to unpartitioned tables only"
         )
     path = os.path.abspath(path)
-    with LOCAL.lease(os.path.dirname(path)) as stage:
-        staging = os.path.join(stage, os.path.basename(path))
-        before, total = table_file_stats(spark, path)
+    root, name = os.path.split(path)
+    with LOCAL.lease(root):
+        state = read_state(root) or {}
+        old = claim(root, state, [name], adopt=False)[name]
+        df = read_committed(spark, root, name, old)
+        _, total = table_file_stats(spark, path)
 
-        df = spark.read.parquet(path)
         if not partition_by:
             n_files = max(1, total // target_file_bytes)
             if zorder_cols:
                 from realparse_spark.operators.layout import zorder_shape
 
-                shaped = zorder_shape(df, zorder_cols, n_files=int(n_files))
-                w = shaped.write.mode("overwrite")
+                w = zorder_shape(df, zorder_cols, n_files=int(n_files)).write
             else:
-                w = df.coalesce(int(n_files)).write.mode("overwrite")
+                w = df.coalesce(int(n_files)).write
         else:
             leaf = _leaf_partition_bytes(path, partition_by)
             salt_rows = [
@@ -115,20 +125,14 @@ def compact_table(
             w = (
                 salted.repartition(max(1, n_tasks), *partition_by, "__salt")
                 .select(*data_cols)
-                .write.mode("overwrite")
-                .partitionBy(*partition_by)
+                .write.partitionBy(*partition_by)
             )
-        w.parquet(staging)
-
-        # a table sidecar (the upsert's `_upsert_meta.json`, the only one) is
-        # not a data file: carry it into the rewrite, or the commit drops it
-        for name in LOCAL.list_dir(path):
-            src, dst = os.path.join(path, name), os.path.join(staging, name)
-            if name.startswith("_") and not LOCAL.is_dir(src) and not LOCAL.exists(dst):
-                LOCAL.write_text(dst, LOCAL.read_text(src))
-        LOCAL.commit(os.path.dirname(path), [(staging, path)])
-    after, _ = table_file_stats(spark, path)
-    return before, after
+        w.mode("append").parquet(path)
+        # a table that a load or an upsert listed is written by nothing
+        # else; another table's files may be another job's rows, so its
+        # compaction deletes only what it rewrote, and lists nothing
+        publish(root, state, [name] if name in state["files"] else [], {name: old})
+        return len(old), table_file_stats(spark, path)[0]
 
 
 def q_maintenance_compact(spark: SparkSession, sf_dir: str) -> "DataFrame":
@@ -138,7 +142,6 @@ def q_maintenance_compact(spark: SparkSession, sf_dir: str) -> "DataFrame":
     deterministic — before = the 16-way repartition, after = 1 (corpus ≪
     the 1 GiB target), and the aggregates prove compaction is
     row-preserving (a dropped/duplicated row breaks the hash match)."""
-    import os  # noqa: PLC0415
     import shutil  # noqa: PLC0415
     import tempfile  # noqa: PLC0415
 

@@ -41,7 +41,7 @@ from pyspark.sql.types import LongType, StructField, StructType
 from realparse_spark.cache import fingerprint_key, snapshot_path
 from realparse_spark.operators.distrank import rank_distributed
 from realparse_spark.operators.text import fingerprint_md5, ws_tokens
-from realparse_spark.sources.tables import fan_out, load_table
+from realparse_spark.sources.tables import fan_out, load_table, read_inferred_once
 
 # deterministic MinHash permutation parameters (public textbook scheme:
 # h_i(x) = (a_i * x + b_i) mod p over a Mersenne prime).  p is 31-bit so
@@ -310,7 +310,7 @@ def ngram_containment_pairs(
 
 def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # reads the shared per-snapshot posting table (see _postings_for)
-    rare = spark.read.parquet(_postings_for(spark, sf_dir, n=3, df_cap=1000))
+    rare = read_inferred_once(spark, _postings_for(spark, sf_dir, n=3, df_cap=1000))
     return _gram_score(_gram_pair_counts_from(rare), "containment", 0.8)
 
 
@@ -319,7 +319,7 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     # reads the shared per-snapshot posting table (see _postings_for)
-    rare = spark.read.parquet(_postings_for(spark, sf_dir, n=3, df_cap=1000))
+    rare = read_inferred_once(spark, _postings_for(spark, sf_dir, n=3, df_cap=1000))
     return _gram_score(_gram_pair_counts_from(rare), "jaccard", 0.5)
 
 
@@ -559,7 +559,7 @@ def q_dedup_prefix_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         "realparse_prefidx_",
         _build,
     )
-    return _prefix_self_join(spark.read.parquet(path), threshold)
+    return _prefix_self_join(read_inferred_once(spark, path), threshold)
 
 
 # oracle: brute-force exact bigram-shingle Jaccard — the prefix filter is
@@ -1640,7 +1640,7 @@ def _clusters_for(spark: SparkSession, sf_dir: str) -> str:
 
 
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(_clusters_for(spark, sf_dir))
+    return read_inferred_once(spark, _clusters_for(spark, sf_dir))
 
 
 def dedup_incremental(incoming: DataFrame, corpus: DataFrame) -> DataFrame:
@@ -1724,7 +1724,7 @@ def canonical_docs(
 
 def q_dedup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = fan_out(load_table(spark, sf_dir, "documents"))
-    clusters = spark.read.parquet(_clusters_for(spark, sf_dir))
+    clusters = read_inferred_once(spark, _clusters_for(spark, sf_dir))
     return canonical_docs(docs, pairs=None, clusters=clusters)
 
 

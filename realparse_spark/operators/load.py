@@ -27,15 +27,18 @@ load is shuffle-free; at 100 TB the only cost is the scan and the N
 columnar writes, all from one cached parse.
 
 What has been loaded lives in one record, `<warehouse>/_state`:
-`{"max_key": int, "watermark": {"<server_type>": epoch}}` -- the highest
-surrogate key handed out and each family's high-watermark (the reference's
-auto-increment and `SELECT MAX(datetime)`).  A cycle holds the warehouse's
-writer lease (fs.py) from its state read to its end, as the reference
-holds `LOCK TABLES` (real_parse.pl:43-44,192-193).  Every append, the
-quarantined lines and the updated `_state` go to the lease's stage, and
-one commit publishes them, so the rows and the progress that covers them
-appear together.  A second loader waits and then finds nothing new; a
-cycle that dies publishes nothing, so its re-run loads the same lines.
+`{"max_key": int, "watermark": {"<server_type>": epoch}, "files": {table:
+[data files]}}` -- the highest surrogate key handed out, each family's
+high-watermark (the reference's auto-increment and `SELECT MAX(datetime)`)
+and each table's committed files.  A cycle holds the warehouse's writer
+lease (fs.py) from its state read to its end, as the reference holds
+`LOCK TABLES` (real_parse.pl:43-44,192-193).  It appends its rows and
+quarantined lines straight into the tables and publishes with one atomic
+replace of `_state`, so a table's rows and the progress that covers them
+appear together: `read_warehouse_table` reads only listed files.  A
+second loader waits and then finds nothing new; a cycle that dies
+publishes nothing, and its re-run deletes the files it left and loads the
+same lines.
 
 Key semantics preserved from the reference: late rows (epoch <= watermark)
 are silently dropped, ties included (real_parse.pl:93 strict `>`), and
@@ -45,7 +48,6 @@ the watermark).
 
 from __future__ import annotations
 
-import json
 import os
 from collections.abc import Callable
 from contextlib import ExitStack
@@ -59,7 +61,7 @@ from realparse_spark.operators.parse import (
     parse_style5,
     parse_weblog,
 )
-from realparse_spark.fs import LOCAL
+from realparse_spark.fs import LOCAL, claim, publish, read_committed, read_state
 from realparse_spark.sources.logs import read_log_lines, read_server_config
 
 ACCESS_TABLES = ("access", "file", "client", "network", "stats_mask1", "stats_mask2", "stats_mask3")
@@ -73,15 +75,6 @@ Child = tuple[str, DataFrame]
 # $stream_components at open_log.pl:41).  Parity: the warehouse declares the
 # typed table, written empty by its first cycle, never row-appended.
 COMPONENTS_SCHEMA = "component_id long, access_id long, component string"
-
-
-def _ensure_components(spark: SparkSession, warehouse: str, stage: str) -> None:
-    if not LOCAL.exists(_table_path(warehouse, "components")):
-        spark.createDataFrame([], COMPONENTS_SCHEMA).write.parquet(_table_path(stage, "components"))
-
-
-def _table_path(warehouse: str, name: str) -> str:
-    return os.path.join(warehouse, name)
 
 
 def _observed(df: DataFrame, **aggs: Column) -> tuple[DataFrame, Observation]:
@@ -100,30 +93,26 @@ def _scan(df: DataFrame, **aggs: Column) -> dict:
 
 
 def read_warehouse_table(spark: SparkSession, warehouse: str, name: str) -> DataFrame | None:
-    """The table `name`, or None while it has no data file (no load has
-    written it).  Any other read error propagates."""
-    path = _table_path(warehouse, name)
-    if next(LOCAL.data_files(path), None) is None:
-        return None
-    return spark.read.parquet(path)
-
-
-def _state_path(warehouse: str) -> str:
-    return os.path.join(warehouse, "_state")
+    """The table `name` as the last commit published it -- exactly its
+    listed files, with the partition columns of `access` kept -- or None
+    while it lists no file (no load has written it, or none since the
+    lists were kept: the next cycle lists what such a warehouse holds).
+    Each call reads `_state` afresh, so two tables read by two calls may
+    come from two commits.  Any other read error propagates."""
+    return read_committed(spark, warehouse, name)
 
 
 def _read_state(warehouse: str) -> dict:
     """The warehouse's load progress (see the module docstring); a
-    warehouse that no cycle has keyed a line into starts at key 0 with no
-    watermark.  One that has `access` rows but no `_state` is refused:
-    starting it over would reuse ids and reload already-loaded lines."""
-    p = _state_path(warehouse)
-    if LOCAL.exists(p):
-        return json.loads(LOCAL.read_text(p))
-    if LOCAL.exists(_table_path(warehouse, "access")):
-        raise ValueError(f"{p} is missing but the warehouse holds access rows; "
-                         "its load progress is unknown")
-    return {"max_key": -1, "watermark": {}}
+    warehouse that no cycle has published to starts at key 0 with no
+    watermark.  One that has `access` rows but no progress in `_state` (or
+    no `_state`) is refused: starting it over would reuse ids and reload
+    already-loaded lines."""
+    state = read_state(warehouse) or {}
+    if "max_key" not in state and LOCAL.exists(os.path.join(warehouse, "access")):
+        raise ValueError(f"{warehouse}/_state holds no load progress but the warehouse "
+                         "holds access rows; its load progress is unknown")
+    return {"max_key": -1, "watermark": {}} | state
 
 
 def _load_cycle(
@@ -146,8 +135,10 @@ def _load_cycle(
     `children`, which projects the keyed lines onto the other tables.
     Returns per-table insert counts plus the quarantined-line count."""
     with ExitStack() as held:
-        stage = held.enter_context(LOCAL.lease(warehouse))
+        held.enter_context(LOCAL.lease(warehouse))
         state = _read_state(warehouse)
+        written = (*tables, "quarantine", "components")
+        files = claim(warehouse, state, written)
         family = str(server_type)
         wm = state["watermark"].get(family)
 
@@ -156,7 +147,8 @@ def _load_cycle(
             held.callback(df.unpersist)
             return df
 
-        _ensure_components(spark, warehouse, stage)
+        if not files["components"]:
+            _append(spark.createDataFrame([], COMPONENTS_SCHEMA), warehouse, "components")
         # Persist the parsed corpus: the quarantine split and the keyed lines
         # branch off this one DF; without the cache each branch would
         # re-scan and re-regex the raw text.
@@ -184,7 +176,7 @@ def _load_cycle(
         counts = dict.fromkeys(tables, 0) | {"quarantine": n_bad}
         if n_bad:
             _append(parsed.filter(F.col("epoch").isNull()).select("value", "source_file"),
-                    stage, "quarantine")
+                    warehouse, "quarantine")
         if top["max_key"] is not None:
             access = keyed.select(
                 "access_id", "client_ip_address", "identuser", "authuser",
@@ -195,15 +187,10 @@ def _load_cycle(
                 F.to_date(F.to_timestamp("datetime")).alias("access_date"),
             )
             for name, rows in [("access", access), *children(keyed)]:
-                counts[name] = _append(rows, stage, name)
-            state = {"max_key": top["max_key"], "watermark": state["watermark"] | {family: top["wm"]}}
-            LOCAL.write_text(_state_path(stage), json.dumps(state))
-        # one commit puts each staged file at its place in the warehouse:
-        # part files join their tables, `_state` replaces its old value
-        LOCAL.commit(warehouse, [
-            (p, os.path.join(warehouse, os.path.relpath(p, stage)))
-            for p, _size in LOCAL.data_files(stage, suffix="")
-        ])
+                counts[name] = _append(rows, warehouse, name)
+            state |= {"max_key": top["max_key"], "watermark": state["watermark"] | {family: top["wm"]}}
+        # the commit lists every file now in a table this cycle wrote
+        publish(warehouse, state, written)
         return counts
 
 
@@ -326,7 +313,7 @@ def load_weblog(
 
 def _append(df: DataFrame, root: str, name: str) -> int:
     """S7 — batched columnar append of table `name` under `root` (the
-    cycle's stage); replaces per-row INSERT round-trips.
+    warehouse); replaces per-row INSERT round-trips.
     Returns the rows written, observed in the append's own job.
     `access` is partitioned by (server_type, access_date): the F2 family
     discriminator and time-range reports prune to a handful of partitions
@@ -335,5 +322,5 @@ def _append(df: DataFrame, root: str, name: str) -> int:
     writer = df.write.mode("append")
     if name == "access":
         writer = writer.partitionBy("server_type", "access_date")
-    writer.parquet(_table_path(root, name))
+    writer.parquet(os.path.join(root, name))
     return obs.get["n"]

@@ -184,6 +184,7 @@ def q_stream_upsert_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle aggregates the distinct synthesized lines directly — any
     duplicate surviving the merge, or any line lost to it, breaks the
     row-count/value-hash compare."""
+    from realparse_spark.fs import read_committed
     from realparse_spark.streaming.pipeline import stream_upsert_access
 
     events = load_table(spark, sf_dir, "events")
@@ -224,7 +225,7 @@ def q_stream_upsert_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         _write_rotation(full, root, logs, "rmaccess.log.20021012")
         stream_upsert_access(spark, logs, tbl, ck).awaitTermination()
 
-        access = spark.read.parquet(tbl)
+        access = read_committed(spark, root, "tbl")  # the last merge's commit
         out = access.groupBy("name").agg(
             F.count(F.lit(1)).alias("n_rows"),
             F.sum("bytes_sent").alias("sum_bytes"),

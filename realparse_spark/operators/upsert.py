@@ -13,15 +13,16 @@ A merge batch touches only the buckets its keys hash into, so the job
 reads + rewrites O(batch) partitions, not O(table) — the property that
 makes a streaming foreachBatch MERGE sustainable: at 100 TB a trigger
 rewrites a few buckets, never restates the table.  Untouched bucket
-directories are not opened, rewritten, or renamed (byte-identical,
-asserted in tests/test_upsert.py).
+directories are not opened or rewritten (byte-identical, asserted in
+tests/test_upsert.py).
 
 Writes: an upsert holds the writer lease of the table's parent directory
-(fs.py), stages the touched buckets, and one commit replaces them, so
-writers see every bucket of a merge or none.  Readers take no lease: one
-that lists the table during the commit may see some buckets replaced and
-not others, or a bucket briefly absent — deployments needing lock-free
-concurrent readers use a transactional table format.
+(fs.py), writes the touched buckets' new files beside the old ones, and
+one commit lists them in the old files' place before those are deleted.
+A reader through `fs.read_committed(spark, parent, table)` sees every
+bucket of a merge or none.  A reader of the directory does not: between
+the merge's write and the deletion right after its commit, it sees both
+versions of each touched bucket, i.e. duplicate keys.
 """
 
 from __future__ import annotations
@@ -33,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
-from realparse_spark.fs import LOCAL
+from realparse_spark.fs import LOCAL, claim, publish, read_committed, read_state
 
 _BUCKET = "__bucket"
 _META = "_upsert_meta.json"
@@ -48,10 +49,6 @@ def _read_meta(path: str) -> dict | None:
     if LOCAL.exists(p):
         return json.loads(LOCAL.read_text(p))
     return None
-
-
-def _write_meta(path: str, n_buckets: int, keys: list[str]) -> None:
-    LOCAL.write_text(os.path.join(path, _META), json.dumps({"n_buckets": n_buckets, "keys": keys}))
 
 
 def upsert_parquet(
@@ -69,57 +66,54 @@ def upsert_parquet(
     The stored layout is partitioned by a key-hash bucket; `n_buckets` is
     fixed at table creation (recorded in a sidecar — later calls use the
     recorded value, because re-bucketing would silently split a key across
-    buckets and break the merge).  An existing `path` without the sidecar
+    buckets and break the merge).  An existing table without the sidecar
     was not written by this function and is refused with a ValueError."""
     path = os.path.abspath(path)
-    root = os.path.dirname(path)
-    with LOCAL.lease(root) as stage:
+    root, name = os.path.split(path)
+    with LOCAL.lease(root):
+        state = read_state(root) or {}
+        old = claim(root, state, [name])[name]
         meta = _read_meta(path)
-        if meta is not None:
-            if meta["keys"] != keys:
-                raise ValueError(f"table at {path} was bucketed on keys {meta['keys']}, got {keys}")
-            n_buckets = int(meta["n_buckets"])
-        elif LOCAL.exists(path):
-            raise ValueError(f"{path} is not a bucketed upsert table: it has no {_META}")
-
-        data_cols = new_df.columns
-        newb = new_df.withColumn(_BUCKET, _bucket_expr(keys, n_buckets))
-        staging = os.path.join(stage, os.path.basename(path))
-
         if meta is None:
-            # the table and its sidecar are published together, so a crash
-            # never leaves a table at `path` that later calls would refuse
-            newb.write.partitionBy(_BUCKET).parquet(staging)
-            _write_meta(staging, n_buckets, keys)
-            LOCAL.commit(root, [(staging, path)])
-            return spark.read.parquet(path).count()
+            if old:
+                raise ValueError(f"{path} is not a bucketed upsert table: it has no {_META}")
+            # the sidecar goes first: a first write that dies leaves it and
+            # files that no list names, and its re-run starts over
+            LOCAL.makedirs(path)
+            LOCAL.write_text(os.path.join(path, _META), json.dumps({"n_buckets": n_buckets, "keys": keys}))
+        elif meta["keys"] != keys:
+            raise ValueError(f"table at {path} was bucketed on keys {meta['keys']}, got {keys}")
+        else:
+            n_buckets = int(meta["n_buckets"])
 
-        # buckets present in this batch: tiny distinct collect (<= n_buckets)
-        touched = sorted(
-            r[_BUCKET] for r in newb.select(_BUCKET).distinct().collect()
-        )
-        if not touched:
-            return spark.read.parquet(path).count()
-        existing = (
-            spark.read.parquet(path)
-            .filter(F.col(_BUCKET).isin(touched))  # partition pruning: O(batch) read
-            .select(*data_cols, F.col(_BUCKET).cast("int").alias(_BUCKET))
-        )
-        tagged_new = newb.withColumn("_src", F.lit(1))
-        tagged_old = existing.withColumn("_src", F.lit(0))
-        unioned = tagged_new.unionByName(tagged_old)
+        merged = newb = new_df.withColumn(_BUCKET, _bucket_expr(keys, n_buckets))
+        replaced: set[str] = set()
+        if old:
+            # buckets present in this batch: tiny distinct collect (<= n_buckets)
+            touched = sorted(
+                r[_BUCKET] for r in newb.select(_BUCKET).distinct().collect()
+            )
+            if not touched:
+                return spark.read.parquet(path).count()
+            existing = (
+                spark.read.parquet(path)
+                .filter(F.col(_BUCKET).isin(touched))  # partition pruning: O(batch) read
+                .select(*new_df.columns, F.col(_BUCKET).cast("int").alias(_BUCKET))
+            )
+            tagged_new = newb.withColumn("_src", F.lit(1))
+            tagged_old = existing.withColumn("_src", F.lit(0))
+            unioned = tagged_new.unionByName(tagged_old)
 
-        order = [F.col(order_col).desc()] if order_col else []
-        w = Window.partitionBy(*keys).orderBy(*order, F.col("_src").desc())
-        merged = (
-            unioned.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn", "_src")
-        )
-        merged.write.partitionBy(_BUCKET).parquet(staging)
-        # replace ONLY the touched bucket dirs; untouched dirs stay byte-identical
-        LOCAL.commit(root, [
-            (os.path.join(staging, f"{_BUCKET}={b}"), os.path.join(path, f"{_BUCKET}={b}"))
-            for b in touched
-        ])
-    return spark.read.parquet(path).count()
+            order = [F.col(order_col).desc()] if order_col else []
+            w = Window.partitionBy(*keys).orderBy(*order, F.col("_src").desc())
+            merged = (
+                unioned.withColumn("_rn", F.row_number().over(w))
+                .filter(F.col("_rn") == 1)
+                .drop("_rn", "_src")
+            )
+            # replace ONLY the touched buckets' files; untouched ones stay byte-identical
+            dirs = {f"{_BUCKET}={b}" for b in touched}
+            replaced = {f for f in old if f.split(os.sep)[0] in dirs}
+        merged.write.mode("append").partitionBy(_BUCKET).parquet(path)
+        # counted under the lease: exactly this merge's commit
+        return read_committed(spark, root, name, publish(root, state, [name], {name: replaced})[name]).count()

@@ -34,8 +34,18 @@ TABLE_NAMES = (
 # fingerprint names the directory, not the file): a bare
 # `spark.read.parquet` runs a schema-inference job on every call (7 of the
 # curation mix's 40 jobs per round), and a file rewritten in place gets a
-# new fingerprint and so is inferred again.
+# new fingerprint and so is inferred again.  A derived snapshot needs no
+# version: its path names one immutable build (cache.py).
 _SCHEMAS: dict[tuple, StructType] = {}
+
+
+def read_inferred_once(spark: SparkSession, path: str, version: tuple = ()) -> DataFrame:
+    """The parquet at `path`, read with the schema that the first read of
+    `path` at `version` in this process inferred, so a warm read runs no
+    schema-inference job."""
+    if (path, version) not in _SCHEMAS:
+        _SCHEMAS[path, version] = spark.read.parquet(path).schema
+    return spark.read.schema(_SCHEMAS[path, version]).parquet(path)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -60,10 +70,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     except Exception:
         pass
     path = os.path.join(sf_dir, f"{name}.parquet")
-    key = (name, fingerprint_key(sf_dir, name))
-    if key not in _SCHEMAS:
-        _SCHEMAS[key] = spark.read.parquet(path).schema
-    df = spark.read.schema(_SCHEMAS[key]).parquet(path)
+    df = read_inferred_once(spark, path, fingerprint_key(sf_dir, name))
     for field in df.schema.fields:
         if field.name != "ts":
             continue

@@ -4,6 +4,7 @@ near-duplicates and skip unrelated docs."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from realparse_spark.operators.dedup import (
@@ -453,6 +454,33 @@ def test_minhash_e2e_job_budget(spark, sf_dir):
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     n = len(sc.statusTracker().getJobIdsForGroup("budget-minhash"))
     assert rows and n <= 10, n
+
+
+@pytest.mark.parametrize("query, budget", [
+    ("q_dedup_ngram", 5),
+    ("q_dedup_containment", 5),
+    ("q_dedup_clusters", 1),
+    ("q_dedup_canonical", 4),
+    ("q_dedup_prefix_jaccard", 5),
+])
+def test_snapshot_queries_warm_job_budget(spark, sf_dir, query, budget):
+    """A warm call of each query over the postings, clusters or prefix-index
+    snapshot reads it with the schema its builder wrote (`read_inferred_once`
+    infers it once per snapshot), so it runs one job fewer than a bare
+    `spark.read.parquet`, which infers the schema on every call."""
+    from realparse_spark.operators import dedup
+
+    run = getattr(dedup, query)
+    run(spark, sf_dir).collect()  # builds the snapshot
+    sc = spark.sparkContext
+    sc.setJobGroup(f"budget-{query}", query)
+    try:
+        rows = run(spark, sf_dir).collect()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    n = len(sc.statusTracker().getJobIdsForGroup(f"budget-{query}"))
+    assert rows and n <= budget, n
 
 
 def test_band_join_same_pairs_for_hashed_and_raw_band_keys(spark):

@@ -55,6 +55,21 @@ def warehouse_files(wh: str) -> set[str]:
     }
 
 
+def listed_files(wh: str) -> dict[str, list[str]]:
+    """The tables `_state` lists files for, each with its (sorted) files."""
+    return {t: files for t, files in load_state(wh)["files"].items() if files}
+
+
+def parquet_on_disk(wh: str) -> dict[str, list[str]]:
+    """Each table's parquet files on disk, relative to the table."""
+    found: dict[str, list[str]] = {}
+    for f in sorted(warehouse_files(wh)):
+        table, _, rel = f.partition(os.sep)
+        if f.endswith(".parquet"):
+            found.setdefault(table, []).append(rel)
+    return found
+
+
 @pytest.fixture()
 def log_dir(tmp_path):
     d = tmp_path / "logs"
@@ -317,9 +332,13 @@ def test_mixed_family_warehouse(spark, log_dir, tmp_path):
     }
     assert family_max[1] < family_max[0]
     max_id = access.agg(F.max("access_id")).collect()[0][0]
-    assert load_state(wh) == {
-        "max_key": max_id, "watermark": {str(k): v for k, v in family_max.items()},
-    }
+    state = load_state(wh)
+    assert (state["max_key"], state["watermark"]) == (
+        max_id, {str(k): v for k, v in family_max.items()},
+    )
+    # `_state` lists exactly the data files both families wrote
+    assert listed_files(wh) == parquet_on_disk(wh)
+    assert set(listed_files(wh)) == {*ACCESS_TABLES, "components"}
     # progress lives in `_state` alone: no sidecar inside the access table
     # (`_SUCCESS` is the parquet writer's job marker, not a record)
     assert {f for f in os.listdir(os.path.join(wh, "access")) if f.startswith("_")} <= {"_SUCCESS"}
@@ -371,8 +390,8 @@ def test_cycle_job_budget(spark, tmp_path):
 @pytest.mark.parametrize("bad_lines", [0, 2])
 def test_cycle_that_keys_no_line(spark, tmp_path, bad_lines):
     """A cycle whose keyed pass sees no row (an empty log directory, or a
-    file of malformed lines only) returns zero counts, writes no `_state`
-    and appends nothing but its quarantined lines."""
+    file of malformed lines only) returns zero counts, moves neither the key
+    nor a watermark and appends nothing but its quarantined lines."""
     d = tmp_path / "logs"
     d.mkdir()
     wh = str(tmp_path / "wh")
@@ -382,7 +401,9 @@ def test_cycle_that_keys_no_line(spark, tmp_path, bad_lines):
     assert load_style5(spark, str(d), wh) == no_rows(ACCESS_TABLES, bad_lines)
     assert load_weblog(spark, str(d), wh) == no_rows(WEB_TABLES, bad_lines)
 
-    assert not os.path.exists(os.path.join(wh, "_state"))
+    state = load_state(wh)
+    assert (state["max_key"], state["watermark"]) == (-1, {})
+    assert listed_files(wh) == parquet_on_disk(wh)
     # `_`-prefixed entries are not tables: the `_lease` lock file stays by design
     tables = {f.split(os.sep)[0] for f in warehouse_files(wh) if not f.startswith("_")}
     assert tables == ({"components", "quarantine"} if bad_lines else {"components"})
@@ -402,15 +423,25 @@ def test_warehouse_without_state_is_refused(spark, log_dir, tmp_path):
         load_style5(spark, log_dir, wh)
     assert {f: os.path.getmtime(os.path.join(wh, f)) for f in warehouse_files(wh)} == before
 
+    # a compaction publishes file lists, not load progress: still refused
+    from realparse_spark.operators.compact import compact_table
+
+    compact_table(spark, os.path.join(wh, "access"), partition_by=["server_type", "access_date"])
+    with pytest.raises(ValueError, match="_state"):
+        load_style5(spark, log_dir, wh)
+
 
 def test_read_warehouse_table_errors_propagate(spark, tmp_path):
-    """A table with no data file reads as None ("run a load first"); a table
-    whose data cannot be read raises instead of passing for a missing one."""
+    """A table that lists no data file reads as None ("run a load first"),
+    and a file that `_state` does not list is never read; a listed file
+    that cannot be read raises instead of passing for a missing table."""
     wh = tmp_path / "wh"
     assert read_warehouse_table(spark, str(wh), "access") is None
     (wh / "access").mkdir(parents=True)
-    (wh / "access" / "_SUCCESS").write_text("")
-    assert read_warehouse_table(spark, str(wh), "access") is None
     (wh / "access" / "part-00000.parquet").write_bytes(b"not a parquet file")
+    assert read_warehouse_table(spark, str(wh), "access") is None
+    (wh / "_state").write_text(json.dumps({"files": {"access": []}}))
+    assert read_warehouse_table(spark, str(wh), "access") is None
+    (wh / "_state").write_text(json.dumps({"files": {"access": ["part-00000.parquet"]}}))
     with pytest.raises(Exception, match="(?i)parquet|footer"):
         read_warehouse_table(spark, str(wh), "access")

@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from realparse_spark.operators.compact import compact_table, table_file_stats
 from realparse_spark.operators.load import load_style5, read_warehouse_table
-from tests.test_load_pipeline import style5_line
+from tests.test_load_pipeline import listed_files, load_state, parquet_on_disk, style5_line
 
 
 def test_malformed_lines_quarantined(spark, tmp_path):
@@ -89,8 +89,9 @@ def test_compact_partitioned_splits_hot_partition(spark, tmp_path):
 
 def test_compact_access_keeps_key_reservation(spark, tmp_path):
     """Compacting the loader's access table (partition layout kept) leaves
-    the warehouse's `_state` untouched, so the next load's surrogate keys
-    stay disjoint from the compacted rows."""
+    the warehouse's key and watermarks untouched, so the next load's
+    surrogate keys stay disjoint from the compacted rows; `_state` lists
+    the compacted files in place of the old ones, and only those."""
     d = tmp_path / "clogs"
     d.mkdir()
     (d / "rmaccess.log.1").write_text(
@@ -101,12 +102,13 @@ def test_compact_access_keeps_key_reservation(spark, tmp_path):
     )
     wh = str(tmp_path / "cwh")
     load_style5(spark, str(d), wh)
-    access_path, state_path = os.path.join(wh, "access"), os.path.join(wh, "_state")
-    with open(state_path) as fh:
-        state = fh.read()
-    compact_table(spark, access_path, partition_by=["server_type", "access_date"])
-    with open(state_path) as fh:
-        assert fh.read() == state
+    state = load_state(wh)
+    compact_table(spark, os.path.join(wh, "access"), partition_by=["server_type", "access_date"])
+    after = load_state(wh)
+    assert {k: after[k] for k in ("max_key", "watermark")} == {k: state[k] for k in ("max_key", "watermark")}
+    assert set(after["files"]["access"]).isdisjoint(state["files"]["access"])
+    assert {**after["files"], "access": []} == {**state["files"], "access": []}
+    assert listed_files(wh) == parquet_on_disk(wh)
 
     (d / "rmaccess.log.2").write_text(style5_line("10.0.0.9", "13/Oct/2002:09:00:00", "/m/n.rm") + "\n")
     assert load_style5(spark, str(d), wh)["access"] == 1
